@@ -7,6 +7,6 @@ catalog can replace :class:`ais_etl_spark.lake.table.LakeTable` without
 touching callers — merge/read/alter signatures are catalog-agnostic.
 """
 
-from ais_etl_spark.lake.table import LakeTable  # noqa: F401
+from ais_etl_spark.lake.table import CommitConflict, LakeTable  # noqa: F401
 from ais_etl_spark.lake.matview import MaterializedAggregate  # noqa: F401
 from ais_etl_spark.lake.sync import sync_incremental, read_cursor  # noqa: F401

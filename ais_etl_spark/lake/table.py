@@ -17,9 +17,10 @@ Iceberg semantics, from scratch, sized for the 10^10-event design point:
   disjoint and a hot key's write amplification is one FILE, not one
   bucket. At 100 TB with 1024 buckets a batch touching 1% of keys
   rewrites ~1% of the table's files, not the table.
-- **Atomic commit = POSIX rename** of the manifest JSON into
-  ``_commits/`` (write-tmp-then-rename; rename is atomic on one
-  filesystem). The reference's analog is the versioned result cache
+- **Atomic commit = POSIX hard link** of the manifest JSON into
+  ``_commits/`` (write-tmp-then-link; the link is atomic on one
+  filesystem and, unlike rename, fails if the snapshot name exists).
+  The reference's analog is the versioned result cache
   with atomic refresh (/root/reference/transformers/tar2tf/src/
   cached.go:122-195); Iceberg's is the catalog snapshot swap.
 - **Exactly-once** = the commit carries ``batch_id``; a merge whose
@@ -47,7 +48,9 @@ Iceberg semantics, from scratch, sized for the 10^10-event design point:
 
 Concurrency model: single writer (one streaming query / one driver),
 many readers — Iceberg's default practical deployment. Readers always
-see a complete snapshot because the manifest is the commit point.
+see a complete snapshot because the manifest is the commit point. A
+second writer that races for the same snapshot id loses with
+:class:`CommitConflict`; it never overwrites the winner's manifest.
 """
 
 from __future__ import annotations
@@ -60,6 +63,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ais_etl_spark.operators.lww import lww_latest
+from ais_etl_spark.session import arrow_schema, local_frame
 
 _COMMITS = "_commits"
 _LATEST = "LATEST"  # head-pointer hint file inside _commits/
@@ -86,6 +90,11 @@ _MANIFEST_DELTA_CAP = 32
 # 10^6-batch stream. Evicted commits re-read from disk (≤ chain-cap
 # small JSONs) — correctness is unaffected.
 _COMMIT_CACHE_CAP = 128
+
+
+class CommitConflict(RuntimeError):
+    """Another writer already published the snapshot id this commit
+    was built for; nothing of this commit became visible."""
 
 
 @dataclass
@@ -305,10 +314,11 @@ class LakeTable:
         return {**base, "manifest_chain": 0, "files": files}
 
     def _write_commit(self, commit: dict) -> None:
-        """Atomic publish: tmp file + rename. os.rename fails if we ever
-        raced another writer to the same snapshot id only on systems
-        where the target exists check matters; single-writer is the
-        documented contract (see module docstring)."""
+        """Atomic publish: write a tmp file, then hard-link it to the
+        snapshot's name. ``os.link`` fails with EEXIST when the name is
+        taken (``os.rename`` would silently replace it on POSIX), so a
+        second writer racing for the same snapshot id gets
+        :class:`CommitConflict` and the first commit survives intact."""
         if self._stage_to is not None:
             # write-audit-publish: park the full commit dict in memory;
             # stage_merge persists it to the staged file (with the
@@ -316,11 +326,6 @@ class LakeTable:
             self._staged_capture = {"commit": commit, "offsets": []}
             return
         final = self._commit_path(commit["snapshot_id"])
-        if os.path.exists(final):
-            raise RuntimeError(
-                f"snapshot {commit['snapshot_id']} already committed "
-                f"(concurrent writer?)"
-            )
         import time
 
         commit.setdefault("committed_at", time.time())
@@ -330,7 +335,15 @@ class LakeTable:
             json.dump(enc, f)
             f.flush()
             os.fsync(f.fileno())
-        os.rename(tmp, final)
+        try:
+            os.link(tmp, final)
+        except FileExistsError:
+            raise CommitConflict(
+                f"snapshot {commit['snapshot_id']} already committed "
+                f"(concurrent writer?)"
+            ) from None
+        finally:
+            os.remove(tmp)
         # head-pointer hint (no fsync: staleness is healed by the
         # reader's forward probe, torn content by the int() fallback)
         lt = os.path.join(self.path, _COMMITS, f".tmp-latest-{uuid.uuid4().hex}")
@@ -617,7 +630,7 @@ class LakeTable:
             )
             if with_fileseq:
                 ddl += f", {_FILESEQ} bigint"
-            return self.spark.createDataFrame([], ddl)
+            return local_frame(self.spark, [], ddl)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -779,7 +792,8 @@ class LakeTable:
                                           "stale_noops", "rows_after")],
                 )
             )
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             "snapshot_id bigint, parent bigint, operation string, "
             "batch_id string, schema_version int, n_files int, "
@@ -849,65 +863,54 @@ class LakeTable:
         """Serve the point read without a Spark job: pyarrow-read the
         (manifest-pruned, ≤LOOKUP_DRIVER_MAX_FILES) covering files on
         the driver with the key predicate pushed to row-group stats,
-        apply the same schema-version column-id mapping as
-        _entries_df, and return the rows as a literal DataFrame.
-        Same output as the scan path (hash-checked by the
+        apply the same schema-version column-id mapping and type
+        widening as _entries_df, and return the rows as a
+        :func:`local_frame` — its ``collect()`` runs on the driver, no
+        job. Same output as the scan path (hash-checked by the
         cdc_point_lookup gate); only the physical strategy differs.
 
         ``resolve`` (merge-on-read): tombstones are read rather than
         filtered, and the single winner is picked driver-side by max
         (order_col, _seq, file seq) — the same rule as
         ``_resolve_lww`` — then dropped if it is a tombstone."""
-        import pandas as pd
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
         cur_cols = self.schema_cols(c)
         key_id = next(x["id"] for x in cur_cols if x["name"] == c["key"])
-        order_name = c["order_col"]
-        frames: list[tuple[pd.DataFrame, int]] = []
+        out_ddl = self.spark_schema_ddl()
+        schema = arrow_schema(
+            out_ddl + f", {_SEQ} bigint, {_DELETED} boolean, {_FILESEQ} bigint"
+        )
+        tables = []
         for f in hits:
             old_cols = {x["id"]: x for x in c["schemas"][f["schema_version"]]}
             if key_id not in old_cols:
                 continue  # file predates the key column: cannot match
-            phys_key = old_cols[key_id]["name"]
-            flt = [(phys_key, "==", key_value)]
+            flt = [(old_cols[key_id]["name"], "==", key_value)]
             if not resolve:
                 flt.append((_DELETED, "==", False))
             t = pq.read_table(os.path.join(self.path, f["path"]), filters=flt)
             if t.num_rows == 0:
                 continue
-            pdf = t.to_pandas()
-            out = {}
-            for col in cur_cols:
-                if col["id"] in old_cols:
-                    out[col["name"]] = pdf[old_cols[col["id"]]["name"]]
-                else:
-                    out[col["name"]] = pd.Series(
-                        [None] * len(pdf), dtype="object"
-                    )
-            if resolve:
-                out[_SEQ] = pdf[_SEQ]
-                out[_DELETED] = pdf[_DELETED]
-            frames.append((pd.DataFrame(out), int(f.get("seq", 0))))
-        ddl = self.spark_schema_ddl()
-        if not frames:
-            return self.spark.createDataFrame([], ddl)
-        if resolve:
-            rows = []
-            for pdf, fileseq in frames:
-                for _, r in pdf.iterrows():
-                    rows.append((r[order_name], int(r[_SEQ]), fileseq, r))
-            rows.sort(key=lambda x: (x[0], x[1], x[2]))
-            winner = rows[-1][3]
-            if bool(winner[_DELETED]):
-                return self.spark.createDataFrame([], ddl)
-            one = winner.drop(labels=[_SEQ, _DELETED]).to_frame().T
-            return self.spark.createDataFrame(
-                one.reset_index(drop=True), schema=ddl
-            )
-        return self.spark.createDataFrame(
-            pd.concat([p for p, _ in frames], ignore_index=True), schema=ddl
-        )
+            cols = [
+                t.column(old_cols[col["id"]]["name"]) if col["id"] in old_cols
+                else pa.nulls(t.num_rows)
+                for col in cur_cols
+            ] + [
+                t.column(_SEQ),
+                t.column(_DELETED),
+                pa.array([int(f.get("seq", 0))] * t.num_rows, pa.int64()),
+            ]
+            # the cast widens old narrower types and types the nulls
+            tables.append(pa.Table.from_arrays(cols, schema.names).cast(schema))
+        out = pa.concat_tables(tables) if tables else schema.empty_table()
+        if resolve and out.num_rows:
+            winner = out.sort_by(
+                [(n, "descending") for n in (c["order_col"], _SEQ, _FILESEQ)]
+            ).slice(0, 1)
+            out = winner.slice(0, 0) if winner[_DELETED][0].as_py() else winner
+        return local_frame(self.spark, out, out_ddl)
 
     # ------------------------------------------------------------------
     # snapshot tags (named refs — Iceberg's tags; the dataset-release
@@ -1138,10 +1141,12 @@ class LakeTable:
         ``post_dedup_transform`` (df -> df, row-wise deterministic) is
         applied AFTER the batch-local LWW — the expensive extraction
         UDFs (html→text/lang) run once per *winning* key instead of
-        once per event, and on post-shuffle partitions (cores-wide)
-        instead of input splits. For an update-heavy feed this cuts
-        Python-UDF work by the dup factor and fixes the few-input-
-        splits parallelism cliff.
+        once per event, which for an update-heavy feed cuts Python-UDF
+        work by the dup factor. They run on the LWW shuffle's output
+        partitions, whose count AQE picks: a small batch's sub-1 MB
+        shuffle coalesces into ONE partition, so the UDF runs as one
+        task; only a shuffle larger than the advisory partition size
+        fans out toward ``spark.sql.shuffle.partitions``.
 
         ``bounded_lateness_us``: OBSERVABLE bounded-lateness policy
         (the streaming analog of Spark's watermark drop, but with the
@@ -1403,7 +1408,8 @@ class LakeTable:
             x["type"] for x in self.schema_cols(c) if x["name"] == c["key"]
         )
         entries = [f for f in c["files"] if f["path"] in candidates]
-        fdf = self.spark.createDataFrame(
+        fdf = local_frame(
+            self.spark,
             [
                 (f["path"], f["bucket"], f.get("min_key"), f.get("max_key"))
                 for f in entries
@@ -1450,7 +1456,7 @@ class LakeTable:
         if not os.path.isdir(p) or not any(
             s.startswith("batch=") for s in os.listdir(p)
         ):
-            return self.spark.createDataFrame([], "batch string")
+            return local_frame(self.spark, [], "batch string")
         # batches quarantined before and after a schema evolution of
         # the FEED may differ in columns — union them, null-padded
         return (
@@ -1471,8 +1477,8 @@ class LakeTable:
             col["name"] for col in cur_cols if col["name"] not in (key, order_col)
         ]
 
-        # 3b. payload transform on winners only (one UDF pass,
-        #     post-shuffle partitioning = cores-wide)
+        # 3b. payload transform on winners only (one UDF pass over
+        #     the LWW shuffle's AQE-coalesced output partitions)
         ev = post_dedup_transform(winners) if post_dedup_transform else winners
         ptypes = {x["name"]: x["type"] for x in cur_cols}
         for p in payload_names:
@@ -2488,7 +2494,8 @@ class LakeTable:
     def lineage(self) -> DataFrame:
         p = os.path.join(self.path, _LINEAGE)
         if not os.path.isdir(p):
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [],
                 "batch_id string, snapshot_id bigint, source_part int, "
                 "min_offset bigint, max_offset bigint, events bigint, "

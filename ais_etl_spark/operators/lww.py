@@ -11,19 +11,18 @@ a stale D is a no-op because a newer row outranks it.
 Physical strategy (the 100 TB story):
 
 - **Default = struct-max aggregation.** ``groupBy(key).agg(max(struct(
-  ordering..., payload...)))`` compiles to a hash aggregate with
-  *map-side partial aggregation*: each task collapses its local events
-  per key before the shuffle, so a hot url that receives 10^7 events in
-  a partition ships ONE row to the reducer. Hot-key skew is absorbed by
-  the combiner — no salting needed for this operator, no sort, and the
-  shuffle carries one row per (task, distinct key).
+  ordering..., payload...)))`` compiles to a ``SortAggregate`` (struct
+  agg buffers are not hash-aggregable) with *map-side partial
+  aggregation*: each task sorts its events by key and collapses them to
+  one ``partial_max`` row per key before the shuffle, and the final
+  ``max`` sorts again after the exchange. A hot url that receives 10^7
+  events in a partition ships ONE row to the reducer, so hot-key skew
+  is absorbed by the combiner — no salting needed for this operator —
+  and the shuffle carries one row per (task, distinct key).
 - ``lww_window`` (row_number over a per-key sort) is kept for parity
   testing: it is the textbook formulation but does a full sort-shuffle
   with no partial aggregation — the hot key lands on one reducer. Used
   only as a semantic cross-check at test scale.
-- ``lww_salted`` demonstrates the explicit two-phase salt/unsalt
-  pattern for engines whose aggregate lacks a combiner; with Spark's
-  hash-agg it is redundant but benchmarked to prove it.
 """
 
 from __future__ import annotations
@@ -74,26 +73,3 @@ def lww_window(
         .drop("_rn")
     )
 
-
-def lww_salted(
-    df: DataFrame,
-    key: str = "url",
-    order_cols: tuple[str, ...] = ORDER_COLS,
-    n_salt: int = 16,
-) -> DataFrame:
-    """Explicit two-phase skew pattern: local LWW per (key, salt), then
-    global LWW per key. salt = pmod(xxhash64(event_id), n_salt) spreads
-    a hot key over n_salt reducers in phase 1."""
-    payload_cols = [c for c in df.columns if c != key and c not in order_cols]
-    salted = df.withColumn("_salt", F.pmod(F.xxhash64("event_id"), F.lit(n_salt)))
-    # phase 1: combine within (key, salt)
-    w1 = F.max(
-        F.struct(*[F.col(c) for c in order_cols], *[F.col(c) for c in payload_cols])
-    ).alias("w")
-    p1 = salted.groupBy(key, "_salt").agg(w1).select(
-        key,
-        *[F.col(f"w.{c}").alias(c) for c in order_cols],
-        *[F.col(f"w.{c}").alias(c) for c in payload_cols],
-    )
-    # phase 2: combine across salts (tiny: n_salt rows per hot key)
-    return lww_latest(p1, key=key, order_cols=order_cols, payload_cols=payload_cols)

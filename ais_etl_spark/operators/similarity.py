@@ -34,6 +34,8 @@ import hashlib
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ais_etl_spark.session import local_frame
+
 
 def _fold_sum(arr) -> "F.Column":
     """Sequential (array-order) double sum — deterministic fp."""
@@ -291,7 +293,7 @@ def cosine_topk(
         last_qid = q_rows[-1]["qid"]
     if local is None:
         schema = f"query_id {id_sql_type}, neighbor_id {id_sql_type}, cosine double"
-        local = corpus.sparkSession.createDataFrame([], schema)
+        local = local_frame(corpus.sparkSession, [], schema)
 
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("neighbor_id")
@@ -391,8 +393,8 @@ def seed_centroids(
         .collect()
     )
     data = [(i, [float(x) for x in r["_e"]]) for i, r in enumerate(rows)]
-    return corpus.sparkSession.createDataFrame(
-        data, f"cell int, {vec_col} array<double>"
+    return local_frame(
+        corpus.sparkSession, data, f"cell int, {vec_col} array<double>"
     )
 
 
@@ -460,9 +462,7 @@ def kmeans_refine(
     v = corpus.select(F.col(vec_col).cast("array<double>").alias("_e"))
 
     def _lit_cents(spark):
-        return spark.createDataFrame(
-            sorted(cur.items()), "cell int, _e array<double>"
-        )
+        return local_frame(spark, sorted(cur.items()), "cell int, _e array<double>")
 
     for _ in range(iters):
         cells = np.array(sorted(cur), dtype=np.int64)
@@ -691,7 +691,7 @@ def ivf_topk(
         last_qid = q_rows[-1]["qid"]
     if local is None:
         schema = f"query_id {id_sql_type}, neighbor_id {id_sql_type}, cosine double"
-        local = corpus.sparkSession.createDataFrame([], schema)
+        local = local_frame(corpus.sparkSession, [], schema)
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("neighbor_id")
     )

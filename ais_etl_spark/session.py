@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -74,3 +74,38 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def arrow_schema(ddl: str):
+    """The ``pyarrow.Schema`` Spark's own Arrow conversion maps a DDL
+    string to (timestamps as UTC micros, every field nullable)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    return to_arrow_schema(DataType.fromDDL(ddl))
+
+
+def local_frame(spark: SparkSession, data, ddl: str) -> DataFrame:
+    """DataFrame over driver-held data — a sequence of row tuples in
+    DDL column order, or a ``pyarrow.Table`` holding (at least) the DDL
+    columns by name — typed exactly as ``ddl``.
+
+    The frame is a ``LocalRelation``: its rows live in the plan, so
+    ``collect()`` runs on the driver with no Spark job, and joins read
+    it without a scan. ``createDataFrame`` over a Python list instead
+    parallelizes a Python RDD over ``defaultParallelism`` partitions,
+    and every action on it pays one Python-worker task per partition
+    (~0.2 s each) even when the list is empty."""
+    import pyarrow as pa
+
+    schema = arrow_schema(ddl)
+    if isinstance(data, pa.Table):
+        table = data.select(schema.names).cast(schema)
+    else:
+        rows = list(data)
+        table = pa.Table.from_arrays(
+            [pa.array([r[i] for r in rows], type=f.type)
+             for i, f in enumerate(schema)],
+            schema=schema,
+        )
+    return spark.createDataFrame(table, ddl)

@@ -1,0 +1,76 @@
+"""Driver-side reads launch no Spark job.
+
+Point lookups below ``LOOKUP_DRIVER_MAX_FILES`` and the empty
+``quarantine()``/``lineage()`` frames are built from driver-held data
+as Arrow ``LocalRelation``s (:func:`ais_etl_spark.session.local_frame`),
+so collecting them runs on the driver. A frame built by
+``createDataFrame`` over a Python list would instead run one
+Python-worker task per default partition on every action."""
+
+import datetime as dt
+import uuid
+
+import pyarrow as pa
+import pytest
+
+from ais_etl_spark.lake import LakeTable
+from ais_etl_spark.session import local_frame
+
+SCHEMA = [("url", "string"), ("warc_ts", "timestamp"), ("text", "string")]
+EV_DDL = "event_id bigint, op string, url string, warc_ts timestamp, text string"
+
+
+def T(s):
+    return dt.datetime(2026, 1, 1) + dt.timedelta(seconds=s)
+
+
+B1 = [(1, "I", "u1", T(1), "a"), (2, "I", "u2", T(1), "b"), (3, "I", "u3", T(1), "c")]
+B2 = [(4, "U", "u1", T(2), "a2"), (5, "D", "u3", T(2), None)]
+
+
+def jobs_of(spark, fn):
+    """(result of fn(), ids of the Spark jobs it launched)."""
+    sc = spark.sparkContext
+    group = f"driver-read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_lookup_launches_no_job(spark, tmpdir_path, mode):
+    t = LakeTable.create(spark, tmpdir_path, SCHEMA, n_buckets=4)
+    for i, b in enumerate((B1, B2)):
+        t.merge(spark.createDataFrame(b, EV_DDL), f"b{i}", mode=mode)
+    kinds = {f.get("kind") for f in t.commit()["files"]}
+    assert ("delta" in kinds) == (mode == "mor")
+    expect = {"u1": [("u1", T(2), "a2")], "absent": [], "u3": []}
+    for key, rows in expect.items():
+        got, jobs = jobs_of(spark, lambda: t.lookup(key).collect())
+        assert [tuple(r) for r in got] == rows, key
+        assert jobs == [], (key, jobs)
+
+
+def test_empty_quarantine_and_lineage_launch_no_job(spark, tmpdir_path):
+    t = LakeTable.create(spark, tmpdir_path, SCHEMA, n_buckets=4)
+    for frame in (t.quarantine, t.lineage):
+        got, jobs = jobs_of(spark, lambda: frame().collect())
+        assert got == [] and jobs == [], frame.__name__
+
+
+def test_local_frame_types_match_ddl(spark):
+    ddl = "k string, ts timestamp, n bigint, v array<double>"
+    rows = [("a", T(1), 1, [0.5, 1.5]), (None, None, None, None)]
+    df = local_frame(spark, rows, ddl)
+    assert df.schema == spark.createDataFrame(rows, ddl).schema
+    got, jobs = jobs_of(spark, df.collect)
+    assert [tuple(r) for r in got] == rows and jobs == []
+    # an Arrow table is selected and cast to the DDL by column name
+    tbl = pa.table({"n": pa.array([7], pa.int32()), "k": ["x"], "extra": [0]})
+    df = local_frame(spark, tbl, "k string, n bigint")
+    assert df.dtypes == [("k", "string"), ("n", "bigint")]
+    assert [tuple(r) for r in df.collect()] == [("x", 7)]
+    assert local_frame(spark, [], ddl).schema == spark.createDataFrame([], ddl).schema

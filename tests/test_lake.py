@@ -7,11 +7,12 @@ follows the reference's pipeline-replay compare
 (/root/reference/transformers/tests/test_audio_split_consolidate.py:67-113)."""
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from ais_etl_spark.lake import LakeTable
+from ais_etl_spark.lake import CommitConflict, LakeTable
 
 SCHEMA = [("url", "string"), ("warc_ts", "timestamp"), ("text", "string")]
 EV_DDL = "event_id bigint, op string, url string, warc_ts timestamp, text string"
@@ -462,6 +463,39 @@ def test_commit_fence_rejects_racing_writer(spark, tmpdir_path):
     c["snapshot_id"] = 0  # already committed by create()
     with pytest.raises(RuntimeError, match="already committed"):
         t._write_commit(c)
+
+
+def test_second_writer_loses_with_commit_conflict(spark, tmpdir_path):
+    """Two writers on one path race for snapshot 1: the second reaches
+    publish after the first has committed. The second must raise
+    CommitConflict and the first manifest must survive byte for byte
+    (a rename-based publish silently replaced it)."""
+    LakeTable.create(spark, tmpdir_path, SCHEMA, n_buckets=4)
+    first, second = LakeTable(spark, tmpdir_path), LakeTable(spark, tmpdir_path)
+    won = {}
+    encode = second._encode_manifest
+
+    def first_commits_meanwhile(commit):
+        # runs inside second's publish, after its snapshot id is fixed
+        won["snap"] = first.alter_add_column("lang", "string")
+        with open(first._commit_path(1), "rb") as f:
+            won["bytes"] = f.read()
+        return encode(commit)
+
+    second._encode_manifest = first_commits_meanwhile
+    with pytest.raises(CommitConflict, match="already committed"):
+        second.merge(ev(spark, [(1, "I", "u1", T(1), "lost")]), "b1")
+    assert won["snap"] == 1
+    with open(first._commit_path(1), "rb") as f:
+        assert f.read() == won["bytes"]
+    fresh = LakeTable(spark, tmpdir_path)
+    assert fresh.current_snapshot_id() == 1
+    assert fresh.read().columns == ["url", "warc_ts", "text", "lang"]
+    assert fresh.read().count() == 0 and fresh.committed_batch_ids() == set()
+    assert not [
+        n for n in os.listdir(os.path.join(tmpdir_path, "_commits"))
+        if n.startswith(".tmp")
+    ]
 
 
 def test_widen_column_metadata_only(spark, tmpdir_path):

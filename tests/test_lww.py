@@ -1,9 +1,9 @@
-"""LWW dedup: struct-max agg ≡ window row_number ≡ salted two-phase."""
+"""LWW dedup: struct-max agg ≡ window row_number."""
 
 from pyspark.sql import functions as F
 
 from ais_etl_spark.feed import synth_cdc_feed
-from ais_etl_spark.operators.lww import lww_latest, lww_salted, lww_window
+from ais_etl_spark.operators.lww import lww_latest, lww_window
 
 
 def _norm(df):
@@ -11,13 +11,11 @@ def _norm(df):
     return df.select(*cols)
 
 
-def test_three_formulations_agree(spark):
+def test_struct_max_agrees_with_window(spark):
     feed = synth_cdc_feed(spark, n_events=3000, n_urls=300, seed=13).cache()
     a = _norm(lww_latest(feed))
     b = _norm(lww_window(feed))
-    c = _norm(lww_salted(feed, n_salt=8))
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    assert a.exceptAll(c).count() == 0 and c.exceptAll(a).count() == 0
     feed.unpersist()
 
 
