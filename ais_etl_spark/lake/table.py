@@ -57,6 +57,7 @@ from __future__ import annotations
 
 import json
 import os
+import time
 import uuid
 from dataclasses import dataclass
 
@@ -91,6 +92,23 @@ _MANIFEST_DELTA_CAP = 32
 # small JSONs) — correctness is unaffected.
 _COMMIT_CACHE_CAP = 128
 
+# what a child snapshot inherits from its parent unless its operation
+# changes it (LakeTable._next_commit): the schema state and table
+# layout, plus the event-time high-water mark and the applied DDL
+# fences — each with the value a manifest that never recorded it implies
+_CARRIED = ("schema_version", "schemas", "key", "order_col", "n_buckets",
+            "max_file_rows")
+_FENCES = {"hwm_us": None, "applied_fences": []}
+
+# one row per source partition per merge commit (see _append_lineage)
+_LINEAGE_DDL = (
+    "batch_id string, snapshot_id bigint, source_part int, "
+    "min_offset bigint, max_offset bigint, events bigint, "
+    "inserts bigint, updates bigint, deletes bigint, "
+    "stale_noops bigint, malformed bigint, upserts bigint, "
+    "tombstones bigint"
+)
+
 
 class CommitConflict(RuntimeError):
     """Another writer already published the snapshot id this commit
@@ -112,8 +130,9 @@ class LakeTable:
         self.spark = spark
         self.path = path
         self._commit_cache: dict[int, dict] = {}
-        # write-audit-publish: while set, the merge pipeline parks its
-        # commit + lineage in _staged_capture instead of publishing
+        # write-audit-publish: while set, _next_commit parks the commit
+        # and its lineage offsets in _staged_capture instead of
+        # publishing
         self._stage_to: str | None = None
         self._staged_capture: dict | None = None
 
@@ -274,12 +293,9 @@ class LakeTable:
         than ``_MANIFEST_DELTA_CAP`` (bounds the reconstruction walk);
         whole-table rewrites (rebucket/compact-all) fail the size test
         and naturally re-anchor the chain with a full manifest."""
-        # expired_parent marks a re-rooted checkpoint commit only; a
-        # child built by spreading its parent dict must not inherit it
         base = {
             k: v for k, v in commit.items()
-            if k not in ("files", "files_added", "files_removed",
-                         "manifest_chain", "expired_parent")
+            if k not in ("files", "manifest_chain")
         }
         files = commit["files"]
         pid = commit.get("parent")
@@ -313,37 +329,86 @@ class LakeTable:
                     return enc
         return {**base, "manifest_chain": 0, "files": files}
 
-    def _write_commit(self, commit: dict) -> None:
-        """Atomic publish: write a tmp file, then hard-link it to the
-        snapshot's name. ``os.link`` fails with EEXIST when the name is
-        taken (``os.rename`` would silently replace it on POSIX), so a
-        second writer racing for the same snapshot id gets
-        :class:`CommitConflict` and the first commit survives intact."""
-        if self._stage_to is not None:
-            # write-audit-publish: park the full commit dict in memory;
-            # stage_merge persists it to the staged file (with the
-            # lineage offsets captured below) once the pipeline is done
-            self._staged_capture = {"commit": commit, "offsets": []}
-            return
-        final = self._commit_path(commit["snapshot_id"])
-        import time
-
-        commit.setdefault("committed_at", time.time())
-        enc = self._encode_manifest(commit)
+    def _durable_write(self, obj, final: str, exclusive: bool = False) -> None:
+        """Write ``obj`` as JSON to a tmp file under ``_commits/``,
+        fsync it, then publish it at ``final`` in one atomic step:
+        ``os.replace``, or with ``exclusive`` an ``os.link`` that raises
+        ``FileExistsError`` when the name is taken (``os.rename`` would
+        silently replace it on POSIX). No tmp file outlives the call."""
         tmp = os.path.join(self.path, _COMMITS, f".tmp-{uuid.uuid4().hex}.json")
         with open(tmp, "w") as f:
-            json.dump(enc, f)
+            json.dump(obj, f)
             f.flush()
             os.fsync(f.fileno())
+        if not exclusive:
+            os.replace(tmp, final)
+            return
         try:
             os.link(tmp, final)
+        finally:
+            os.remove(tmp)
+
+    def _next_commit(
+        self, c: dict, operation: str, files: list[dict], *,
+        batch_id: str | None = None, lineage: dict | None = None,
+        offsets: list[dict] | None = None, **changes,
+    ) -> dict:
+        """Derive snapshot ``c + 1`` from its parent ``c`` and publish
+        it — the one place a child commit is built. The child carries
+        the parent's schema state, layout, batch fences (``batch_id``
+        appended when given), high-water mark and applied DDL fences;
+        ``changes`` replaces any of them. While :meth:`stage_merge` has
+        a write-audit-publish stage open, the commit and its lineage
+        offsets are parked for it instead of published. Returns the
+        commit."""
+        commit = {
+            "snapshot_id": c["snapshot_id"] + 1,
+            "parent": c["snapshot_id"],
+            "batch_id": batch_id,
+            "operation": operation,
+            **{k: c[k] for k in _CARRIED if k in c},
+            "files": files,
+            "batches": list(c.get("batches", []))
+            + ([] if batch_id is None else [batch_id]),
+            "lineage": lineage or {},
+            **changes,
+        }
+        for k, empty in _FENCES.items():
+            # create records neither field and a schema change keeps
+            # its parent's key set; every other child records both
+            if k in c or "schemas" not in changes:
+                commit.setdefault(k, c.get(k, empty))
+        if self._stage_to is not None:
+            # lineage rows too wait for publish: a discarded staged
+            # batch never ran, as far as the lineage table is concerned
+            self._staged_capture = {"commit": commit, "offsets": offsets or []}
+        else:
+            self._publish(commit, offsets)
+        return commit
+
+    def _publish(self, commit: dict, offsets: list[dict] | None = None) -> None:
+        """Make ``commit`` durable: the manifest, then — for a merge —
+        its lineage rows."""
+        self._write_commit(commit)
+        if commit.get("batch_id") is not None:
+            self._append_lineage(commit["lineage"], offsets)
+
+    def _write_commit(self, commit: dict) -> None:
+        """Atomic publish: write a tmp file, then hard-link it to the
+        snapshot's name. The link fails when the name is taken, so a
+        second writer racing for the same snapshot id gets
+        :class:`CommitConflict` and the first commit survives intact."""
+        commit["committed_at"] = time.time()
+        enc = self._encode_manifest(commit)
+        try:
+            self._durable_write(
+                enc, self._commit_path(commit["snapshot_id"]), exclusive=True
+            )
         except FileExistsError:
             raise CommitConflict(
                 f"snapshot {commit['snapshot_id']} already committed "
                 f"(concurrent writer?)"
             ) from None
-        finally:
-            os.remove(tmp)
         # head-pointer hint (no fsync: staleness is healed by the
         # reader's forward probe, torn content by the int() fallback)
         lt = os.path.join(self.path, _COMMITS, f".tmp-latest-{uuid.uuid4().hex}")
@@ -353,9 +418,6 @@ class LakeTable:
         # cache the FULL form; carry the chain length so the next
         # commit's encoder sees it without a disk round-trip
         commit["manifest_chain"] = enc["manifest_chain"]
-        commit.pop("files_added", None)
-        commit.pop("files_removed", None)
-        commit.pop("expired_parent", None)
         self._cache_put(commit["snapshot_id"], commit)
 
     def committed_batch_ids(self) -> set[str]:
@@ -381,7 +443,7 @@ class LakeTable:
         ``fence_id`` (the DDL event's fence_event_id) is recorded in the
         commit's ``applied_fences`` set so crash-replay of the same DDL
         stream is exactly-once by id, independent of schema shape."""
-        c = dict(self.commit())
+        c = self.commit()
         cols = [dict(x) for x in self.schema_cols(c)]
         if any(x["name"] == name for x in cols):
             raise ValueError(f"column {name!r} exists")
@@ -398,7 +460,7 @@ class LakeTable:
         self, old: str, new: str, fence_id: int | None = None
     ) -> int:
         """Metadata-only RENAME COLUMN (same column id, new name)."""
-        c = dict(self.commit())
+        c = self.commit()
         cols = [dict(x) for x in self.schema_cols(c)]
         if any(x["name"] == new for x in cols):
             raise ValueError(f"column {new!r} exists")
@@ -430,7 +492,7 @@ class LakeTable:
         the schema-version mapping; non-widening changes are rejected
         (they would need a rewrite). decimal(p,s)→decimal(p',s) with
         p' ≥ p is also accepted (same scale, more precision)."""
-        c = dict(self.commit())
+        c = self.commit()
         cols = [dict(x) for x in self.schema_cols(c)]
         hit = [x for x in cols if x["name"] == name]
         if not hit:
@@ -458,7 +520,7 @@ class LakeTable:
         column ids, so time travel to pre-drop snapshots still sees it
         and a later re-add gets a FRESH id (never resurrects old
         values)."""
-        c = dict(self.commit())
+        c = self.commit()
         cols = [dict(x) for x in self.schema_cols(c)]
         if name in (c["key"], c["order_col"]):
             raise ValueError(f"cannot drop key/order column {name!r}")
@@ -471,24 +533,20 @@ class LakeTable:
         self, parent: dict, cols: list[dict], op: str,
         fence_id: int | None = None,
     ) -> int:
-        commit = dict(parent)
-        commit["parent"] = parent["snapshot_id"]
-        commit["snapshot_id"] = parent["snapshot_id"] + 1
-        commit["operation"] = op
-        commit["schemas"] = list(parent["schemas"]) + [cols]
-        commit["schema_version"] = len(commit["schemas"]) - 1
-        commit["batch_id"] = None
-        commit["lineage"] = {}
+        schemas = [*parent["schemas"], cols]
+        fences = {}
         if fence_id is not None:
             # durable DDL fence set (the binlog-GTID analog): replay
             # idempotency is decided by fence id, never by inferring
             # "already applied" from the current schema shape — which
             # is ambiguous once a rename follows an add/widen chain
-            commit["applied_fences"] = sorted(
+            fences["applied_fences"] = sorted(
                 set(parent.get("applied_fences", [])) | {int(fence_id)}
             )
-        self._write_commit(commit)
-        return commit["snapshot_id"]
+        return self._next_commit(
+            parent, op, parent["files"],
+            schemas=schemas, schema_version=len(schemas) - 1, **fences,
+        )["snapshot_id"]
 
     def applied_fences(self) -> set[int]:
         """DDL fence_event_ids already applied to this table."""
@@ -741,28 +799,18 @@ class LakeTable:
         back WITH the data they wrote, so a corrected re-merge keeps
         replay equality instead of being swallowed as a duplicate."""
         target = self.commit(snapshot_id)
-        cur = self.commit()
-        commit = {
-            **{k: target[k] for k in ("schema_version", "schemas", "key",
-                                      "order_col", "n_buckets")},
-            "max_file_rows": target.get("max_file_rows", 1 << 20),
-            "snapshot_id": cur["snapshot_id"] + 1,
-            "parent": cur["snapshot_id"],
-            "batch_id": None,
-            "operation": f"rollback:{snapshot_id}",
-            "files": target["files"],
-            "batches": list(target.get("batches", [])),
-            "lineage": {"rolled_back_to": snapshot_id},
-            # the event-time high-water mark rolls back WITH the data,
-            # so re-merged corrected batches face the same lateness
-            # cutoff they originally did
-            "hwm_us": target.get("hwm_us"),
-            # DDL fences roll back with the schema they gated, so a
-            # corrected DDL replay re-applies coherently
-            "applied_fences": target.get("applied_fences", []),
-        }
-        self._write_commit(commit)
-        return commit["snapshot_id"]
+        # everything a child inherits comes from the target instead:
+        # the event-time high-water mark rolls back WITH the data, so
+        # re-merged corrected batches face the same lateness cutoff
+        # they originally did, and DDL fences roll back with the schema
+        # they gated, so a corrected DDL replay re-applies coherently
+        return self._next_commit(
+            self.commit(), f"rollback:{snapshot_id}", target["files"],
+            lineage={"rolled_back_to": snapshot_id},
+            batches=list(target.get("batches", [])),
+            **{k: target[k] for k in _CARRIED if k in target},
+            **{k: target.get(k, empty) for k, empty in _FENCES.items()},
+        )["snapshot_id"]
 
     def history(self) -> DataFrame:
         """Snapshot-history metadata table (Iceberg's ``snapshots``/
@@ -946,7 +994,7 @@ class LakeTable:
                 f"pass replace=True to move it"
             )
         t[name] = int(snap)
-        self._write_tags(t)
+        self._durable_write(t, self._tags_path())
         return int(snap)
 
     def untag(self, name: str) -> bool:
@@ -954,16 +1002,8 @@ class LakeTable:
         if name not in t:
             return False
         del t[name]
-        self._write_tags(t)
+        self._durable_write(t, self._tags_path())
         return True
-
-    def _write_tags(self, t: dict[str, int]) -> None:
-        tmp = os.path.join(self.path, _COMMITS, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(t, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._tags_path())
 
     def resolve_ref(self, ref) -> int:
         """Tag name or snapshot id → snapshot id."""
@@ -984,7 +1024,10 @@ class LakeTable:
     def _staged_data_dir(self, batch_id: str) -> str:
         return os.path.join(self.path, _DATA, f"staged-{batch_id}")
 
-    def _merge_rel_dir(self, snap_id: int) -> str:
+    def _data_dir(self, snap_id: int) -> str:
+        """Table-relative directory for the data files snapshot
+        ``snap_id`` writes — the staged batch's own directory while a
+        write-audit-publish stage is open."""
         if self._stage_to is not None:
             return f"{_DATA}/staged-{self._stage_to}"
         return f"{_DATA}/snap{snap_id:012d}"
@@ -1025,12 +1068,7 @@ class LakeTable:
             self._stage_to = None
         if self._staged_capture is None:
             return lineage  # already-committed fence: nothing staged
-        tmp = os.path.join(self.path, _COMMITS, f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as f:
-            json.dump(self._staged_capture, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, self._staged_path(batch_id))
+        self._durable_write(self._staged_capture, self._staged_path(batch_id))
         self._staged_capture = None
         return lineage
 
@@ -1069,9 +1107,7 @@ class LakeTable:
                 f"{commit.get('parent')} but the head is now {head}; "
                 f"restage against the current head"
             )
-        self._write_commit(commit)
-        if commit.get("lineage"):
-            self._append_lineage(commit["lineage"], offsets)
+        self._publish(commit, offsets)
         os.remove(self._staged_path(batch_id))
         return commit.get("lineage", {})
 
@@ -1587,11 +1623,10 @@ class LakeTable:
             F.count("*").alias("rows_after"),
         )
         snap_id = c["snapshot_id"] + 1
-        rel_dir = self._merge_rel_dir(snap_id)
         ordered = [col["name"] for col in cur_cols]
         new_files = self._write_data(
             observed.select(*ordered, _SEQ, _DELETED, "_bucket"),
-            c, rel_dir, n_parts=max(len(touched), 1),
+            c, self._data_dir(snap_id), n_parts=max(len(touched), 1),
         )
         try:
             counts = obs.get
@@ -1624,25 +1659,10 @@ class LakeTable:
             "late_events": int(n_late),
             **{k: int(v or 0) for k, v in counts.items()},
         }
-        commit = {
-            "snapshot_id": snap_id,
-            "parent": c["snapshot_id"],
-            "batch_id": batch_id,
-            "operation": "merge",
-            "schema_version": c["schema_version"],
-            "schemas": c["schemas"],
-            "key": key,
-            "order_col": order_col,
-            "n_buckets": c["n_buckets"],
-            "max_file_rows": c.get("max_file_rows", 1 << 20),
-            "files": carry + new_files,
-            "batches": list(c.get("batches", [])) + [batch_id],
-            "lineage": lineage,
-            "hwm_us": hwm_us if hwm_us is not None else c.get("hwm_us"),
-            "applied_fences": c.get("applied_fences", []),
-        }
-        self._write_commit(commit)
-        self._append_lineage(lineage, offsets)
+        self._next_commit(
+            c, "merge", carry + new_files, batch_id=batch_id,
+            lineage=lineage, offsets=offsets, hwm_us=hwm_us,
+        )
         return lineage
 
     def _commit_mor_deltas(
@@ -1671,7 +1691,7 @@ class LakeTable:
         )
         new_files = self._write_data(
             observed.select(*ordered, _SEQ, _DELETED, "_bucket"),
-            c, self._merge_rel_dir(snap_id),
+            c, self._data_dir(snap_id),
             n_parts=max(len(touched), 1), kind="delta", seq=snap_id,
         )
         try:
@@ -1704,25 +1724,10 @@ class LakeTable:
             "deletes": None,
             "stale_noops": None,
         }
-        commit = {
-            "snapshot_id": snap_id,
-            "parent": c["snapshot_id"],
-            "batch_id": batch_id,
-            "operation": "merge-mor",
-            "schema_version": c["schema_version"],
-            "schemas": c["schemas"],
-            "key": c["key"],
-            "order_col": c["order_col"],
-            "n_buckets": c["n_buckets"],
-            "max_file_rows": c.get("max_file_rows", 1 << 20),
-            "files": list(c["files"]) + new_files,
-            "batches": list(c.get("batches", [])) + [batch_id],
-            "lineage": lineage,
-            "hwm_us": hwm_us if hwm_us is not None else c.get("hwm_us"),
-            "applied_fences": c.get("applied_fences", []),
-        }
-        self._write_commit(commit)
-        self._append_lineage(lineage, offsets)
+        self._next_commit(
+            c, "merge-mor", c["files"] + new_files, batch_id=batch_id,
+            lineage=lineage, offsets=offsets, hwm_us=hwm_us,
+        )
         return lineage
 
     # ------------------------------------------------------------------
@@ -1858,12 +1863,7 @@ class LakeTable:
         full["expired_parent"] = full.get("parent")
         full["parent"] = None
         full["manifest_chain"] = 0
-        tmp = os.path.join(self.path, _COMMITS, f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as f:
-            json.dump(full, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._commit_path(snap))
+        self._durable_write(full, self._commit_path(snap))
         self._cache_put(snap, full)
 
     def expire_snapshots(self, keep_last: int = 2) -> dict:
@@ -1966,10 +1966,9 @@ class LakeTable:
         kept = cur.observe(
             obs, F.sum(expired.cast("long")).alias("dropped")
         ).filter(~expired)
-        snap_id = c["snapshot_id"] + 1
-        rel_dir = f"{_DATA}/snap{snap_id:012d}"
         new_files = self._write_data(
-            kept, c, rel_dir, n_parts=max(len({f['bucket'] for f in hit}), 1)
+            kept, c, self._data_dir(c["snapshot_id"] + 1),
+            n_parts=max(len({f['bucket'] for f in hit}), 1),
         )
         try:
             dropped = int(obs.get.get("dropped") or 0)
@@ -1979,20 +1978,10 @@ class LakeTable:
             # unevaluated — recount the expired winners directly (rare
             # path, one extra scan of the already-pruned hit set)
             dropped = cur.filter(expired).count()
-        commit = {
-            **{k: c[k] for k in ("schema_version", "schemas", "key", "order_col",
-                                 "n_buckets", "max_file_rows")},
-            "snapshot_id": snap_id,
-            "parent": c["snapshot_id"],
-            "batch_id": None,
-            "operation": "gc_tombstones",
-            "files": carry + new_files,
-            "batches": list(c.get("batches", [])),
-            "lineage": {"rows_dropped": dropped},
-            "hwm_us": c.get("hwm_us"),
-            "applied_fences": c.get("applied_fences", []),
-        }
-        self._write_commit(commit)
+        self._next_commit(
+            c, "gc_tombstones", carry + new_files,
+            lineage={"rows_dropped": dropped},
+        )
         return {"files_rewritten": len(hit), "files_carried": len(carry),
                 "rows_dropped": dropped}
 
@@ -2214,25 +2203,14 @@ class LakeTable:
         rows = self._resolved_entries_df(c, hit).withColumn(
             "_bucket", self._bucket_expr(F.col(c["key"]))
         )
-        snap_id = c["snapshot_id"] + 1
         new_files = self._write_data(
-            rows, c, f"{_DATA}/snap{snap_id:012d}",
+            rows, c, self._data_dir(c["snapshot_id"] + 1),
             n_parts=max(len({f['bucket'] for f in hit}), 1),
         )
-        commit = {
-            **{k: c[k] for k in ("schema_version", "schemas", "key", "order_col",
-                                 "n_buckets", "max_file_rows")},
-            "snapshot_id": snap_id,
-            "parent": c["snapshot_id"],
-            "batch_id": None,
-            "operation": "compact",
-            "files": carry + new_files,
-            "batches": list(c.get("batches", [])),
-            "lineage": {"files_before": len(hit), "files_after": len(new_files)},
-            "hwm_us": c.get("hwm_us"),
-            "applied_fences": c.get("applied_fences", []),
-        }
-        self._write_commit(commit)
+        self._next_commit(
+            c, "compact", carry + new_files,
+            lineage={"files_before": len(hit), "files_after": len(new_files)},
+        )
         return {"files_before": len(hit) + len(carry),
                 "files_after": len(new_files) + len(carry)}
 
@@ -2264,26 +2242,15 @@ class LakeTable:
             "_bucket",
             F.pmod(F.xxhash64(F.col(c["key"])), F.lit(n_buckets)).cast("int"),
         )
-        snap_id = c["snapshot_id"] + 1
         new_files = self._write_data(
-            rows, c, f"{_DATA}/snap{snap_id:012d}", n_parts=n_buckets
+            rows, c, self._data_dir(c["snapshot_id"] + 1), n_parts=n_buckets
         )
-        commit = {
-            **{k: c[k] for k in ("schema_version", "schemas", "key",
-                                 "order_col", "max_file_rows")},
-            "n_buckets": n_buckets,
-            "snapshot_id": snap_id,
-            "parent": c["snapshot_id"],
-            "batch_id": None,
-            "operation": f"rebucket:{c['n_buckets']}->{n_buckets}",
-            "files": new_files,
-            "batches": list(c.get("batches", [])),
-            "lineage": {"files_before": len(c["files"]),
-                        "files_after": len(new_files)},
-            "hwm_us": c.get("hwm_us"),
-            "applied_fences": c.get("applied_fences", []),
-        }
-        self._write_commit(commit)
+        self._next_commit(
+            c, f"rebucket:{c['n_buckets']}->{n_buckets}", new_files,
+            lineage={"files_before": len(c["files"]),
+                     "files_after": len(new_files)},
+            n_buckets=n_buckets,
+        )
         return {"files_before": len(c["files"]),
                 "files_after": len(new_files), "n_buckets": n_buckets}
 
@@ -2436,12 +2403,6 @@ class LakeTable:
     # ------------------------------------------------------------------
 
     def _append_lineage(self, lineage: dict, offsets: list[dict]) -> None:
-        if self._stage_to is not None and self._staged_capture is not None:
-            # write-audit-publish: lineage rows become durable only at
-            # publish time (a discarded staged batch never ran, as far
-            # as the metrics table is concerned)
-            self._staged_capture["offsets"] = offsets or []
-            return
         rows = [
             {
                 "batch_id": lineage["batch_id"],
@@ -2469,24 +2430,7 @@ class LakeTable:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        schema = pa.schema(
-            [
-                ("batch_id", pa.string()),
-                ("snapshot_id", pa.int64()),
-                ("source_part", pa.int32()),
-                ("min_offset", pa.int64()),
-                ("max_offset", pa.int64()),
-                ("events", pa.int64()),
-                ("inserts", pa.int64()),
-                ("updates", pa.int64()),
-                ("deletes", pa.int64()),
-                ("stale_noops", pa.int64()),
-                ("malformed", pa.int64()),
-                ("upserts", pa.int64()),
-                ("tombstones", pa.int64()),
-            ]
-        )
-        tbl = pa.Table.from_pylist(rows, schema=schema)
+        tbl = pa.Table.from_pylist(rows, schema=arrow_schema(_LINEAGE_DDL))
         d = os.path.join(self.path, _LINEAGE)
         os.makedirs(d, exist_ok=True)
         pq.write_table(tbl, os.path.join(d, f"part-{uuid.uuid4().hex}.parquet"))
@@ -2494,15 +2438,7 @@ class LakeTable:
     def lineage(self) -> DataFrame:
         p = os.path.join(self.path, _LINEAGE)
         if not os.path.isdir(p):
-            return local_frame(
-                self.spark,
-                [],
-                "batch_id string, snapshot_id bigint, source_part int, "
-                "min_offset bigint, max_offset bigint, events bigint, "
-                "inserts bigint, updates bigint, deletes bigint, "
-                "stale_noops bigint, malformed bigint, upserts bigint, "
-                "tombstones bigint",
-            )
+            return local_frame(self.spark, [], _LINEAGE_DDL)
         # lineage files written before/after the MoR column addition
         # may differ in columns — merge, null-padded
         return self.spark.read.option("mergeSchema", "true").parquet(p)

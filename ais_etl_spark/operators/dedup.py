@@ -33,11 +33,6 @@ partitioning/salting only.
   boilerplate page that floods one bucket is exactly the skew AQE
   splits. NEVER materialize the O(n²) similarity matrix; LSH candidates
   + Jaccard verification touch only colliding pairs.
-- The explode formulation mirrors the SQL oracle 1:1; at real scale the
-  signature step collapses to one Arrow-batched pandas UDF per doc
-  (:func:`minhash_signature_udf`) so shuffle volume is n_docs × k ints
-  instead of n_docs × n_shingles rows. Both produce identical
-  signatures (tested).
 - Embedding near-dup at scale must LSH/IVF-bucket first (see
   operators/similarity.py); the all-pairs form here is the verify step.
 """
@@ -49,7 +44,6 @@ import hashlib
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, StringType
 
 TOKEN_RE = "[a-z0-9]+"
 
@@ -167,34 +161,6 @@ def minhash_signatures(
     )
 
 
-def minhash_signature_udf(k: int = 16, shingle_n: int = 3):
-    """Scale path: one Arrow-batched pandas UDF computing the whole
-    k-signature per doc locally — no shingle explode, no k× row blowup;
-    the downstream shuffle carries n_docs × k tiny rows. Semantically
-    identical to :func:`minhash_signatures` (asserted in tests)."""
-    import re
-
-    tok_re = re.compile(TOKEN_RE)
-
-    def sig_one(text: str | None) -> list[str] | None:
-        if text is None:
-            return None
-        t = tok_re.findall(text.lower())
-        shs = {" ".join(t[i : i + shingle_n]) for i in range(len(t) - shingle_n + 1)}
-        if not shs:
-            return None
-        return [
-            min(hashlib.md5(f"{j}:{s}".encode()).hexdigest() for s in shs)
-            for j in range(k)
-        ]
-
-    @pandas_udf(ArrayType(StringType()))
-    def sig(text: pd.Series) -> pd.Series:
-        return text.map(sig_one)
-
-    return sig
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -202,27 +168,19 @@ def minhash_lsh_pairs(
     k: int = 16,
     bands: int = 4,
     shingle_n: int = 3,
-    use_udf_signatures: bool = False,
     shingle_rows: DataFrame | None = None,
 ) -> DataFrame:
     """Candidate near-dup pairs: band the k-row signature into
     ``bands`` groups, md5 the concatenated band slice, self-join on
     (band, sig). Returns distinct (doc_a, doc_b), doc_a < doc_b.
 
-    Default formulation (the 100 TB shape AND the local fast path):
+    Formulation (the 100 TB shape AND the local fast path):
     shingles explode map-side only, all k min-hashes reduce in ONE
     hash-aggregate (JVM md5, map-side combine ⇒ the sole shuffle
     carries one k-column row per doc), and the band signatures are
     built DIRECTLY from the k agg columns (no unpivot, no second
     groupBy) — so the band join input is n_docs × bands rows with
     zero Python in the path.
-
-    ``use_udf_signatures=True`` swaps the signature step for the
-    Arrow-batched UDF (:func:`minhash_signature_udf` — no shingle
-    explode at all; useful when pathological shingle counts per doc
-    make even the map-side explode too hot). Band signatures are
-    bit-identical across both paths and the naive-unpivot oracle
-    (parity test in tests/test_dedup.py).
 
     ``shingle_rows`` (from :func:`distinct_shingle_rows`): consume a
     shared distinct (id, shingle) subtree instead of exploding here —
@@ -232,44 +190,33 @@ def minhash_lsh_pairs(
     no-signature behavior), one explode per job when a verify stage
     shares the subtree."""
     rows_per_band = k // bands
-
-    def band_cols(h):
-        # h(i) = the i-th minhash column expr, 0-based, ordered by j
-        return F.array(
-            *[
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        *[h(b * rows_per_band + j) for j in range(rows_per_band)],
-                    )
-                )
-                for b in range(bands)
-            ]
-        )
-
-    if use_udf_signatures:
-        sig_arr = minhash_signature_udf(k, shingle_n)(F.col(text_col))
-        docs = df.select(F.col(id_col), sig_arr.alias("_sig")).filter(
-            F.col("_sig").isNotNull()
-        )
-        per_band = band_cols(lambda i: F.element_at("_sig", i + 1))
+    if shingle_rows is not None:
+        sh = shingle_rows
     else:
-        if shingle_rows is not None:
-            sh = shingle_rows
-        else:
-            sh = df.select(
-                F.col(id_col),
-                F.explode(shingles(F.col(text_col), shingle_n)).alias("s"),
+        sh = df.select(
+            F.col(id_col),
+            F.explode(shingles(F.col(text_col), shingle_n)).alias("s"),
+        )
+    mins = [
+        F.min(_mh(F.lit(j), F.col("s"))).alias(f"_h{j}") for j in range(k)
+    ]
+    docs = sh.groupBy(id_col).agg(*mins)
+    if shingle_rows is not None:
+        # explode_outer's null-shingle rows hash to null everywhere;
+        # a doc with no real shingle must stay signature-less
+        docs = docs.filter(F.col("_h0").isNotNull())
+    per_band = F.array(
+        *[
+            F.md5(
+                F.concat_ws(
+                    "|",
+                    *[F.col(f"_h{b * rows_per_band + j}")
+                      for j in range(rows_per_band)],
+                )
             )
-        mins = [
-            F.min(_mh(F.lit(j), F.col("s"))).alias(f"_h{j}") for j in range(k)
+            for b in range(bands)
         ]
-        docs = sh.groupBy(id_col).agg(*mins)
-        if shingle_rows is not None:
-            # explode_outer's null-shingle rows hash to null everywhere;
-            # a doc with no real shingle must stay signature-less
-            docs = docs.filter(F.col("_h0").isNotNull())
-        per_band = band_cols(lambda i: F.col(f"_h{i}"))
+    )
     band = docs.select(F.col(id_col), F.posexplode(per_band).alias("band", "sig"))
     a = band.select(F.col(id_col).alias("doc_a"), "band", "sig")
     b = band.select(F.col(id_col).alias("doc_b"), "band", "sig")

@@ -37,38 +37,10 @@ def test_shingles_match_python(docs):
         assert r["s"] == want
 
 
-def test_minhash_explode_vs_udf_parity(docs):
-    """The built-in explode formulation and the Arrow-batched scale UDF
-    must produce identical signatures."""
-    exploded = D.minhash_signatures(docs, k=8).collect()
-    sig_by_doc: dict[int, dict[int, str]] = {}
-    for r in exploded:
-        sig_by_doc.setdefault(r["doc_id"], {})[r["j"]] = r["h"]
-    udf = D.minhash_signature_udf(k=8)
-    fast = {r["doc_id"]: r["sig"] for r in docs.select("doc_id", udf("text").alias("sig")).collect()}
-    for doc_id, sig in fast.items():
-        if sig is None:
-            assert doc_id not in sig_by_doc  # too short for shingles
-        else:
-            assert sig == [sig_by_doc[doc_id][j] for j in range(8)]
-
-
 def test_minhash_lsh_finds_dups(docs):
     pairs = {(r["doc_a"], r["doc_b"]) for r in D.minhash_lsh_pairs(docs, k=8, bands=4).collect()}
     assert (0, 1) in pairs  # exact dups always collide
     assert all(3 not in p for p in pairs)  # unrelated doc never pairs
-
-
-def test_minhash_lsh_banded_parity_udf_vs_explode(docs):
-    """The UDF-signature path (scale shape: n_docs × bands shuffle) and
-    the explode+hash-agg path must produce the IDENTICAL banded pair
-    set — parity at the operator output, not just the signatures."""
-    slow = {(r["doc_a"], r["doc_b"])
-            for r in D.minhash_lsh_pairs(docs, k=8, bands=4).collect()}
-    fast = {(r["doc_a"], r["doc_b"])
-            for r in D.minhash_lsh_pairs(
-                docs, k=8, bands=4, use_udf_signatures=True).collect()}
-    assert slow == fast and slow  # identical and non-empty
 
 
 def test_ngram_jaccard(docs):

@@ -498,6 +498,59 @@ def test_second_writer_loses_with_commit_conflict(spark, tmpdir_path):
     ]
 
 
+def test_every_child_commit_carries_its_parents_state(spark, tmpdir_path):
+    """Every snapshot-producing operation derives its commit from the
+    head: the new head (read back from disk) carries the parent's
+    schemas, max_file_rows, batch fences, high-water mark and DDL
+    fences, except what the operation itself changes — rollback takes
+    its target's — and records its own committed_at (an ALTER used to
+    inherit its parent's)."""
+    t = LakeTable.create(spark, tmpdir_path, SCHEMA, n_buckets=4)
+    fields = ("schemas", "max_file_rows", "batches", "hwm_us", "applied_fences")
+
+    def head(snapshot_id=None):
+        return LakeTable(spark, tmpdir_path).commit(snapshot_id)
+
+    def us(s):
+        return int(T(s).replace(tzinfo=dt.timezone.utc).timestamp()) * 1_000_000
+
+    def step(op, changed=lambda parent: {}):
+        parent = head()
+        op()
+        child = head()
+        assert child["parent"] == parent["snapshot_id"]
+        want = {**{k: parent.get(k) for k in fields}, **changed(parent)}
+        assert {k: child.get(k) for k in fields} == want, child["operation"]
+
+    lang = {"id": 3, "name": "lang", "type": "string"}
+    step(lambda: t.alter_add_column("lang", "string", fence_id=5),
+         lambda p: {"schemas": p["schemas"] + [p["schemas"][-1] + [lang]],
+                    "applied_fences": [5]})
+    step(lambda: t.merge(ev(spark, [(1, "I", "u1", T(10), "a"),
+                                    (2, "I", "u2", T(11), "b"),
+                                    (3, "D", "u3", T(12), None)]),
+                         "b1", bounded_lateness_us=60_000_000),
+         lambda p: {"batches": ["b1"], "hwm_us": us(12)})
+    step(lambda: t.merge(ev(spark, [(4, "U", "u1", T(20), "a2")]), "b2",
+                         mode="mor"),
+         lambda p: {"batches": ["b1", "b2"], "hwm_us": us(20)})
+    step(lambda: t.compact_deltas())
+    step(lambda: t.gc_tombstones(T(15)))
+    step(lambda: t.rebucket(8))
+    step(lambda: t.rollback(2),
+         lambda p: {k: head(2).get(k) for k in fields})
+    step(lambda: (t.stage_merge(ev(spark, [(5, "I", "u5", T(30), "c")]), "s1"),
+                  t.publish_staged("s1")),
+         lambda p: {"batches": p["batches"] + ["s1"], "hwm_us": us(30)})
+
+    hist = t.history().orderBy("snapshot_id").collect()
+    assert [r.snapshot_id for r in hist] == list(range(9))
+    assert [r.operation for r in hist][4:7] == [
+        "compact", "gc_tombstones", "rebucket:4->8"]
+    at = [r.committed_at for r in hist]
+    assert all(a < b for a, b in zip(at, at[1:])), at
+
+
 def test_widen_column_metadata_only(spark, tmpdir_path):
     """int→bigint widening: zero rewrite, old int-physical files read
     back through the widened id-mapped schema, new files carry bigint,
