@@ -65,6 +65,19 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
+def ensure_parallelism(df: DataFrame) -> DataFrame:
+    """Spread ``df`` over at least one partition per core — the guide
+    §2.5 input-skew fix: a one-file parquet scan is one task, so every
+    map-side operator above it ran on one core. A no-op (no shuffle)
+    when the input already has that many partitions, as a many-split
+    scan at scale does. Planning the narrow scan to count its
+    partitions launches no job."""
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() >= cores:
+        return df
+    return df.repartition(cores)
+
+
 def _ms(col) -> "F.Column":
     """epoch millis; parquet timestamps surface as TIMESTAMP_NTZ in
     Spark 4 — cast to TIMESTAMP (session TZ = UTC) first, matching
@@ -163,9 +176,7 @@ def _lww_snapshot_df(spark, sf_dir) -> DataFrame:
     # so the LWW map side ran on as many cores; the round-robin shuffle
     # of the derived feed buys a 32-wide aggregate (measured 3.5→2.2s
     # for cdc_snapshot_by_lang at sf1.0)
-    feed = cdc_feed_from_events(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    feed = ensure_parallelism(cdc_feed_from_events(spark, sf_dir))
     return (
         lww_latest(feed, key="url", order_cols=("warc_ts", "event_id"))
         .filter(F.col("op") != "D")
@@ -250,9 +261,7 @@ def _feed_with_html(spark, sf_dir) -> DataFrame:
     and without it every downstream consumer paid the whole per-row
     gzip pass on a single core (measured 17.6s → 3.8s for the full
     sf1.0 feed). Moved bytes are only the derived text columns."""
-    feed = cdc_feed_from_events(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    feed = ensure_parallelism(cdc_feed_from_events(spark, sf_dir))
     return feed.select(
         "event_id",
         "op",
@@ -1651,9 +1660,7 @@ def q_dedup_minhash_lsh(spark, sf_dir):
     # so the entire shingle explode + 16×md5 map side ran on a single
     # core (guide §2.5 input skew; measured 20.5s → 1.9s for the
     # signature aggregate alone at sf1.0)
-    docs = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = ensure_parallelism(_t(spark, sf_dir, "documents"))
     return D.minhash_lsh_pairs(docs, k=16, bands=4, shingle_n=3)
 
 
@@ -1687,9 +1694,7 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
     # r6: both chains consume ONE distinct-shingle subtree (min-hash
     # over the distinct set == over the multiset) — ReuseExchange
     # materializes the explode once per job instead of once per chain.
-    docs = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = ensure_parallelism(_t(spark, sf_dir, "documents"))
     sh = D.distinct_shingle_rows(docs, shingle_n=3)
     cand = D.minhash_lsh_pairs(docs, k=16, bands=4, shingle_n=3, shingle_rows=sh)
     return D.ngram_jaccard_pairs(
@@ -1827,9 +1832,7 @@ def q_dedup_simhash_pairs(spark, sf_dir):
     # ONCE — the self-join's two branches each re-ran the UDF, and the
     # filter-pushdown duplication (guide §4.4) doubled each side again:
     # 4 full UDF evaluations measured before, 1 after.
-    docs = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = ensure_parallelism(_t(spark, sf_dir, "documents"))
     sigs = docs.select(
         "doc_id", D.simhash_udf()(F.col("text")).alias("simhash")
     ).localCheckpoint(eager=True)
@@ -1909,9 +1912,7 @@ def q_dedup_embedding_cosine(spark, sf_dir):
     # arithmetic; parity-tested against the candidate chain in
     # tests/test_dedup.py). The repartition spreads the single-file
     # scan's bucket projection across cores (guide §2.5).
-    emb = _t(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    emb = ensure_parallelism(_t(spark, sf_dir, "embeddings"))
     return D.embedding_cosine_pairs_bucketed(
         emb, dim=64, nbits=4, threshold=0.2
     )

@@ -27,14 +27,26 @@ Iceberg semantics, from scratch, sized for the 10^10-event design point:
   batch_id is already committed is a no-op replay (idempotent MERGE,
   SURVEY §4 item 2). Structured Streaming's ``foreachBatch`` epoch id
   is the batch_id, so checkpoint-resume never double-applies.
-- **LWW upsert with tombstones.** The winner per url is
-  ``max(warc_ts, _seq)`` across {current row, incoming events}; a
-  losing (late/stale) event is a no-op. Deletes persist as tombstone
-  rows (``_deleted``) so an *older* insert arriving after a newer
-  delete stays dead — incremental state matches full replay exactly
-  (the replay-equality bar in BASELINE.json). :meth:`gc_tombstones` is
-  the maintenance job that drops tombstones older than the source's
+- **LWW upsert with tombstones, one tie rule.** The winner per url is
+  the max of ``(warc_ts, _seq, file seq)`` across every copy of the
+  key: the rows of the files it lives in plus the incoming events,
+  which rank above every committed file's seq (``_INCOMING_SEQ``), so
+  incoming wins an exact (order, seq) tie.
+  The CoW merge, the merge-on-read scan and the maintenance folds
+  all resolve through ``_resolve_lww_rows``, so a merge and a read
+  cannot disagree on a winner; a losing (late/stale) event is a
+  no-op. Deletes persist as tombstone rows (``_deleted``) so an
+  *older* insert arriving after a newer delete stays dead —
+  incremental state matches full replay exactly (the
+  replay-equality bar in BASELINE.json). :meth:`gc_tombstones` is the
+  maintenance job that drops tombstones older than the source's
   lateness watermark — rewriting only the files that contain them.
+- **One write step, one commit step.** Every operation that writes
+  data files (both merge modes, ``gc_tombstones``, ``compact``,
+  ``rebucket``) hands its rows to ``_write_files``, which names the
+  attempt's own data directory, writes key-sorted files per bucket
+  and evaluates the operation's counters on the same Spark job; the
+  operation then derives its child snapshot with ``_next_commit``.
 - **Metadata-only schema evolution.** Columns have stable ids;
   add/rename appends a schema version WITHOUT rewriting data files.
   Files remember the schema version they were written under; reads
@@ -50,7 +62,9 @@ Concurrency model: single writer (one streaming query / one driver),
 many readers — Iceberg's default practical deployment. Readers always
 see a complete snapshot because the manifest is the commit point. A
 second writer that races for the same snapshot id loses with
-:class:`CommitConflict`; it never overwrites the winner's manifest.
+:class:`CommitConflict`; it never overwrites the winner's manifest,
+and its data files sit in a directory of their own that no manifest
+lists (``expire_snapshots`` removes it).
 """
 
 from __future__ import annotations
@@ -59,9 +73,10 @@ import json
 import os
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ais_etl_spark.operators.lww import lww_latest
 from ais_etl_spark.session import arrow_schema, local_frame
@@ -79,6 +94,11 @@ _DELETED = "_deleted"  # tombstone flag
 # row came from — the LWW tiebreak between a delta file and a later copy
 # of the same logical row (merge-on-read resolution)
 _FILESEQ = "_fileseq"
+# the _fileseq a merge gives its incoming rows: above every committed
+# file's seq (a snapshot id). One constant, not the new snapshot's id,
+# so the merge's generated code is the same for every batch — a
+# per-batch literal is inlined into it and recompiled on every merge
+_INCOMING_SEQ = (1 << 63) - 1
 
 # longest run of DELTA manifests before a FULL listing is forced: caps
 # the commit-reconstruction walk a fresh reader pays (32 small JSON
@@ -130,9 +150,9 @@ class LakeTable:
         self.spark = spark
         self.path = path
         self._commit_cache: dict[int, dict] = {}
-        # write-audit-publish: while set, _next_commit parks the commit
-        # and its lineage offsets in _staged_capture instead of
-        # publishing
+        # write-audit-publish: while set, _write_files writes into the
+        # staged batch's data dir and _next_commit parks the commit and
+        # its lineage offsets in _staged_capture instead of publishing
         self._stage_to: str | None = None
         self._staged_capture: dict | None = None
 
@@ -705,12 +725,10 @@ class LakeTable:
         self, c: dict, files: list[dict], key_value=None
     ) -> DataFrame:
         """Per-key LWW over a file set that may hold several versions
-        of a key (base + delta files): winner = max struct over
-        (order_col, _seq, _fileseq) — exactly the merge's resolution
-        rule, with the file's manifest seq breaking exact (order, seq)
-        ties toward the later-committed copy. Output column set equals
-        ``_entries_df``'s (internal columns included). The shuffle is
-        bounded by the DIRTY rows handed in, not the table."""
+        of a key (base + delta files) — see :meth:`_resolve_lww_rows`.
+        Output column set equals ``_entries_df``'s (internal columns
+        included). The shuffle is bounded by the DIRTY rows handed in,
+        not the table."""
         df = self._entries_df(c, files, with_fileseq=True)
         if key_value is not None:
             # point lookup: the predicate sits BELOW the groupBy, so it
@@ -718,9 +736,15 @@ class LakeTable:
             df = df.filter(F.col(c["key"]) == key_value)
         return self._resolve_lww_rows(c, df)
 
-    def _resolve_lww_rows(self, c: dict, df: DataFrame) -> DataFrame:
-        """Row-level core of :meth:`_resolve_lww`: ``df`` must carry
-        the current schema columns + ``_seq``/``_deleted``/``_fileseq``."""
+    def _resolve_lww_rows(self, c: dict, df: DataFrame, **aggs) -> DataFrame:
+        """The one per-key LWW rule, shared by reads, the CoW merge and
+        the maintenance folds: winner = max struct over (order_col,
+        _seq, _fileseq), so the manifest seq of the file a row came
+        from breaks exact (order, seq) ties toward the later-committed
+        copy. ``df`` must carry the current schema columns +
+        ``_seq``/``_deleted``/``_fileseq``. ``aggs`` (name → per-key
+        aggregate) are added as output columns, and with them the
+        winner's ``_fileseq`` — the CoW merge counts from these."""
         key = c["key"]
         order_col = c["order_col"]
         payload = [
@@ -733,12 +757,16 @@ class LakeTable:
                 F.col(_DELETED), *[F.col(p) for p in payload],
             )
         ).alias("w")
-        return df.groupBy(key).agg(w).select(
+        extra = [F.col(f"w.{_FILESEQ}").alias(_FILESEQ), *aggs] if aggs else []
+        return df.groupBy(key).agg(
+            w, *[a.alias(n) for n, a in aggs.items()]
+        ).select(
             F.col(key),
             F.col(f"w.{order_col}").alias(order_col),
             *[F.col(f"w.{p}").alias(p) for p in payload],
             F.col(f"w.{_SEQ}").alias(_SEQ),
             F.col(f"w.{_DELETED}").alias(_DELETED),
+            *extra,
         )
 
     # below this delta-rows/base-rows ratio the dirty-bucket read uses
@@ -1021,16 +1049,17 @@ class LakeTable:
     def _staged_path(self, batch_id: str) -> str:
         return os.path.join(self.path, _COMMITS, f"staged-{batch_id}.json")
 
-    def _staged_data_dir(self, batch_id: str) -> str:
-        return os.path.join(self.path, _DATA, f"staged-{batch_id}")
-
-    def _data_dir(self, snap_id: int) -> str:
-        """Table-relative directory for the data files snapshot
-        ``snap_id`` writes — the staged batch's own directory while a
-        write-audit-publish stage is open."""
-        if self._stage_to is not None:
-            return f"{_DATA}/staged-{self._stage_to}"
-        return f"{_DATA}/snap{snap_id:012d}"
+    @staticmethod
+    def _data_dir(*, snap_id: int | None = None, stage: str | None = None) -> str:
+        """Table-relative directory for a new snapshot's data files:
+        the staged batch's own ``data/staged-<batch_id>`` (which
+        :meth:`discard_staged` removes by that name), otherwise a fresh
+        ``data/snap<id>-<uuid8>`` per write attempt — two writers
+        racing for one snapshot id never share a directory, so neither
+        write fails on the other's files nor harvests them as its own."""
+        if stage is not None:
+            return f"{_DATA}/staged-{stage}"
+        return f"{_DATA}/snap{snap_id:012d}-{uuid.uuid4().hex[:8]}"
 
     def stage_merge(self, events: DataFrame, batch_id: str, **merge_kwargs) -> dict:
         """Write-audit-publish step 1 (WRITE): run the FULL merge
@@ -1130,7 +1159,7 @@ class LakeTable:
         if os.path.exists(p):
             os.remove(p)
             removed = True
-        d = self._staged_data_dir(batch_id)
+        d = os.path.join(self.path, self._data_dir(stage=batch_id))
         if os.path.isdir(d):
             _sh.rmtree(d, ignore_errors=True)
             removed = True
@@ -1213,12 +1242,17 @@ class LakeTable:
         base-row read MoR exists to avoid; the fields are NULL in the
         lineage table for MoR commits).
 
-        Physical plan (cow): dedup batch (map-side combine absorbs
-        hot-key skew) → persist winners → transform winners → bucket →
-        manifest-prune current snapshot to affected buckets → per-key
-        struct-max against current rows → rewrite only those buckets.
-        Physical plan (mor): dedup batch → transform winners → write
-        winners as per-bucket delta files — one shuffle, zero base IO.
+        Physical plan: a stats pre-pass over the raw events (buckets,
+        offsets, hit files) → batch-local LWW (map-side combine absorbs
+        hot-key skew) → transform winners → bucket, then ONE write job
+        through ``_write_files``, which evaluates the lineage counters
+        as an Observation on that job. cow: the winners are
+        LWW-resolved against the rows of the hit files with the
+        read-time rule (``_resolve_lww_rows``; incoming rows rank
+        above every committed file, so they win exact (order, seq)
+        ties) and the hit files are rewritten; with no hit file the
+        winners are written as they are. mor: the winners are written
+        as per-bucket delta files — zero base IO.
         """
         if mode not in ("cow", "mor"):
             raise ValueError(f"mode must be 'cow' or 'mor', got {mode!r}")
@@ -1304,10 +1338,100 @@ class LakeTable:
             ev, key=key, order_cols=(order_col, _SEQ),
             payload_cols=["op", *payload_in],
         )
-        return self._merge_winners(
-            c, winners, batch_id, touched, hit_paths, post_dedup_transform,
-            offsets, malformed, n_late, hwm_us, mode=mode,
+
+        # 2. payload transform on winners only (one UDF pass over the
+        #    LWW shuffle's AQE-coalesced output partitions)
+        ev = post_dedup_transform(winners) if post_dedup_transform else winners
+        ptypes = {x["name"]: x["type"] for x in cur_cols}
+        for p in payload_names:
+            if p not in ev.columns:
+                ev = ev.withColumn(p, F.lit(None).cast(ptypes[p]))
+        incoming = ev.select(
+            key,
+            order_col,
+            F.col(_SEQ),
+            (F.col("op") == "D").alias(_DELETED),
+            # cast to the CURRENT schema types: after a widen fence the
+            # transform may still emit the narrower type (e.g. int
+            # length into a bigint column) — files must carry the
+            # schema-version type they are manifested under
+            *[F.col(p).cast(ptypes[p]).alias(p) for p in payload_names],
+            F.lit(_INCOMING_SEQ).alias(_FILESEQ),
+            self._bucket_expr(F.col(key)).alias("_bucket"),
         )
+
+        # 3. the rows to write and the counters their write job
+        #    observes. CoW reads and rewrites the HIT FILES only
+        #    (file-granularity: a bucket file whose key range cannot
+        #    contain an incoming key is carried by reference); merge-
+        #    on-read asked the pre-pass for no hit files at all
+        rewrite = [f for f in c["files"] if f["path"] in hit_paths]
+        if mode == "mor":
+            # the winners (tombstones included) become DELTA files; the
+            # insert/update/stale split would need the base read this
+            # mode exists to avoid
+            rows, kind = incoming, "delta"
+            counters = {
+                "upserts": F.sum((~F.col(_DELETED)).cast("long")),
+                "tombstones": F.sum(F.col(_DELETED).cast("long")),
+            }
+        else:
+            kind = "base"
+            # before the resolve per copy, after it per key winner
+            is_new = F.col(_FILESEQ) == _INCOMING_SEQ
+            if not rewrite:
+                # FAST PATH — no current file can hold an incoming key
+                # (fresh table, or a batch disjoint from every file
+                # range): the per-key LWW over {current ∪ incoming} is
+                # the identity on incoming (winners are already one
+                # row per key), so its union + struct-max aggregate
+                # (a SortAggregate plus its exchange) is pure overhead.
+                rows = incoming.withColumns(
+                    {"_has_new": F.lit(1), "_has_cur": F.lit(0)}
+                )
+            else:
+                current = self._entries_df(c, rewrite, with_fileseq=True)
+                rows = self._resolve_lww_rows(
+                    c, current.unionByName(incoming.drop("_bucket")),
+                    _has_new=F.max(is_new.cast("int")),
+                    _has_cur=F.max((~is_new).cast("int")),
+                ).withColumn("_bucket", self._bucket_expr(F.col(key)))
+            live = is_new & ~F.col(_DELETED)
+            counters = {
+                "inserts": F.sum((live & (F.col("_has_cur") == 0)).cast("long")),
+                "updates": F.sum((live & (F.col("_has_cur") == 1)).cast("long")),
+                "deletes": F.sum((is_new & F.col(_DELETED)).cast("long")),
+                "stale_noops": F.sum((~is_new & (F.col("_has_new") == 1)).cast("long")),
+                "rows_after": F.count("*"),
+            }
+
+        # 4. ONE write job; the counters ride along as its Observation
+        new_files, counts = self._write_files(c, rows, touched, counters, kind)
+        carry = [f for f in c["files"] if f["path"] not in hit_paths]
+        lineage = {
+            "batch_id": batch_id,
+            "snapshot_id": c["snapshot_id"] + 1,
+            **({"mode": "mor"} if mode == "mor" else {}),
+            "buckets_rewritten": (
+                len({f["bucket"] for f in new_files}) if kind == "base" else 0
+            ),
+            "buckets_total": c["n_buckets"],
+            "files_rewritten": len(rewrite),
+            "files_written": len(new_files),
+            "files_carried": len(carry),
+            "source_offsets": offsets,
+            "malformed": int(malformed),
+            "late_events": int(n_late),
+            **counts,
+            # the CoW-only split is NULL on a merge-on-read commit
+            **({k: None for k in ("inserts", "updates", "deletes", "stale_noops")}
+               if mode == "mor" else {}),
+        }
+        self._next_commit(
+            c, "merge-mor" if mode == "mor" else "merge", carry + new_files,
+            batch_id=batch_id, lineage=lineage, offsets=offsets, hwm_us=hwm_us,
+        )
+        return lineage
 
     def _batch_stats(self, events: DataFrame, key: str, c: dict, bad,
                      exact_probe_files: int = 64, late=None,
@@ -1501,242 +1625,53 @@ class LakeTable:
             .parquet(p)
         )
 
-    def _merge_winners(
-        self, c, winners, batch_id, touched, hit_paths, post_dedup_transform,
-        offsets, malformed: int = 0, n_late: int = 0,
-        hwm_us: int | None = None, mode: str = "cow",
-    ) -> dict:
-        key = c["key"]
-        order_col = c["order_col"]
-        cur_cols = self.schema_cols(c)
-        payload_names = [
-            col["name"] for col in cur_cols if col["name"] not in (key, order_col)
-        ]
+    # ------------------------------------------------------------------
+    # data-file writer (shared by every operation that writes files)
+    # ------------------------------------------------------------------
 
-        # 3b. payload transform on winners only (one UDF pass over
-        #     the LWW shuffle's AQE-coalesced output partitions)
-        ev = post_dedup_transform(winners) if post_dedup_transform else winners
-        ptypes = {x["name"]: x["type"] for x in cur_cols}
-        for p in payload_names:
-            if p not in ev.columns:
-                ev = ev.withColumn(p, F.lit(None).cast(ptypes[p]))
-        incoming = ev.select(
-            key,
-            order_col,
-            F.col(_SEQ),
-            (F.col("op") == "D").alias(_DELETED),
-            # cast to the CURRENT schema types: after a widen fence the
-            # transform may still emit the narrower type (e.g. int
-            # length into a bigint column) — files must carry the
-            # schema-version type they are manifested under
-            *[F.col(p).cast(ptypes[p]).alias(p) for p in payload_names],
-            F.lit(True).alias("_new"),
-            self._bucket_expr(F.col(key)).alias("_bucket"),
-        )
-
-        if mode == "mor":
-            return self._commit_mor_deltas(
-                c, incoming, batch_id, touched, offsets, malformed,
-                n_late, hwm_us,
-            )
-
-        # 3. current rows in HIT FILES only (file-granularity CoW:
-        #    a bucket file whose key range cannot contain an incoming
-        #    key is carried by reference, not read, not rewritten)
-        rewrite_entries = [f for f in c["files"] if f["path"] in hit_paths]
-        if not rewrite_entries:
-            # FAST PATH — no current file can hold an incoming key
-            # (fresh table, or a batch disjoint from every file range):
-            # the {current ∪ incoming} per-key LWW is the identity on
-            # incoming (winners are already one row per key), so the
-            # union + second struct-max aggregate (a SortAggregate —
-            # struct agg buffers are not hash-aggregable — plus its
-            # exchange) is pure overhead. Every winner is new, nothing
-            # is current: the lineage counters below reduce to the
-            # same literal flags the full plan would compute.
-            result = incoming.select(
-                F.col(key),
-                F.col("_bucket"),
-                F.col(order_col),
-                F.col(_SEQ),
-                F.col(_DELETED),
-                *[F.col(p) for p in payload_names],
-                F.lit(True).alias("_won_new"),
-                F.lit(1).alias("_has_new"),
-                F.lit(0).alias("_has_cur"),
-            )
-        else:
-            current = (
-                self._entries_df(c, rewrite_entries)
-                .select(
-                    key, order_col, _SEQ, _DELETED, *payload_names,
-                    F.lit(False).alias("_new"),
-                )
-                .withColumn("_bucket", self._bucket_expr(F.col(key)))
-            )
-
-            # 4. per-key LWW across {current, incoming}; _new breaks
-            #    exact (ts, seq) ties toward the incoming copy (same
-            #    content).
-            combined = current.unionByName(incoming)
-            winner = F.max(
-                F.struct(
-                    F.col(order_col), F.col(_SEQ), F.col("_new"),
-                    F.col(_DELETED), *[F.col(p) for p in payload_names],
-                )
-            ).alias("w")
-            merged = combined.groupBy(key, "_bucket").agg(
-                winner,
-                F.max(F.col("_new").cast("int")).alias("_has_new"),
-                F.max((~F.col("_new")).cast("int")).alias("_has_cur"),
-            )
-            result = merged.select(
-                F.col(key),
-                F.col("_bucket"),
-                F.col(f"w.{order_col}").alias(order_col),
-                F.col(f"w.{_SEQ}").alias(_SEQ),
-                F.col(f"w.{_DELETED}").alias(_DELETED),
-                *[F.col(f"w.{p}").alias(p) for p in payload_names],
-                F.col(f"w._new").alias("_won_new"),
-                F.col("_has_new"),
-                F.col("_has_cur"),
-            )
-
-        # 5. rewrite touched buckets (CoW) in ONE action: the merge
-        #    counters ride along as an Observation on the write job —
-        #    no second aggregation pass, no result.persist.
-        from pyspark.sql import Observation
-
-        obs = Observation(f"merge-{batch_id}")
-        observed = result.observe(
-            obs,
-            F.sum(
-                (F.col("_won_new") & ~F.col(_DELETED) & (F.col("_has_cur") == 0)).cast("long")
-            ).alias("inserts"),
-            F.sum(
-                (F.col("_won_new") & ~F.col(_DELETED) & (F.col("_has_cur") == 1)).cast("long")
-            ).alias("updates"),
-            F.sum((F.col("_won_new") & F.col(_DELETED)).cast("long")).alias("deletes"),
-            F.sum(
-                ((~F.col("_won_new")) & (F.col("_has_new") == 1)).cast("long")
-            ).alias("stale_noops"),
-            F.count("*").alias("rows_after"),
-        )
+    def _write_files(
+        self, c: dict, rows: DataFrame, buckets, counters: dict | None = None,
+        kind: str = "base", keep=None,
+    ) -> tuple[list[dict], dict]:
+        """The one write step: write ``rows`` (current schema +
+        ``_seq``/``_deleted``/``_bucket``; other columns are dropped
+        after counting) as the data files of snapshot ``c + 1``, in a
+        directory of this attempt's own, one write partition per bucket
+        in ``buckets``. ``counters`` (name → aggregate over ``rows``)
+        ride along as an Observation on the same Spark job — no second
+        pass; rows failing the ``keep`` predicate are counted, not
+        written. ``kind="delta"`` marks the files as merge-on-read
+        deltas whose seq is the new snapshot id. Returns the manifest
+        entries and the counter values; the caller commits."""
         snap_id = c["snapshot_id"] + 1
-        ordered = [col["name"] for col in cur_cols]
-        new_files = self._write_data(
-            observed.select(*ordered, _SEQ, _DELETED, "_bucket"),
-            c, self._data_dir(snap_id), n_parts=max(len(touched), 1),
+        if counters:
+            obs = Observation()
+            rows = rows.observe(obs, *[e.alias(n) for n, e in counters.items()])
+        if keep is not None:
+            rows = rows.filter(keep)
+        files = self._write_data(
+            rows.select(*[x["name"] for x in self.schema_cols(c)],
+                        _SEQ, _DELETED, "_bucket"),
+            c, self._data_dir(snap_id=snap_id, stage=self._stage_to),
+            n_parts=max(len(set(buckets)), 1), kind=kind,
         )
+        if not counters:
+            return files, {}
         try:
             counts = obs.get
         except Exception:
-            # the merged result was empty (e.g. a fully-quarantined
-            # batch on an untouched table): AQE's empty-relation
-            # propagation can eliminate the write subtree, leaving the
-            # Observation unevaluated — and empty output means every
-            # counter is genuinely zero. Verify that from the freshly
-            # harvested footer stats: any written row means the failure
-            # was a REAL observation error, and zeroing the counters
-            # would silently corrupt the lineage table — re-raise.
-            if any(f.get("n_rows") for f in new_files):
-                raise
-            counts = {k: 0 for k in
-                      ("inserts", "updates", "deletes", "stale_noops",
-                       "rows_after")}
-
-        carry = [f for f in c["files"] if f["path"] not in hit_paths]
-        lineage = {
-            "batch_id": batch_id,
-            "snapshot_id": snap_id,
-            "buckets_rewritten": len({f["bucket"] for f in new_files}),
-            "buckets_total": c["n_buckets"],
-            "files_rewritten": len(rewrite_entries),
-            "files_written": len(new_files),
-            "files_carried": len(carry),
-            "source_offsets": offsets,
-            "malformed": int(malformed),
-            "late_events": int(n_late),
-            **{k: int(v or 0) for k, v in counts.items()},
-        }
-        self._next_commit(
-            c, "merge", carry + new_files, batch_id=batch_id,
-            lineage=lineage, offsets=offsets, hwm_us=hwm_us,
-        )
-        return lineage
-
-    def _commit_mor_deltas(
-        self, c, incoming, batch_id, touched, offsets, malformed, n_late,
-        hwm_us,
-    ) -> dict:
-        """Merge-on-read commit: append the batch winners (tombstones
-        included) as per-bucket DELTA files — no base file is read or
-        rewritten, so write IO scales with the batch alone. Readers
-        resolve base+delta per key (``_resolve_lww``); ``compact()``
-        folds deltas back into base files. The insert/update/stale
-        split is unknowable without the base read (that read is what
-        this mode avoids), so lineage carries ``upserts``/``tombstones``
-        and NULLs for the CoW-only counters."""
-        from pyspark.sql import Observation
-
-        snap_id = c["snapshot_id"] + 1
-        cur_cols = self.schema_cols(c)
-        ordered = [col["name"] for col in cur_cols]
-
-        obs = Observation(f"merge-mor-{batch_id}")
-        observed = incoming.observe(
-            obs,
-            F.sum((~F.col(_DELETED)).cast("long")).alias("upserts"),
-            F.sum(F.col(_DELETED).cast("long")).alias("tombstones"),
-        )
-        new_files = self._write_data(
-            observed.select(*ordered, _SEQ, _DELETED, "_bucket"),
-            c, self._data_dir(snap_id),
-            n_parts=max(len(touched), 1), kind="delta", seq=snap_id,
-        )
-        try:
-            counts = obs.get
-        except Exception:
-            # empty winner set (fully-quarantined batch): AQE may have
-            # eliminated the write subtree; zero is then exact — but
-            # only when the footer stats confirm nothing was written
-            # (otherwise this is a real observation error: re-raise
-            # rather than fabricate zero upsert/tombstone lineage)
-            if any(f.get("n_rows") for f in new_files):
+            # AQE's empty-relation propagation can eliminate the write
+            # subtree of empty rows, leaving the Observation
+            # unevaluated; every counter over no rows is zero. Any
+            # written row means a REAL observation error — zeroing the
+            # counters would corrupt the lineage, so re-raise.
+            if any(f.get("n_rows") for f in files):
                 raise
             counts = {}
-        lineage = {
-            "batch_id": batch_id,
-            "snapshot_id": snap_id,
-            "mode": "mor",
-            "buckets_rewritten": 0,
-            "buckets_total": c["n_buckets"],
-            "files_rewritten": 0,
-            "files_written": len(new_files),
-            "files_carried": len(c["files"]),
-            "source_offsets": offsets,
-            "malformed": int(malformed),
-            "late_events": int(n_late),
-            "upserts": int(counts.get("upserts") or 0),
-            "tombstones": int(counts.get("tombstones") or 0),
-            "inserts": None,
-            "updates": None,
-            "deletes": None,
-            "stale_noops": None,
-        }
-        self._next_commit(
-            c, "merge-mor", c["files"] + new_files, batch_id=batch_id,
-            lineage=lineage, offsets=offsets, hwm_us=hwm_us,
-        )
-        return lineage
-
-    # ------------------------------------------------------------------
-    # data-file writer (shared by merge + gc)
-    # ------------------------------------------------------------------
+        return files, {n: int(counts.get(n) or 0) for n in counters}
 
     def _write_data(
-        self, df: DataFrame, c: dict, rel_dir: str, n_parts: int,
-        kind: str = "base", seq: int = 0,
+        self, df: DataFrame, c: dict, rel_dir: str, n_parts: int, kind: str,
     ) -> list[dict]:
         """Write rows (must carry ``_bucket``) as key-sorted parquet
         files, one directory per bucket, split at ``max_file_rows``;
@@ -1766,8 +1701,6 @@ class LakeTable:
                     work.append((f"{rel_dir}/{sub}/{fn}", bucket, os.path.join(bdir, fn)))
         # footer reads are tiny but latency-bound — a thread pool keeps
         # this commit-path step O(files/threads) driver-side
-        from concurrent.futures import ThreadPoolExecutor
-
         order_col = c["order_col"]
         with ThreadPoolExecutor(max_workers=16) as pool:
             stats = list(
@@ -1787,7 +1720,8 @@ class LakeTable:
                 # merge-on-read: delta entries carry kind+seq (the
                 # writing snapshot id — the read-time LWW tiebreak);
                 # base entries stay field-free for manifest size
-                **({"kind": "delta", "seq": int(seq)} if kind == "delta" else {}),
+                **({"kind": "delta", "seq": c["snapshot_id"] + 1}
+                   if kind == "delta" else {}),
             }
             for (rel_path, bucket, _), (kmin, kmax, has_del, omin, omax, n_rows)
             in zip(work, stats)
@@ -1959,25 +1893,14 @@ class LakeTable:
             "_bucket", self._bucket_expr(F.col(c["key"]))
         )
         expired = F.col(_DELETED) & (F.col(order_col) <= F.lit(older_than))
-
-        from pyspark.sql import Observation
-
-        obs = Observation("gc-tombstones")
-        kept = cur.observe(
-            obs, F.sum(expired.cast("long")).alias("dropped")
-        ).filter(~expired)
-        new_files = self._write_data(
-            kept, c, self._data_dir(c["snapshot_id"] + 1),
-            n_parts=max(len({f['bucket'] for f in hit}), 1),
+        new_files, counts = self._write_files(
+            c, cur, [f["bucket"] for f in hit],
+            {"dropped": F.sum(expired.cast("long"))}, keep=~expired,
         )
-        try:
-            dropped = int(obs.get.get("dropped") or 0)
-        except Exception:
-            # zero surviving rows: AQE's empty-relation propagation can
-            # eliminate the write subtree, leaving the Observation
-            # unevaluated — recount the expired winners directly (rare
-            # path, one extra scan of the already-pruned hit set)
-            dropped = cur.filter(expired).count()
+        # nothing written = every resolved row expired, and the write
+        # step reports zero for a write AQE reduced to nothing: count
+        # them here (rare path, one scan of the already-pruned hit set)
+        dropped = counts["dropped"] if new_files else cur.filter(expired).count()
         self._next_commit(
             c, "gc_tombstones", carry + new_files,
             lineage={"rows_dropped": dropped},
@@ -2023,11 +1946,17 @@ class LakeTable:
         manifest entry's file exists, schema-version pointers resolve,
         key ranges are ordered, batch fences are unique, and the
         commit parent chain walks back to the create commit without
-        cycles. ``full=True`` adds ONE data scan over all files:
-        per-file row counts, key ranges, and bucket assignment must
-        match the manifest (compared driver-side via
-        ``input_file_name``), and no live key may appear in two files
-        (the CoW invariant). Returns {"ok", "issues", "checked"}."""
+        cycles, and no delta file's seq exceeds the snapshot id (reads
+        rank a delta by its seq, so a larger one would outrank the
+        deltas committed after it). ``full=True`` reads every file's parquet
+        footer schema on the driver — each must hold ``_seq``,
+        ``_deleted`` and every column of its manifest schema version,
+        since the scan's explicit schema would silently null-fill a
+        missing one — and adds ONE data scan over all files: per-file
+        row counts, key ranges, and bucket assignment must match the
+        manifest (compared driver-side via ``input_file_name``), and no
+        live key may appear in two files (the CoW invariant). Returns
+        {"ok", "issues", "checked"}."""
         c = self.commit()
         issues: list[str] = []
         for f in c["files"]:
@@ -2040,6 +1969,8 @@ class LakeTable:
                 issues.append(f"inverted key range on {f['path']}")
             if not (0 <= f["bucket"] < c["n_buckets"]):
                 issues.append(f"bucket out of range on {f['path']}")
+            if f.get("kind") == "delta" and int(f["seq"]) > c["snapshot_id"]:
+                issues.append(f"delta seq above snapshot id on {f['path']}")
         batches = c.get("batches", [])
         if len(batches) != len(set(batches)):
             issues.append("duplicate batch ids in the fence list")
@@ -2060,6 +1991,11 @@ class LakeTable:
 
         checked = {"files": len(c["files"]), "scanned": False}
         if full and c["files"]:
+            with ThreadPoolExecutor(max_workers=16) as pool:
+                issues += [
+                    m for m in pool.map(lambda f: self._footer_issue(c, f), c["files"])
+                    if m
+                ]
             key = c["key"]
             expected = {
                 f["path"]: f for f in c["files"]
@@ -2141,6 +2077,22 @@ class LakeTable:
             checked["scanned"] = True
         return {"ok": not issues, "issues": issues, "checked": checked}
 
+    def _footer_issue(self, c: dict, f: dict) -> str | None:
+        """The footer-schema check of ``validate(full=True)`` for one
+        entry of commit ``c``: the physical columns it lacks, or None."""
+        import pyarrow.parquet as pq
+
+        path = os.path.join(self.path, f["path"])
+        if not os.path.exists(path) or not 0 <= f["schema_version"] < len(c["schemas"]):
+            return None  # reported by the metadata checks
+        want = [x["name"] for x in c["schemas"][f["schema_version"]]] + [_SEQ, _DELETED]
+        try:
+            names = set(pq.read_schema(path).names)
+        except Exception as e:
+            return f"unreadable parquet footer on {f['path']}: {e}"
+        missing = [n for n in want if n not in names]
+        return f"file lacks columns {missing}: {f['path']}" if missing else None
+
     def compact_small_files(self, small_ratio: float = 0.25) -> dict:
         """Targeted compaction: rewrite ONLY the buckets whose average
         file is below ``small_ratio × max_file_rows`` (or whose files
@@ -2203,10 +2155,7 @@ class LakeTable:
         rows = self._resolved_entries_df(c, hit).withColumn(
             "_bucket", self._bucket_expr(F.col(c["key"]))
         )
-        new_files = self._write_data(
-            rows, c, self._data_dir(c["snapshot_id"] + 1),
-            n_parts=max(len({f['bucket'] for f in hit}), 1),
-        )
+        new_files, _ = self._write_files(c, rows, [f["bucket"] for f in hit])
         self._next_commit(
             c, "compact", carry + new_files,
             lineage={"files_before": len(hit), "files_after": len(new_files)},
@@ -2242,9 +2191,7 @@ class LakeTable:
             "_bucket",
             F.pmod(F.xxhash64(F.col(c["key"])), F.lit(n_buckets)).cast("int"),
         )
-        new_files = self._write_data(
-            rows, c, self._data_dir(c["snapshot_id"] + 1), n_parts=n_buckets
-        )
+        new_files, _ = self._write_files(c, rows, range(n_buckets))
         self._next_commit(
             c, f"rebucket:{c['n_buckets']}->{n_buckets}", new_files,
             lineage={"files_before": len(c["files"]),

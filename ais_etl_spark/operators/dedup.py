@@ -132,35 +132,6 @@ def distinct_shingle_rows(
     ).distinct()
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 16,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """(id, j, minhash_j) for j in 0..k-1.
-
-    Shuffle-lean formulation: all k hashes are computed per shingle
-    row and min-aggregated as k columns in ONE hash-aggregate — the
-    map-side combiner reduces each partition to one row per doc before
-    the shuffle (no k× row blowup, no crossJoin); a final stack()
-    unpivots to the (id, j, h) shape. Values are identical to the
-    naive explode×k formulation the DuckDB oracle runs.
-    Docs with < shingle_n tokens produce no signature."""
-    sh = df.select(
-        F.col(id_col), F.explode(shingles(F.col(text_col), shingle_n)).alias("s")
-    )
-    mins = [
-        F.min(_mh(F.lit(j), F.col("s"))).alias(f"_h{j}") for j in range(k)
-    ]
-    agg = sh.groupBy(id_col).agg(*mins)
-    stack = ", ".join(f"{j}, _h{j}" for j in range(k))
-    return agg.select(
-        F.col(id_col), F.expr(f"stack({k}, {stack}) as (j, h)")
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",

@@ -121,6 +121,50 @@ def test_gc_tombstones_file_granular(spark, tmpdir_path):
     assert tbl.merge(ev(spark, [(1, "I", "u1", T(1), "t1")]), "b1") == {}
 
 
+@pytest.mark.parametrize("writer", ["cow", "mor", "gc-cow", "gc-mor"])
+def test_write_of_no_rows_commits_exact_counters(spark, tmpdir_path, writer):
+    """A write left with no rows can leave its Observation unevaluated
+    (AQE removes the empty write); the one write step then reports
+    zero for every counter. A fully malformed batch onto an empty
+    table commits all-zero lineage counters in either merge mode;
+    gc_tombstones where every row of every hit file is an expired
+    tombstone reports each dropped tombstone and keeps every live
+    row."""
+    t = LakeTable.create(spark, tmpdir_path, SCHEMA, n_buckets=4)
+    if writer in ("cow", "mor"):
+        bad = [(1, "X", "u1", T(1), "a"), (2, "I", None, T(1), "b")]
+        lin = t.merge(ev(spark, bad), "b1", mode=writer)
+        counters = (
+            ("inserts", "updates", "deletes", "stale_noops")
+            if writer == "cow" else ("upserts", "tombstones")
+        )
+        assert lin["malformed"] == 2 and lin["files_written"] == 0
+        assert {k: lin[k] for k in counters} == dict.fromkeys(counters, 0)
+        assert lin.get("rows_after", 0) == 0
+        (row,) = t.lineage().collect()
+        assert row.malformed == 2
+        assert {k: row[k] for k in counters} == dict.fromkeys(counters, 0)
+        assert t.read().count() == 0
+        return
+    live = [(i, "I", f"u{i}", T(i), f"t{i}") for i in range(12)]
+    t.merge(ev(spark, live), "b1")
+    # delete every key of one bucket: the files a gc reads in it then
+    # resolve to tombstones only (CoW: rewritten tombstone-only files;
+    # MoR: a tombstone delta folded with its base file)
+    b = t.commit()["files"][0]["bucket"]
+    dead = sorted(
+        r.url for r in t.read().filter(t._bucket_expr(F.col("url")) == b).collect()
+    )
+    deletes = [(100 + i, "D", u, T(50), None) for i, u in enumerate(dead)]
+    t.merge(ev(spark, deletes), "b2", mode=writer.split("-")[1])
+    res = t.gc_tombstones(older_than=T(60))
+    assert res["rows_dropped"] == len(dead) and res["files_rewritten"] > 0
+    assert t.commit()["lineage"] == {"rows_dropped": len(dead)}
+    assert {r.url for r in t.read().collect()} == {r[2] for r in live} - set(dead)
+    assert t.read(include_internal=True).filter("_deleted").count() == 0
+    assert t.validate(full=True)["ok"]
+
+
 def test_schema_add_and_rename_without_rewrite(spark, tbl):
     tbl.merge(ev(spark, [(1, "I", "u1", T(1), "a")]), "b1")
     files_before = [f["path"] for f in tbl.commit()["files"]]
@@ -498,6 +542,39 @@ def test_second_writer_loses_with_commit_conflict(spark, tmpdir_path):
     ]
 
 
+def test_racing_merge_writers_keep_their_own_data_files(spark, tmpdir_path):
+    """Two writers merge onto snapshot 0 at once: the first runs its
+    whole merge inside the second's publish. Each write attempt lands
+    in a data directory of its own (in one directory named by the
+    expected snapshot id, the first write would fail with
+    PATH_ALREADY_EXISTS), the second writer gets CommitConflict, the
+    winner's manifest lists only the winner's files, and
+    expire_snapshots removes the loser's unreferenced directory."""
+    LakeTable.create(spark, tmpdir_path, SCHEMA, n_buckets=4)
+    first, second = LakeTable(spark, tmpdir_path), LakeTable(spark, tmpdir_path)
+    encode = second._encode_manifest
+
+    def first_merges_meanwhile(commit):
+        # runs inside second's publish, after its data files are written
+        first.merge(ev(spark, [(1, "I", "u1", T(1), "won")]), "b1")
+        return encode(commit)
+
+    second._encode_manifest = first_merges_meanwhile
+    lost = [(2, "I", "u2", T(1), "lost"), (3, "I", "u3", T(1), "lost")]
+    with pytest.raises(CommitConflict, match="already committed"):
+        second.merge(ev(spark, lost), "b2")
+    data = os.path.join(tmpdir_path, "data")
+    assert len(os.listdir(data)) == 2  # one directory per attempt
+    fresh = LakeTable(spark, tmpdir_path)
+    head = fresh.commit()
+    assert head["snapshot_id"] == 1 and head["batches"] == ["b1"]
+    assert len(head["files"]) == 1
+    assert [(r.url, r.text) for r in fresh.read().collect()] == [("u1", "won")]
+    assert fresh.validate(full=True)["ok"]
+    fresh.expire_snapshots(keep_last=1)
+    assert os.listdir(data) == [head["files"][0]["path"].split("/")[1]]
+
+
 def test_every_child_commit_carries_its_parents_state(spark, tmpdir_path):
     """Every snapshot-producing operation derives its commit from the
     head: the new head (read back from disk) carries the parent's
@@ -632,6 +709,43 @@ def test_validate_integrity_audit(spark, tbl, tmpdir_path):
     res = t2.validate(full=True)
     assert not res["ok"]
     assert any("row count mismatch" in i for i in res["issues"])
+
+
+def test_validate_checks_footer_schemas_and_delta_seqs(spark, tmpdir_path):
+    """validate(full=True) compares every data file's parquet footer
+    with its manifest schema version: a hand-placed file without _seq
+    (which the scan's explicit schema would null-fill, silently
+    skewing LWW) is reported. A delta entry whose seq is above its
+    snapshot id is reported too: reads rank deltas by seq, so it would
+    outrank the deltas committed after it."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    t = LakeTable.create(spark, tmpdir_path, SCHEMA, n_buckets=4)
+    t.merge(ev(spark, [(1, "I", "u1", T(1), "a"), (2, "I", "u2", T(2), "b")]), "b1")
+    t.merge(ev(spark, [(3, "U", "u1", T(3), "a2")]), "b2", mode="mor")
+    assert t.validate(full=True)["ok"]
+
+    victim = next(f for f in t.commit()["files"] if f.get("kind") != "delta")
+    p = os.path.join(tmpdir_path, victim["path"])
+    pq.write_table(pq.read_table(p).drop_columns(["_seq"]), p)
+    d, name = os.path.split(p)
+    os.remove(os.path.join(d, f".{name}.crc"))  # Hadoop's stale checksum
+    assert t.validate()["ok"]  # the metadata checks cannot see it
+    res = t.validate(full=True)
+    assert res["issues"] == [f"file lacks columns ['_seq']: {victim['path']}"]
+
+    cpath = t._commit_path(t.current_snapshot_id())
+    with open(cpath) as f:
+        c = json.load(f)
+    for e in c.get("files") or c["files_added"]:
+        if e.get("kind") == "delta":
+            e["seq"] = c["snapshot_id"] + 1
+    with open(cpath, "w") as f:
+        json.dump(c, f)
+    res = LakeTable.load(spark, tmpdir_path).validate()
+    assert any("delta seq above snapshot id" in i for i in res["issues"])
 
 
 def test_ddl_fence_replay_exactly_once_by_fence_id(spark, tbl):

@@ -134,6 +134,25 @@ def test_mixed_modes_commute(spark, tmpdir_path):
     assert rows_of(cow) == rows_of(mix)
 
 
+def test_cow_merge_keeps_the_read_time_winner_on_exact_ties(spark, tmpdir_path):
+    """A base row and a delta row tie exactly on (order, seq) — one
+    event id redelivered with another payload. Reads pick the delta's
+    row (the later file seq); a CoW merge that rewrites both files
+    must resolve the key with the same rule, not by payload order."""
+    t = LakeTable.create(spark, tmpdir_path, SCHEMA, n_buckets=1)
+    t.merge(ev(spark, [(5, "I", "u1", T(1), "zz-base")]), "b0")
+    t.merge(ev(spark, [(5, "U", "u1", T(1), "aa-delta")]), "b1", mode="mor")
+    assert [r.text for r in t.lookup("u1").collect()] == ["aa-delta"]
+    assert [r.text for r in t.read().collect()] == ["aa-delta"]
+    # keys on both sides of u1: the batch's range hits both u1 files
+    lin = t.merge(ev(spark, [(6, "I", "u0", T(2), "x"), (7, "I", "u2", T(2), "y")]), "b2")
+    assert lin["files_rewritten"] == 2
+    assert t._delta_buckets(t.commit()["files"]) == set()
+    assert {r.url: r.text for r in t.read().collect()} == {
+        "u0": "x", "u1": "aa-delta", "u2": "y"
+    }
+
+
 def test_mor_replay_is_fenced(spark, tmpdir_path):
     t = LakeTable.create(spark, tmpdir_path, SCHEMA, n_buckets=4)
     t.merge(ev(spark, B1), "b1", mode="mor")
