@@ -66,16 +66,10 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:
-    """Spread ``df`` over at least one partition per core — the guide
-    §2.5 input-skew fix: a one-file parquet scan is one task, so every
-    map-side operator above it ran on one core. A no-op (no shuffle)
-    when the input already has that many partitions, as a many-split
-    scan at scale does. Planning the narrow scan to count its
-    partitions launches no job."""
-    cores = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= cores:
-        return df
-    return df.repartition(cores)
+    """Spread ``df`` over one partition per core — the guide §2.5
+    input-skew fix: a one-file parquet scan is one task, so every
+    map-side operator above it ran on one core."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def _ms(col) -> "F.Column":

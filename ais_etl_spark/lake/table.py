@@ -734,7 +734,7 @@ class LakeTable:
             # point lookup: the predicate sits BELOW the groupBy, so it
             # pushes down to the parquet scan's row-group stats
             df = df.filter(F.col(c["key"]) == key_value)
-        return self._resolve_lww_rows(c, df)
+        return self._resolve_lww_rows(c, df).drop(_FILESEQ)
 
     def _resolve_lww_rows(self, c: dict, df: DataFrame, **aggs) -> DataFrame:
         """The one per-key LWW rule, shared by reads, the CoW merge and
@@ -742,9 +742,10 @@ class LakeTable:
         _seq, _fileseq), so the manifest seq of the file a row came
         from breaks exact (order, seq) ties toward the later-committed
         copy. ``df`` must carry the current schema columns +
-        ``_seq``/``_deleted``/``_fileseq``. ``aggs`` (name → per-key
-        aggregate) are added as output columns, and with them the
-        winner's ``_fileseq`` — the CoW merge counts from these."""
+        ``_seq``/``_deleted``/``_fileseq``; the output carries them
+        too, ``_fileseq`` being the winner's. ``aggs`` (name → per-key
+        aggregate) are added as output columns — the CoW merge counts
+        from these."""
         key = c["key"]
         order_col = c["order_col"]
         payload = [
@@ -757,7 +758,6 @@ class LakeTable:
                 F.col(_DELETED), *[F.col(p) for p in payload],
             )
         ).alias("w")
-        extra = [F.col(f"w.{_FILESEQ}").alias(_FILESEQ), *aggs] if aggs else []
         return df.groupBy(key).agg(
             w, *[a.alias(n) for n, a in aggs.items()]
         ).select(
@@ -766,7 +766,8 @@ class LakeTable:
             *[F.col(f"w.{p}").alias(p) for p in payload],
             F.col(f"w.{_SEQ}").alias(_SEQ),
             F.col(f"w.{_DELETED}").alias(_DELETED),
-            *extra,
+            F.col(f"w.{_FILESEQ}").alias(_FILESEQ),
+            *aggs.keys(),
         )
 
     # below this delta-rows/base-rows ratio the dirty-bucket read uses
@@ -808,10 +809,10 @@ class LakeTable:
             delta_df = self._entries_df(c, delta_files, with_fileseq=True)
             base_df = self._entries_df(c, base_files, with_fileseq=True)
             dkeys = delta_df.select(key).distinct()
-            untouched = base_df.join(dkeys, key, "left_anti").drop(_FILESEQ)
+            untouched = base_df.join(dkeys, key, "left_anti")
             touched = base_df.join(dkeys, key, "left_semi").unionByName(delta_df)
             resolved = self._resolve_lww_rows(c, touched)
-            out = untouched.unionByName(resolved)
+            out = untouched.unionByName(resolved).drop(_FILESEQ)
         else:
             out = self._resolve_lww(c, dirty_files)
         if not clean:
@@ -1644,6 +1645,7 @@ class LakeTable:
         deltas whose seq is the new snapshot id. Returns the manifest
         entries and the counter values; the caller commits."""
         snap_id = c["snapshot_id"] + 1
+        counted = rows
         if counters:
             obs = Observation()
             rows = rows.observe(obs, *[e.alias(n) for n, e in counters.items()])
@@ -1662,12 +1664,17 @@ class LakeTable:
         except Exception:
             # AQE's empty-relation propagation can eliminate the write
             # subtree of empty rows, leaving the Observation
-            # unevaluated; every counter over no rows is zero. Any
-            # written row means a REAL observation error — zeroing the
-            # counters would corrupt the lineage, so re-raise.
+            # unevaluated. Any written row means a REAL observation
+            # error — zeroing the counters would corrupt the lineage,
+            # so re-raise. Nothing written and no ``keep``: the rows
+            # were empty and every counter is zero. With ``keep`` the
+            # rows may all have been filtered out, so count them with
+            # one aggregate pass.
             if any(f.get("n_rows") for f in files):
                 raise
-            counts = {}
+            counts = {} if keep is None else counted.agg(
+                *[e.alias(n) for n, e in counters.items()]
+            ).first().asDict()
         return files, {n: int(counts.get(n) or 0) for n in counters}
 
     def _write_data(
@@ -1897,10 +1904,7 @@ class LakeTable:
             c, cur, [f["bucket"] for f in hit],
             {"dropped": F.sum(expired.cast("long"))}, keep=~expired,
         )
-        # nothing written = every resolved row expired, and the write
-        # step reports zero for a write AQE reduced to nothing: count
-        # them here (rare path, one scan of the already-pruned hit set)
-        dropped = counts["dropped"] if new_files else cur.filter(expired).count()
+        dropped = counts["dropped"]
         self._next_commit(
             c, "gc_tombstones", carry + new_files,
             lineage={"rows_dropped": dropped},

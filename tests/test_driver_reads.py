@@ -76,19 +76,16 @@ def test_local_frame_types_match_ddl(spark):
     assert local_frame(spark, [], ddl).schema == spark.createDataFrame([], ddl).schema
 
 
-def test_ensure_parallelism_shuffles_only_narrow_inputs(spark, tmp_path):
+def test_ensure_parallelism_spreads_one_file_scan(spark, tmp_path):
     """The contract's input-skew fix spreads a one-file scan over one
-    partition per core and leaves an input that already has that many
-    partitions alone; counting the scan's partitions runs no job."""
+    partition per core; building the plan runs no job."""
     from ais_etl_spark.contract import ensure_parallelism
 
-    cores = spark.sparkContext.defaultParallelism
     one = str(tmp_path / "one")
     spark.range(100).coalesce(1).write.parquet(one)
     narrow = spark.read.parquet(one)
+    assert narrow.rdd.getNumPartitions() == 1
     out, jobs = jobs_of(spark, lambda: ensure_parallelism(narrow))
     assert jobs == []
-    assert out.rdd.getNumPartitions() == cores
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
     assert out.count() == 100
-    wide = spark.range(100, numPartitions=cores)
-    assert ensure_parallelism(wide) is wide

@@ -125,7 +125,8 @@ def test_gc_tombstones_file_granular(spark, tmpdir_path):
 def test_write_of_no_rows_commits_exact_counters(spark, tmpdir_path, writer):
     """A write left with no rows can leave its Observation unevaluated
     (AQE removes the empty write); the one write step then reports
-    zero for every counter. A fully malformed batch onto an empty
+    zero for every counter, or, when its ``keep`` filter removed every
+    row, counts the filtered rows. A fully malformed batch onto an empty
     table commits all-zero lineage counters in either merge mode;
     gc_tombstones where every row of every hit file is an expired
     tombstone reports each dropped tombstone and keeps every live
