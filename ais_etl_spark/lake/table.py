@@ -1646,9 +1646,10 @@ class LakeTable:
         entries and the counter values; the caller commits."""
         snap_id = c["snapshot_id"] + 1
         counted = rows
+        aggs = [e.alias(n) for n, e in (counters or {}).items()]
         if counters:
             obs = Observation()
-            rows = rows.observe(obs, *[e.alias(n) for n, e in counters.items()])
+            rows = rows.observe(obs, *aggs)
         if keep is not None:
             rows = rows.filter(keep)
         files = self._write_data(
@@ -1672,9 +1673,7 @@ class LakeTable:
             # one aggregate pass.
             if any(f.get("n_rows") for f in files):
                 raise
-            counts = {} if keep is None else counted.agg(
-                *[e.alias(n) for n, e in counters.items()]
-            ).first().asDict()
+            counts = {} if keep is None else counted.agg(*aggs).first().asDict()
         return files, {n: int(counts.get(n) or 0) for n in counters}
 
     def _write_data(
