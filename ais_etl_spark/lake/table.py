@@ -9,7 +9,8 @@ Iceberg semantics, from scratch, sized for the 10^10-event design point:
   at ``_MANIFEST_DELTA_CAP``), so commit metadata IO scales with the
   files a merge touches, not with table age (Iceberg's manifest-list
   idea collapsed into the commit log). MERGE rewrites ONLY the files whose
-  key range can contain a changed key; every other file — including
+  key range can contain a changed key (all files of such a bucket when it
+  holds a merge-on-read delta); every other file — including
   sibling files of the same bucket — is carried into the new snapshot
   by reference, the same copy-on-write file-granularity story as
   Iceberg MERGE. Files are written key-sorted and split at
@@ -41,6 +42,13 @@ Iceberg semantics, from scratch, sized for the 10^10-event design point:
   replay-equality bar in BASELINE.json). :meth:`gc_tombstones` is the
   maintenance job that drops tombstones older than the source's
   lateness watermark — rewriting only the files that contain them.
+- **One file-selection step.** Every operation that takes part of a
+  snapshot (``read``, the CoW merge, ``gc_tombstones``, ``compact``)
+  picks its files through ``_split_files``, and a bucket that holds a
+  merge-on-read delta is always taken whole: each of its files may
+  hold a version of one key, so only resolution over all of them finds
+  the winner. Point lookups and ``changes`` pick by key range instead,
+  which reaches every version of the keys they need.
 - **One write step, one commit step.** Every operation that writes
   data files (both merge modes, ``gc_tombstones``, ``compact``,
   ``rebucket``) hands its rows to ``_write_files``, which names the
@@ -592,8 +600,11 @@ class LakeTable:
         the manifest level; ``order_min``/``order_max`` (datetimes)
         additionally skip files whose order-column range cannot
         intersect [order_min, order_max] — Iceberg-style metrics
-        skipping. NOTE: this prunes FILES only, it does not filter
-        rows — combine with a ``.filter`` on the order column; and its
+        skipping. Files are picked by :meth:`_split_files`, so a bucket
+        that holds a delta is read whole or not at all: a delta that
+        shadows an in-window base row is never pruned away. NOTE: this
+        prunes FILES only, it does not filter rows — combine with a
+        ``.filter`` on the order column; and its
         effectiveness depends on key↔time correlation, since files are
         written key-sorted (a change feed whose keys are uncorrelated
         with event time gets little file-level skipping, exactly as in
@@ -603,7 +614,18 @@ class LakeTable:
                 raise ValueError("pass snapshot_id OR tag, not both")
             snapshot_id = self.resolve_ref(tag)
         c = self.commit(snapshot_id)
-        files = self._select_files(c, buckets, order_min, order_max)
+        bset = None if buckets is None else set(buckets)
+        lo, hi = self._order_micros(order_min), self._order_micros(order_max)
+
+        def keep(f):
+            omin, omax = f.get("min_order"), f.get("max_order")
+            # no order stats → never skipped
+            return (bset is None or f["bucket"] in bset) and (
+                omin is None
+                or ((hi is None or omin <= hi) and (lo is None or omax >= lo))
+            )
+
+        files, _ = self._split_files(c, keep)
         out = self._resolved_entries_df(c, files)
         if not include_internal:
             out = out.filter(~F.col(_DELETED)).drop(_SEQ, _DELETED)
@@ -629,29 +651,24 @@ class LakeTable:
             dt_value = dt_value.replace(tzinfo=_dt.timezone.utc)
         return int(dt_value.timestamp() * 1_000_000)
 
-    def _select_files(self, c: dict, buckets, order_min, order_max) -> list[dict]:
+    def _split_files(self, c: dict, keep) -> tuple[list[dict], list[dict]]:
+        """The one file-selection step of every operation that takes
+        part of snapshot ``c`` (read, the CoW merge, gc_tombstones,
+        compact): ``(taken, carried)``, both in manifest order.
+        ``taken`` holds the entries ``keep`` accepts plus every other
+        file of each taken bucket that holds a delta: such a bucket may
+        hold a version of one key in each of its files, and a part of
+        it read or rewritten alone can resurrect a row a delta
+        supersedes. ``carried`` holds the rest."""
         files = c["files"]
-        if buckets is not None:
-            bset = set(buckets)
-            files = [f for f in files if f["bucket"] in bset]
-        lo = self._order_micros(order_min)
-        hi = self._order_micros(order_max)
-        if lo is not None or hi is not None:
-            # buckets holding MoR delta files are exempt from order
-            # pruning: dropping a delta file whose newer version or
-            # tombstone shadows an in-window base row would resurrect
-            # the stale base row — LWW resolution must see the whole
-            # dirty bucket. Clean buckets keep full metrics skipping.
-            dirty = {f["bucket"] for f in files if f.get("kind") == "delta"}
-            kept = []
-            for f in files:
-                omin, omax = f.get("min_order"), f.get("max_order")
-                if f["bucket"] in dirty or omin is None:
-                    kept.append(f)  # dirty bucket / no stats → never skip
-                elif (hi is None or omin <= hi) and (lo is None or omax >= lo):
-                    kept.append(f)
-            files = kept
-        return files
+        kept = [keep(f) for f in files]
+        whole = self._delta_buckets(files) & {
+            f["bucket"] for f, k in zip(files, kept) if k
+        }
+        taken, carried = [], []
+        for f, k in zip(files, kept):
+            (taken if k or f["bucket"] in whole else carried).append(f)
+        return taken, carried
 
     def _entries_df(
         self, c: dict, files: list[dict], with_fileseq: bool = False
@@ -1195,7 +1212,6 @@ class LakeTable:
         events: DataFrame,
         batch_id: str,
         post_dedup_transform=None,
-        exact_probe_files: int = 64,
         bounded_lateness_us: int | None = None,
         mode: str = "cow",
     ) -> dict:
@@ -1212,7 +1228,10 @@ class LakeTable:
         partitions, whose count AQE picks: a small batch's sub-1 MB
         shuffle coalesces into ONE partition, so the UDF runs as one
         task; only a shuffle larger than the advisory partition size
-        fans out toward ``spark.sql.shuffle.partitions``.
+        fans out toward ``spark.sql.shuffle.partitions``. The transform
+        must be row-preserving and keep the key column: it sees one
+        winner per key, and the no-hit CoW path and merge-on-read write
+        its output as it is, without a second per-key resolution.
 
         ``bounded_lateness_us``: OBSERVABLE bounded-lateness policy
         (the streaming analog of Spark's watermark drop, but with the
@@ -1251,7 +1270,8 @@ class LakeTable:
         LWW-resolved against the rows of the hit files with the
         read-time rule (``_resolve_lww_rows``; incoming rows rank
         above every committed file, so they win exact (order, seq)
-        ties) and the hit files are rewritten; with no hit file the
+        ties) and the hit files — every file of a hit bucket that holds
+        a delta — are rewritten; with no hit file the
         winners are written as they are. mor: the winners are written
         as per-bucket delta files — zero base IO.
         """
@@ -1303,14 +1323,11 @@ class LakeTable:
             )
         touched, offsets, hit_paths, malformed, n_late, batch_hwm_us = (
             self._batch_stats(
-                events, key, c, bad,
-                # mor never reads base files, so the exact-probe Spark
-                # job that refines the hit set is pure waste — disable;
-                # likewise the per-bucket key ranges exist only to pick
-                # hit files, so mor skips them and the whole stats
-                # pre-pass stays a HashAggregate
-                (1 << 30) if mode == "mor" else exact_probe_files,
-                late,
+                events, key, c, bad, late,
+                # mor never reads base files: the per-bucket key ranges
+                # exist only to pick hit files, so mor skips them, its
+                # hit set stays empty (no exact probe) and the whole
+                # stats pre-pass stays a HashAggregate
                 need_hit_files=(mode != "mor"),
             )
         )
@@ -1364,9 +1381,10 @@ class LakeTable:
         # 3. the rows to write and the counters their write job
         #    observes. CoW reads and rewrites the HIT FILES only
         #    (file-granularity: a bucket file whose key range cannot
-        #    contain an incoming key is carried by reference); merge-
+        #    contain an incoming key is carried by reference), widened
+        #    to the whole of any hit bucket that holds a delta; merge-
         #    on-read asked the pre-pass for no hit files at all
-        rewrite = [f for f in c["files"] if f["path"] in hit_paths]
+        rewrite, carry = self._split_files(c, lambda f: f["path"] in hit_paths)
         if mode == "mor":
             # the winners (tombstones included) become DELTA files; the
             # insert/update/stale split would need the base read this
@@ -1408,7 +1426,6 @@ class LakeTable:
 
         # 4. ONE write job; the counters ride along as its Observation
         new_files, counts = self._write_files(c, rows, touched, counters, kind)
-        carry = [f for f in c["files"] if f["path"] not in hit_paths]
         lineage = {
             "batch_id": batch_id,
             "snapshot_id": c["snapshot_id"] + 1,
@@ -1434,9 +1451,12 @@ class LakeTable:
         )
         return lineage
 
+    # range-pruned hit files at or above which the merge refines its hit
+    # set by exact key membership (one extra Spark job; see _batch_stats)
+    EXACT_PROBE_FILES = 64
+
     def _batch_stats(self, events: DataFrame, key: str, c: dict, bad,
-                     exact_probe_files: int = 64, late=None,
-                     need_hit_files: bool = True):
+                     late=None, need_hit_files: bool = True):
         """Pre-pass over the raw events, column-pruned to key+offset
         (never the payload), producing the three merge inputs from ONE
         map-side-combined aggregation (shuffle = at most
@@ -1484,26 +1504,18 @@ class LakeTable:
             [F.min(key).alias("_kmin"), F.max(key).alias("_kmax")]
             if need_ranges else []
         )
-        if has_off:
-            sel = [F.col(key), F.col(order_col), b, disp,
-                   F.col("source_part"), F.col("offset")]
-            gcols = ["source_part", "_b", "_disp"]
-            aggs = [
-                F.min("offset").alias("min_offset"),
-                F.max("offset").alias("max_offset"),
-                F.count("*").alias("events"),
-                *range_aggs,
-                hwm_agg,
-            ]
-        else:
-            sel = [F.col(key), F.col(order_col), b, disp]
-            gcols = ["_b", "_disp"]
-            aggs = [
-                F.count("*").alias("events"),
-                *range_aggs,
-                hwm_agg,
-            ]
-        all_rows = events.select(*sel).groupBy(*gcols).agg(*aggs).collect()
+        # the per-source-partition offset parts, when the feed has them
+        part = ["source_part", "offset"] if has_off else []
+        off_aggs = (
+            [F.min("offset").alias("min_offset"), F.max("offset").alias("max_offset")]
+            if has_off else []
+        )
+        all_rows = (
+            events.select(F.col(key), F.col(order_col), b, disp, *map(F.col, part))
+            .groupBy(*part[:1], "_b", "_disp")
+            .agg(*off_aggs, F.count("*").alias("events"), *range_aggs, hwm_agg)
+            .collect()
+        )
         malformed = sum(r["events"] for r in all_rows if r["_disp"] == 1)
         n_late = sum(r["events"] for r in all_rows if r["_disp"] == 2)
         # the high-water mark advances on every non-malformed observed
@@ -1558,7 +1570,7 @@ class LakeTable:
         # range join, restricted to the already-range-pruned entries.
         # Below the threshold the extra Spark job's fixed cost exceeds
         # the IO it saves (measured: ~1-2 s/job at 32 cores).
-        if len(hit_paths) >= exact_probe_files:
+        if len(hit_paths) >= self.EXACT_PROBE_FILES:
             hit_paths = self._exact_probe(events, key, c, hit_paths, bad | late)
         return touched, offsets, hit_paths, malformed, n_late, batch_hwm_us
 
@@ -1875,22 +1887,13 @@ class LakeTable:
 
         Merge-on-read interaction: a tombstone in a DELTA file may be
         the only thing suppressing an older live row in a base file —
-        dropping it file-locally would resurrect that row. Buckets
-        where tombstones and deltas coexist are therefore FOLDED
-        (all their files read, LWW-resolved, rewritten as base) so the
-        expiry applies to resolved winners, never to shadowing rows."""
+        dropping it file-locally would resurrect that row. Files are
+        picked by :meth:`_split_files`, so a bucket that holds a delta
+        and a tombstone is taken whole and FOLDED (LWW-resolved,
+        rewritten as base): the expiry applies to resolved winners,
+        never to shadowing rows."""
         c = self.commit()
-        dirty = self._delta_buckets(c["files"])
-        del_buckets = {
-            f["bucket"] for f in c["files"] if f.get("has_del", True)
-        }
-        fold = dirty & del_buckets
-        hit = [
-            f for f in c["files"]
-            if f.get("has_del", True) or f["bucket"] in fold
-        ]
-        hit_paths = {f["path"] for f in hit}
-        carry = [f for f in c["files"] if f["path"] not in hit_paths]
+        hit, carry = self._split_files(c, lambda f: f.get("has_del", True))
         if not hit:
             return {"files_rewritten": 0, "files_carried": len(carry),
                     "rows_dropped": 0}
@@ -2151,8 +2154,9 @@ class LakeTable:
         {files_before, files_after}."""
         c = self.commit()
         bset = set(buckets) if buckets is not None else None
-        hit = [f for f in c["files"] if bset is None or f["bucket"] in bset]
-        carry = [f for f in c["files"] if not (bset is None or f["bucket"] in bset)]
+        hit, carry = self._split_files(
+            c, lambda f: bset is None or f["bucket"] in bset
+        )
         if not hit:
             return {"files_before": len(c["files"]), "files_after": len(c["files"])}
         rows = self._resolved_entries_df(c, hit).withColumn(

@@ -370,10 +370,6 @@ class _BitReader:
             self.acc = (self.acc << 8) | b
             self.n += 8
 
-    def peek16(self) -> int:
-        self._fill()
-        return (self.acc >> (self.n - 16)) & 0xFFFF
-
     def skip(self, k: int) -> None:
         self.n -= k
 

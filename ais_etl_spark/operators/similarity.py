@@ -42,25 +42,13 @@ def _fold_sum(arr) -> "F.Column":
     return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def dot_expr(a, b) -> "F.Column":
-    return _fold_sum(F.zip_with(a, b, lambda x, y: x * y))
-
-
-def norm_expr(a) -> "F.Column":
-    return F.sqrt(_fold_sum(F.transform(a, lambda x: x * x)))
-
-
-def cosine_expr(a, b) -> "F.Column":
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
-
-
 # ---------------------------------------------------------------------------
 # Quantized-integer cosine (the fast, exactly-deterministic scoring path)
 # ---------------------------------------------------------------------------
-# The fold-left F.aggregate cosine above is deterministic but runs as an
-# interpreted per-element lambda (no codegen) — measurable on wide scans
-# and suspected in driver-recorded blowups (VERDICT r3 #4). The scoring
-# below is BOTH fast and exact: quantize each component to 6-dp int64
+# A fold-left F.aggregate cosine (``_fold_sum`` over zip_with) is
+# deterministic but runs as an interpreted per-element lambda (no
+# codegen) — measurable on wide scans and suspected in driver-recorded
+# blowups (VERDICT r3 #4). The scoring below is BOTH fast and exact: quantize each component to 6-dp int64
 # with the explicit formula floor(x·10⁶ + 0.5) (no engine round() tie
 # rule involved), compute dot/norms in int64 — EXACT, so summation
 # order cannot matter — then one float64 division + two sqrts
@@ -69,8 +57,8 @@ def cosine_expr(a, b) -> "F.Column":
 # dot at ~64·(10⁶)² ≈ 2⁴⁶ ≪ 2⁶³ (no overflow) and ≪ 2⁵³ (the int→double
 # casts are exact). Used by every scoring path: cosine_topk, lsh_topk,
 # IVF assign/probe/rank, and dedup.embedding_cosine_pairs. The
-# fold-left exprs above remain for the LSH bucket projections (sign
-# bits, margins verified) and as the documented reference arithmetic.
+# fold-left ``_fold_sum`` above remains for the LSH bucket projections
+# (sign bits, margins verified; see lsh_bucket).
 
 QSCALE = 1_000_000
 

@@ -118,12 +118,16 @@ def apply_cdc_batch(
 
     if transform is None:
         transform = enrich_events
-    if not schema_events:
-        # fast path: no DDL fences → no event_id-range pass needed
+
+    def merge(df: DataFrame, bid: str) -> dict:
         return table.merge(
-            events, batch_id=batch_id, post_dedup_transform=transform,
+            df, batch_id=bid, post_dedup_transform=transform,
             bounded_lateness_us=bounded_lateness_us, mode=merge_mode,
         )
+
+    if not schema_events:
+        # fast path: no DDL fences → no event_id-range pass needed
+        return merge(events, batch_id)
 
     lo_hi = events.agg(F.min("event_id"), F.max("event_id")).first()
     lo, hi = lo_hi[0], lo_hi[1]
@@ -144,29 +148,17 @@ def apply_cdc_batch(
         if lo is not None and lo < ev["fence_event_id"] <= hi
     ]
     if not fences:
-        return table.merge(
-            events, batch_id=batch_id, post_dedup_transform=transform,
-            bounded_lateness_us=bounded_lateness_us, mode=merge_mode,
-        )
+        return merge(events, batch_id)
 
-    lineage: dict = {}
     start = lo
     for i, ev in enumerate(fences):
         sub = events.filter(
             (F.col("event_id") >= start) & (F.col("event_id") < ev["fence_event_id"])
         )
-        lineage = table.merge(
-            sub, batch_id=f"{batch_id}.{i}", post_dedup_transform=transform,
-            bounded_lateness_us=bounded_lateness_us, mode=merge_mode,
-        )
+        merge(sub, f"{batch_id}.{i}")
         apply_schema_event(table, ev)
         start = ev["fence_event_id"]
-    tail = events.filter(F.col("event_id") >= start)
-    lineage = table.merge(
-        tail, batch_id=f"{batch_id}.tail", post_dedup_transform=transform,
-        bounded_lateness_us=bounded_lateness_us, mode=merge_mode,
-    )
-    return lineage
+    return merge(events.filter(F.col("event_id") >= start), f"{batch_id}.tail")
 
 
 def run_ingest(

@@ -362,14 +362,18 @@ def test_exact_probe_prunes_beyond_ranges(spark, tmpdir_path):
     def build(path, probe_files):
         t = LakeTable.create(spark, os.path.join(tmpdir_path, path), SCHEMA,
                              n_buckets=1, max_file_rows=2)
-        # 40 keys, 1 bucket, 2 rows/file -> ~20 files with narrow ranges
-        t.merge(ev(spark, [(i, "I", f"u{i:03d}", T(i), f"t{i}") for i in range(40)]),
-                "b1", exact_probe_files=probe_files)
-        # sparse batch: two keys at the extremes -> batch range spans
-        # the whole bucket, so range-overlap flags every file
-        lin = t.merge(ev(spark, [(100, "U", "u000", T(100), "x"),
-                                 (101, "U", "u039", T(101), "y")]),
-                      "b2", exact_probe_files=probe_files)
+        old = LakeTable.EXACT_PROBE_FILES
+        LakeTable.EXACT_PROBE_FILES = probe_files
+        try:
+            # 40 keys, 1 bucket, 2 rows/file -> ~20 files with narrow ranges
+            t.merge(ev(spark, [(i, "I", f"u{i:03d}", T(i), f"t{i}") for i in range(40)]),
+                    "b1")
+            # sparse batch: two keys at the extremes -> batch range spans
+            # the whole bucket, so range-overlap flags every file
+            lin = t.merge(ev(spark, [(100, "U", "u000", T(100), "x"),
+                                     (101, "U", "u039", T(101), "y")]), "b2")
+        finally:
+            LakeTable.EXACT_PROBE_FILES = old
         return t, lin
 
     t_range, lin_range = build("range", probe_files=10**9)  # exact pass disabled
@@ -395,7 +399,8 @@ def test_order_column_file_skipping(spark, tmpdir_path):
     c = t.commit()
     assert len(c["files"]) >= 8
     assert all(f["min_order"] is not None for f in c["files"])
-    sel = t._select_files(c, None, T(30), None)
+    lo = t._order_micros(T(30))
+    sel, _ = t._split_files(c, lambda f: f["max_order"] >= lo)
     assert 0 < len(sel) < len(c["files"])
     got = t.read(order_min=T(30)).filter(F.col("warc_ts") >= T(30)).count()
     assert got == 10

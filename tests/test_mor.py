@@ -153,6 +153,28 @@ def test_cow_merge_keeps_the_read_time_winner_on_exact_ties(spark, tmpdir_path):
     }
 
 
+def test_cow_merge_takes_a_dirty_bucket_whole(spark, tmpdir_path):
+    """One bucket, 8 keys, 4 rows per file (k00-k03, k04-k07). A MoR
+    update of k02 and k05 leaves one delta spanning both files; a CoW
+    update of k04 hits the k04-k07 file and the delta only. Rewriting
+    those two alone would turn the delta into a base file next to the
+    untouched k00-k03 file, and k02's stale base row would read again
+    beside its update: the merge must take the dirty bucket whole."""
+    t = LakeTable.create(spark, tmpdir_path, SCHEMA, n_buckets=1, max_file_rows=4)
+    t.merge(ev(spark, [(i, "I", f"k{i:02d}", T(1), "v0") for i in range(8)]), "b0")
+    assert len(t.commit()["files"]) == 2
+    t.merge(ev(spark, [(10, "U", "k02", T(2), "v1"), (11, "U", "k05", T(2), "v1")]),
+            "b1", mode="mor")
+    lin = t.merge(ev(spark, [(12, "U", "k04", T(3), "v1")]), "b2")
+    k02 = sorted(tuple(r) for r in t.read().filter(F.col("url") == "k02").collect())
+    assert [r[2] for r in k02] == ["v1"]
+    assert sorted(tuple(r) for r in t.lookup("k02").collect()) == k02
+    v = t.validate(full=True)
+    assert v["ok"], v["issues"]
+    assert lin["files_rewritten"] == 3
+    assert t._delta_buckets(t.commit()["files"]) == set()
+
+
 def test_mor_replay_is_fenced(spark, tmpdir_path):
     t = LakeTable.create(spark, tmpdir_path, SCHEMA, n_buckets=4)
     t.merge(ev(spark, B1), "b1", mode="mor")
@@ -187,8 +209,9 @@ def test_order_pruned_read_parity_on_dirty_table(spark, tmpdir_path):
     table must equal the CoW twin: a delta file whose newer version or
     tombstone shadows an in-window base row must never be pruned away
     (pruning before LWW resolution would resurrect the stale base row —
-    the r5 ADVICE latent bug). Buckets holding delta files are exempt
-    from order pruning; clean buckets keep metrics skipping."""
+    the r5 ADVICE latent bug). A bucket holding a delta file is read
+    whole once any of its files is in the window; clean buckets keep
+    metrics skipping."""
     # base at T(1); the delta rewrites u1 far in the future and
     # tombstones u2 far in the future — a read windowed to [T(0),T(10)]
     # must see NEITHER the stale u1 base row NOR the deleted u2.
@@ -207,6 +230,44 @@ def test_order_pruned_read_parity_on_dirty_table(spark, tmpdir_path):
             .collect()
         )
     assert out["mor"] == out["cow"] == [("u3", T(1), "c")]
+
+
+def test_order_pruned_read_skips_a_dirty_bucket_outside_the_window(
+    spark, tmpdir_path
+):
+    """A bucket holding a delta whose files all lie outside the window
+    is pruned like a clean one: none of its versions can pass the
+    window filter. u1 (bucket 3 of 4) is updated by a delta near its
+    base row; u9 and u3's tombstone land in the window in bucket 2,
+    whose out-of-window u3 base row must still be read with them."""
+    lo, hi = T(100), T(200)
+    upd = [(4, "U", "u1", T(2), "a2")]
+    late = [(7, "I", "u9", T(150), "new"), (8, "D", "u3", T(160), None)]
+    out, tabs = {}, {}
+    for mode in ("cow", "mor"):
+        t = tabs[mode] = LakeTable.create(
+            spark, os.path.join(tmpdir_path, mode), SCHEMA, n_buckets=4
+        )
+        t.merge(ev(spark, B1), "b0")
+        t.merge(ev(spark, upd), "b1", mode=mode)
+        t.merge(ev(spark, late), "b2", mode=mode)
+        out[mode] = sorted(
+            (r["url"], r["warc_ts"], r["text"])
+            for r in t.read(order_min=lo, order_max=hi)
+            .filter((F.col("warc_ts") >= lo) & (F.col("warc_ts") <= hi))
+            .collect()
+        )
+    assert out["mor"] == out["cow"] == [("u9", T(150), "new")]
+    mor = tabs["mor"]
+    c = mor.commit()
+    lo_us, hi_us = mor._order_micros(lo), mor._order_micros(hi)
+    taken, _ = mor._split_files(
+        c, lambda f: f["min_order"] <= hi_us and f["max_order"] >= lo_us
+    )
+    assert mor._delta_buckets(c["files"]) == {2, 3}
+    # bucket 2 is taken whole (its base file too), bucket 3 not at all
+    assert {f["bucket"] for f in taken} == {2}
+    assert len(taken) == sum(f["bucket"] == 2 for f in c["files"]) == 2
 
 
 def test_time_travel_reads_resolve_per_snapshot(spark, tmpdir_path):
@@ -260,13 +321,19 @@ _events = st.lists(
 )
 
 
-@given(_events, st.integers(min_value=1, max_value=4), st.booleans())
+@given(
+    _events,
+    st.integers(min_value=1, max_value=4),
+    st.booleans(),
+    st.lists(st.sampled_from(["cow", "mor"]), min_size=4, max_size=4),
+)
 @settings(
     max_examples=12,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-def test_property_cow_mor_parity(spark, tmpdir_path, events, n_batches, fold):
+def test_property_cow_mor_parity(spark, tmpdir_path, events, n_batches, fold,
+                                 mixed):
     import shutil
     import tempfile
 
@@ -278,19 +345,25 @@ def test_property_cow_mor_parity(spark, tmpdir_path, events, n_batches, fold):
     d = tempfile.mkdtemp(prefix="mor-prop-", dir=tmpdir_path)
     try:
         tabs = []
-        for m, sub in (("cow", "a"), ("mor", "b")):
-            t = LakeTable.create(
-                spark, os.path.join(d, sub), SCHEMA, n_buckets=4
-            )
+        # the mixed leg draws the mode per batch and keeps every key in
+        # one bucket of 2-row files, so a CoW merge can hit part of a
+        # bucket that holds a delta
+        for modes, sub, layout in (
+            (["cow"] * 4, "a", {"n_buckets": 4}),
+            (["mor"] * 4, "b", {"n_buckets": 4}),
+            (mixed, "c", {"n_buckets": 1, "max_file_rows": 2}),
+        ):
+            t = LakeTable.create(spark, os.path.join(d, sub), SCHEMA, **layout)
             for b in range(n_batches):
                 chunk = rows[b * step:(b + 1) * step]
                 if chunk:
-                    t.merge(ev(spark, chunk), f"b{b}", mode=m)
+                    t.merge(ev(spark, chunk), f"b{b}", mode=modes[b])
             tabs.append(t)
-        cow, mor = tabs
+        cow, mor, mix = tabs
         if fold:
             mor.compact_deltas()
-        assert rows_of(cow) == rows_of(mor)
+            mix.compact_deltas()
+        assert rows_of(cow) == rows_of(mor) == rows_of(mix)
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
