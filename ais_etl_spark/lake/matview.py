@@ -48,7 +48,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ais_etl_spark.lake.table import LakeTable
+from ais_etl_spark.lake.table import LakeTable, durable_write
 
 _META = "meta.json"
 
@@ -109,10 +109,7 @@ class MaterializedAggregate:
         if os.path.exists(out):  # crashed earlier attempt; rewrite
             shutil.rmtree(out)
         df.write.parquet(out)
-        tmp = os.path.join(self.path, f"{_META}.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        os.replace(tmp, os.path.join(self.path, _META))
+        durable_write(meta, os.path.join(self.path, _META))
         stale = self._vdir(version - 2)  # keep one version of history
         if version >= 2 and os.path.exists(stale):
             shutil.rmtree(stale, ignore_errors=True)

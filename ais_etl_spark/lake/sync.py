@@ -56,7 +56,7 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ais_etl_spark.lake.table import LakeTable
+from ais_etl_spark.lake.table import LakeTable, durable_write
 
 _SYNC_DIR = "_sync"
 
@@ -78,10 +78,7 @@ def read_cursor(dst: LakeTable, name: str) -> dict | None:
 def _write_cursor(dst: LakeTable, name: str, cursor: dict) -> None:
     p = _cursor_path(dst, name)
     os.makedirs(os.path.dirname(p), exist_ok=True)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(cursor, fh)
-    os.replace(tmp, p)
+    durable_write(cursor, p)
 
 
 def sync_incremental(

@@ -138,6 +138,27 @@ _LINEAGE_DDL = (
 )
 
 
+def durable_write(obj, final: str, exclusive: bool = False) -> None:
+    """Write ``obj`` as JSON to a uniquely named tmp file in ``final``'s
+    directory, fsync it, then publish it at ``final`` in one atomic
+    step: ``os.replace``, or with ``exclusive`` an ``os.link`` that
+    raises ``FileExistsError`` when the name is taken (``os.rename``
+    would silently replace it on POSIX). No tmp file outlives the
+    call."""
+    tmp = os.path.join(os.path.dirname(final), f".tmp-{uuid.uuid4().hex}.json")
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+        f.flush()
+        os.fsync(f.fileno())
+    if not exclusive:
+        os.replace(tmp, final)
+        return
+    try:
+        os.link(tmp, final)
+    finally:
+        os.remove(tmp)
+
+
 class CommitConflict(RuntimeError):
     """Another writer already published the snapshot id this commit
     was built for; nothing of this commit became visible."""
@@ -260,11 +281,15 @@ class LakeTable:
             return snap
         if not os.path.isdir(d):
             return None
-        snaps = [
-            int(f[1:-5]) for f in os.listdir(d)
+        snaps = self._snapshot_ids()
+        return snaps[-1] if snaps else None
+
+    def _snapshot_ids(self) -> list[int]:
+        """Ids of every commit file under ``_commits/``, ascending."""
+        return sorted(
+            int(f[1:-5]) for f in os.listdir(os.path.join(self.path, _COMMITS))
             if f.startswith("v") and f.endswith(".json")
-        ]
-        return max(snaps) if snaps else None
+        )
 
     def commit(self, snapshot_id: int | None = None) -> dict:
         snap = self.current_snapshot_id() if snapshot_id is None else snapshot_id
@@ -357,25 +382,6 @@ class LakeTable:
                     return enc
         return {**base, "manifest_chain": 0, "files": files}
 
-    def _durable_write(self, obj, final: str, exclusive: bool = False) -> None:
-        """Write ``obj`` as JSON to a tmp file under ``_commits/``,
-        fsync it, then publish it at ``final`` in one atomic step:
-        ``os.replace``, or with ``exclusive`` an ``os.link`` that raises
-        ``FileExistsError`` when the name is taken (``os.rename`` would
-        silently replace it on POSIX). No tmp file outlives the call."""
-        tmp = os.path.join(self.path, _COMMITS, f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as f:
-            json.dump(obj, f)
-            f.flush()
-            os.fsync(f.fileno())
-        if not exclusive:
-            os.replace(tmp, final)
-            return
-        try:
-            os.link(tmp, final)
-        finally:
-            os.remove(tmp)
-
     def _next_commit(
         self, c: dict, operation: str, files: list[dict], *,
         batch_id: str | None = None, lineage: dict | None = None,
@@ -429,7 +435,7 @@ class LakeTable:
         commit["committed_at"] = time.time()
         enc = self._encode_manifest(commit)
         try:
-            self._durable_write(
+            durable_write(
                 enc, self._commit_path(commit["snapshot_id"]), exclusive=True
             )
         except FileExistsError:
@@ -864,11 +870,7 @@ class LakeTable:
         operation, batch id, schema version, file count, and the merge
         counters. Driver-side from the commit JSONs — bounded by the
         retained snapshot count (expire_snapshots caps it)."""
-        d = os.path.join(self.path, _COMMITS)
-        snaps = sorted(
-            int(f[1:-5]) for f in os.listdir(d)
-            if f.startswith("v") and f.endswith(".json")
-        )
+        snaps = self._snapshot_ids()
         rows = []
         for s in snaps:
             c = self.commit(s)
@@ -1040,7 +1042,7 @@ class LakeTable:
                 f"pass replace=True to move it"
             )
         t[name] = int(snap)
-        self._durable_write(t, self._tags_path())
+        durable_write(t, self._tags_path())
         return int(snap)
 
     def untag(self, name: str) -> bool:
@@ -1048,7 +1050,7 @@ class LakeTable:
         if name not in t:
             return False
         del t[name]
-        self._durable_write(t, self._tags_path())
+        durable_write(t, self._tags_path())
         return True
 
     def resolve_ref(self, ref) -> int:
@@ -1115,7 +1117,7 @@ class LakeTable:
             self._stage_to = None
         if self._staged_capture is None:
             return lineage  # already-committed fence: nothing staged
-        self._durable_write(self._staged_capture, self._staged_path(batch_id))
+        durable_write(self._staged_capture, self._staged_path(batch_id))
         self._staged_capture = None
         return lineage
 
@@ -1815,7 +1817,7 @@ class LakeTable:
         full["expired_parent"] = full.get("parent")
         full["parent"] = None
         full["manifest_chain"] = 0
-        self._durable_write(full, self._commit_path(snap))
+        durable_write(full, self._commit_path(snap))
         self._cache_put(snap, full)
 
     def expire_snapshots(self, keep_last: int = 2) -> dict:
@@ -1829,11 +1831,7 @@ class LakeTable:
         {snapshots_removed, dirs_removed}."""
         import shutil
 
-        d = os.path.join(self.path, _COMMITS)
-        snaps = sorted(
-            int(f[1:-5]) for f in os.listdir(d)
-            if f.startswith("v") and f.endswith(".json")
-        )
+        snaps = self._snapshot_ids()
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
         tagged = set(self.tags().values())

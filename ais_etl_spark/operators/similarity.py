@@ -252,12 +252,36 @@ def cosine_topk(
     Exact brute force at large q is inherently n×q work — above a few
     chunks an index (ivf_topk / lsh_topk) is the right operator.
 
-    Ids keep their native type (int/string both supported). Returns
+    Ids keep their native type (int/string both supported) and must be
+    unique and non-null (``ValueError`` otherwise). Returns
     (query_id, neighbor_id, rank, cosine) — self-matches excluded.
     """
+    return _paged_topk(corpus, queries, k, vec_col, id_col, max_collect_queries)
+
+
+def _paged_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    vec_col: str,
+    id_col: str,
+    page_size: int,
+    probe_for=None,
+) -> DataFrame:
+    """The query-page loop of :func:`cosine_topk` and the inline
+    :func:`ivf_topk`: collect the queries in id-ordered pages of at
+    most ``page_size`` rows (keyset pagination on the query id), run
+    one :func:`_score_chunk_local_topk` corpus pass per page
+    (``probe_for(rows)`` gives the pass's IVF ``probe``), and rank the
+    union of the pages' local top-k rows.
+
+    Keyset pagination would silently drop a duplicate id that
+    straddles a page boundary and re-read page 1 forever after a page
+    of null ids, so a null or duplicate query id raises
+    ``ValueError``. Each page fetches one row more than it scores and
+    compares neighbours on the driver — no extra Spark job."""
     id_sql_type = dict(corpus.dtypes)[id_col]
     id_is_numeric = id_sql_type in ("tinyint", "smallint", "int", "bigint")
-
     q_sel = queries.select(
         F.col(id_col).alias("qid"),
         F.col(vec_col).cast("array<double>").alias("qv"),
@@ -271,14 +295,24 @@ def cosine_topk(
     last_qid = None
     while True:
         page = q_sel if last_qid is None else q_sel.filter(F.col("qid") > last_qid)
-        q_rows = page.orderBy("qid").limit(max_collect_queries).collect()
+        q_rows = page.orderBy("qid").limit(page_size + 1).collect()
+        ids = [r["qid"] for r in q_rows]
+        if None in ids:
+            raise ValueError(f"query {id_col} must not be null")
+        dup = next((a for a, b in zip(ids, ids[1:]) if a == b), None)
+        if dup is not None:
+            raise ValueError(f"duplicate query {id_col} {dup!r}")
         if not q_rows:
             break
-        chunk = _score_chunk_local_topk(c, q_rows, k, id_sql_type, id_is_numeric)
+        q_rows = q_rows[:page_size]
+        probe = probe_for(q_rows) if probe_for is not None else None
+        chunk = _score_chunk_local_topk(
+            c, q_rows, k, id_sql_type, id_is_numeric, probe=probe
+        )
         local = chunk if local is None else local.unionByName(chunk)
-        if len(q_rows) < max_collect_queries:
+        if len(ids) <= page_size:
             break
-        last_qid = q_rows[-1]["qid"]
+        last_qid = ids[page_size - 1]
     if local is None:
         schema = f"query_id {id_sql_type}, neighbor_id {id_sql_type}, cosine double"
         local = local_frame(corpus.sparkSession, [], schema)
@@ -641,53 +675,19 @@ def ivf_topk(
     else:
         cents = seed_centroids(corpus, n_cells, vec_col, id_col)
     cells, Cq, cn = _collect_centroid_matrix(cents, vec_col)
-
-    id_sql_type = dict(corpus.dtypes)[id_col]
-    id_is_numeric = id_sql_type in ("tinyint", "smallint", "int", "bigint")
-    q_sel = queries.select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
     np_take = min(nprobe, len(cells))
 
-    local = None
-    last_qid = None
-    max_collect_queries = 4096
-    while True:
-        page = q_sel if last_qid is None else q_sel.filter(F.col("qid") > last_qid)
-        q_rows = page.orderBy("qid").limit(max_collect_queries).collect()
-        if not q_rows:
-            break
-        # driver-side twin of ivf_probe_cells over the collected chunk:
+    def probe_for(q_rows):
+        # driver-side twin of ivf_probe_cells over the collected page:
         # quantized matmul, 6-dp round, stable argsort ⇒ cosine desc
         # with ties to the lowest cell — bit-identical probe sets
         Q = _quantize(np.array([r["qv"] for r in q_rows], dtype=np.float64))
         qn = np.sqrt(np.einsum("ij,ij->i", Q, Q).astype(np.float64))
         qcos = _round6_np((Q @ Cq.T).astype(np.float64) / (qn[:, None] * cn[None, :]))
         probe_cells = cells[np.argsort(-qcos, axis=1, kind="stable")[:, :np_take]]
-        chunk = _score_chunk_local_topk(
-            c, q_rows, k, id_sql_type, id_is_numeric,
-            probe=(cells, Cq, cn, probe_cells),
-        )
-        local = chunk if local is None else local.unionByName(chunk)
-        if len(q_rows) < max_collect_queries:
-            break
-        last_qid = q_rows[-1]["qid"]
-    if local is None:
-        schema = f"query_id {id_sql_type}, neighbor_id {id_sql_type}, cosine double"
-        local = local_frame(corpus.sparkSession, [], schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+        return cells, Cq, cn, probe_cells
+
+    return _paged_topk(corpus, queries, k, vec_col, id_col, 4096, probe_for)
 
 
 def ivf_probe_cells(

@@ -48,19 +48,29 @@ PAGES_SCHEMA: list[tuple[str, str]] = [
 ]
 
 
-def write_feed_chunks(feed: DataFrame, feed_dir: str, n_chunks: int) -> None:
-    """Materialize a feed as ``n_chunks`` parquet files in arrival order
-    (event_id ranges) — a file-based stand-in for binlog segments; the
-    file streaming source tails them like a WAL."""
-    bounds = feed.agg(F.min("event_id"), F.max("event_id")).first()
-    lo, hi = bounds[0], bounds[1]
-    span = (hi - lo + 1) if hi is not None else 0
-    step = max(1, span // n_chunks + (1 if span % n_chunks else 0))
-    os.makedirs(feed_dir, exist_ok=True)
-    for i in range(n_chunks):
-        chunk = feed.filter(
+def event_id_chunks(feed: DataFrame, n: int) -> list[DataFrame]:
+    """Split ``feed`` into ``n`` disjoint event_id ranges of equal
+    width, in event_id order — the arrival-order batches every replay
+    applies. One min/max aggregate, then ``n`` range filters. An empty
+    feed gives ``[]``."""
+    lo, hi = feed.agg(F.min("event_id"), F.max("event_id")).first()
+    if lo is None:
+        return []
+    step = (hi - lo) // n + 1
+    return [
+        feed.filter(
             (F.col("event_id") >= lo + i * step) & (F.col("event_id") < lo + (i + 1) * step)
         )
+        for i in range(n)
+    ]
+
+
+def write_feed_chunks(feed: DataFrame, feed_dir: str, n_chunks: int) -> None:
+    """Materialize a feed as ``n_chunks`` parquet files in arrival order
+    (:func:`event_id_chunks`) — a file-based stand-in for binlog
+    segments; the file streaming source tails them like a WAL."""
+    os.makedirs(feed_dir, exist_ok=True)
+    for i, chunk in enumerate(event_id_chunks(feed, n_chunks)):
         chunk.write.parquet(os.path.join(feed_dir, f"chunk-{i:05d}.parquet"))
 
 
@@ -114,7 +124,7 @@ def apply_cdc_batch(
     table's durable applied-fence set, and sub-batch ids are
     deterministic — idempotent across epoch replays.
     """
-    from ais_etl_spark.schema_evolution import apply_schema_event
+    from ais_etl_spark.schema_evolution import apply_due_schema_events, apply_schema_event
 
     if transform is None:
         transform = enrich_events
@@ -129,24 +139,20 @@ def apply_cdc_batch(
         # fast path: no DDL fences → no event_id-range pass needed
         return merge(events, batch_id)
 
-    lo_hi = events.agg(F.min("event_id"), F.max("event_id")).first()
-    lo, hi = lo_hi[0], lo_hi[1]
+    lo, hi = events.agg(F.min("event_id"), F.max("event_id")).first()
+    if lo is None:
+        return merge(events, batch_id)
     # catch-up: every fence due AT or before the batch's first event
     # applies before any row merges. This must run whether or not
     # further fences fall inside the batch — a fence with
     # fence_event_id == lo gates THIS batch's first rows, and skipping
     # it would merge them under the pre-DDL schema (dropping their new
     # column's values silently).
-    ordered_fences = sorted(schema_events or [],
-                            key=lambda e: e["fence_event_id"])
-    if lo is not None:
-        for ev in ordered_fences:
-            if ev["fence_event_id"] <= lo:
-                apply_schema_event(table, ev)
-    fences = [
-        ev for ev in ordered_fences
-        if lo is not None and lo < ev["fence_event_id"] <= hi
-    ]
+    apply_due_schema_events(table, schema_events, lo)
+    fences = sorted(
+        (ev for ev in schema_events if lo < ev["fence_event_id"] <= hi),
+        key=lambda e: e["fence_event_id"],
+    )
     if not fences:
         return merge(events, batch_id)
 

@@ -79,7 +79,7 @@ def main() -> None:
 
     from ais_etl_spark.feed import synth_cdc_feed
     from ais_etl_spark.lake import LakeTable
-    from ais_etl_spark.streaming.ingest import PAGES_SCHEMA, apply_cdc_batch, enrich_events
+    from ais_etl_spark.streaming.ingest import PAGES_SCHEMA, enrich_events, event_id_chunks
     from ais_etl_spark.transforms.curate import CURATED_PAGES_SCHEMA, curate_events
 
     schema = CURATED_PAGES_SCHEMA if args.curate else PAGES_SCHEMA
@@ -116,29 +116,16 @@ def main() -> None:
         )
         events = spark.read.parquet(feed_path)
         nb = max(1, args.micro_batches)
-        if nb > 1:
-            # chunk bounds are input metadata (like feed materialization)
-            # — computed before the timed span
-            from pyspark.sql import functions as F
-
-            lo, hi = events.agg(F.min("event_id"), F.max("event_id")).first()
-            step = (hi - lo) // nb + 1
+        # chunk bounds are input metadata (like feed materialization)
+        # — computed before the timed span
+        chunks = [events] if nb == 1 else event_id_chunks(events, nb)
         t0 = time.time()
-        if nb == 1:
-            lineage = table.merge(events, batch_id="b0",
+        for i, chunk in enumerate(chunks):
+            lineage = table.merge(chunk, batch_id=f"b{i}",
                                   post_dedup_transform=transform,
                                   mode=args.merge_mode)
-        else:
-            for i in range(nb):
-                chunk = events.filter(
-                    (F.col("event_id") >= lo + i * step)
-                    & (F.col("event_id") < lo + (i + 1) * step)
-                )
-                lineage = table.merge(chunk, batch_id=f"b{i}",
-                                      post_dedup_transform=transform,
-                                      mode=args.merge_mode)
-                if args.compact_every and (i + 1) % args.compact_every == 0:
-                    table.compact_deltas()
+            if nb > 1 and args.compact_every and (i + 1) % args.compact_every == 0:
+                table.compact_deltas()
         dt = time.time() - t0
         out = {
             "parallelism": par,

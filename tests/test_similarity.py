@@ -208,3 +208,27 @@ def test_cosine_topk_float_ids_numeric_tiebreak(spark):
     )
     got = S.cosine_topk(corpus, queries, k=2).orderBy("rank").collect()
     assert [r["neighbor_id"] for r in got] == [2.0, 9.0]
+
+
+def test_cosine_topk_rejects_a_duplicate_query_id_across_pages(spark):
+    """Keyset pagination (qid > last page's max) would drop the second
+    copy of an id that straddles a page boundary; it must raise."""
+    from ais_etl_spark.operators.similarity import cosine_topk
+
+    vecs = _md5_vecs(spark, n=8)
+    queries = vecs.filter("vec_id < 3").unionByName(vecs.filter("vec_id = 1"))
+    with pytest.raises(ValueError, match="duplicate"):
+        cosine_topk(vecs, queries, k=3, max_collect_queries=2).collect()
+
+
+def test_cosine_topk_rejects_a_null_query_id(spark):
+    """A null query id cannot be paginated past (``qid > NULL`` is
+    never true); it must raise instead of being scored or dropped."""
+    from ais_etl_spark.operators.similarity import cosine_topk
+
+    vecs = _md5_vecs(spark, n=8)
+    queries = vecs.filter("vec_id < 3").unionByName(
+        vecs.filter("vec_id = 3").withColumn("vec_id", F.lit(None).cast("long"))
+    )
+    with pytest.raises(ValueError, match="null"):
+        cosine_topk(vecs, queries, k=3, max_collect_queries=2).collect()

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from ais_etl_spark.feed import synth_cdc_feed
 from ais_etl_spark.operators.lww import lww_latest
 from ais_etl_spark.streaming import run_ingest, write_feed_chunks
-from ais_etl_spark.streaming.ingest import enrich_events
+from ais_etl_spark.streaming.ingest import enrich_events, event_id_chunks
 
 
 def _expected_final(feed):
@@ -253,3 +253,32 @@ def test_ddl_fence_at_batch_lower_bound(spark, tmpdir_path):
     apply_cdc_batch(tbl, events, "b1", schema_events=sev,
                     transform=lambda df: df)
     assert tbl.current_snapshot_id() == snap
+
+
+def _ids(df):
+    return sorted(r.event_id for r in df.select("event_id").collect())
+
+
+def test_event_id_chunks_are_ordered_disjoint_and_cover_the_feed(spark):
+    """Every replay splits its feed through event_id_chunks: the chunks
+    must be disjoint event_id ranges, in order, that together hold
+    every event — including ranges with gaps and spans that do not
+    divide evenly."""
+    for lo, hi in ((5, 1004), (5, 1005)):
+        feed = spark.range(lo, hi + 1).select(F.col("id").alias("event_id")).filter(
+            "event_id % 7 <> 3"
+        )
+        want = _ids(feed)
+        for n in (1, 2, 3, 4, 7):
+            chunks = [_ids(c) for c in event_id_chunks(feed, n)]
+            assert len(chunks) == n
+            assert [e for c in chunks for e in c] == want
+        first, second = event_id_chunks(feed, 2)
+        mid = (want[0] + want[-1]) // 2
+        assert _ids(first) == [e for e in want if e <= mid]
+        assert _ids(second) == [e for e in want if e > mid]
+
+
+def test_event_id_chunks_of_an_empty_feed_is_empty(spark):
+    feed = spark.range(0).withColumnRenamed("id", "event_id")
+    assert event_id_chunks(feed, 3) == []
