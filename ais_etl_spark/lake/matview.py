@@ -48,7 +48,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ais_etl_spark.lake.table import LakeTable, durable_write
+from ais_etl_spark.lake.log import durable_write
+from ais_etl_spark.lake.table import LakeTable
 
 _META = "meta.json"
 

@@ -56,7 +56,8 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ais_etl_spark.lake.table import LakeTable, durable_write
+from ais_etl_spark.lake.log import durable_write
+from ais_etl_spark.lake.table import LakeTable
 
 _SYNC_DIR = "_sync"
 

@@ -68,10 +68,19 @@ def event_id_chunks(feed: DataFrame, n: int) -> list[DataFrame]:
 def write_feed_chunks(feed: DataFrame, feed_dir: str, n_chunks: int) -> None:
     """Materialize a feed as ``n_chunks`` parquet files in arrival order
     (:func:`event_id_chunks`) — a file-based stand-in for binlog
-    segments; the file streaming source tails them like a WAL."""
+    segments; the file streaming source tails them like a WAL. The
+    input is persisted for the call (unless the caller cached it), so
+    its plan runs once, not once per chunk."""
     os.makedirs(feed_dir, exist_ok=True)
-    for i, chunk in enumerate(event_id_chunks(feed, n_chunks)):
-        chunk.write.parquet(os.path.join(feed_dir, f"chunk-{i:05d}.parquet"))
+    own = not feed.is_cached
+    if own:
+        feed = feed.persist()
+    try:
+        for i, chunk in enumerate(event_id_chunks(feed, n_chunks)):
+            chunk.write.parquet(os.path.join(feed_dir, f"chunk-{i:05d}.parquet"))
+    finally:
+        if own:
+            feed.unpersist()
 
 
 def enrich_events(events: DataFrame) -> DataFrame:

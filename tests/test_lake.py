@@ -952,9 +952,9 @@ def test_delta_manifest_encoding_and_reconstruction(spark, tmpdir_path):
 
 
 def test_delta_manifest_chain_cap_forces_full(spark, tmpdir_path, monkeypatch):
-    import ais_etl_spark.lake.table as table_mod
+    import ais_etl_spark.lake.log as log_mod
 
-    monkeypatch.setattr(table_mod, "_MANIFEST_DELTA_CAP", 2)
+    monkeypatch.setattr(log_mod, "_MANIFEST_DELTA_CAP", 2)
     tbl = LakeTable.create(spark, tmpdir_path, SCHEMA, n_buckets=4)
     tbl.merge(ev(spark, [(i, "I", f"u{i}", T(i), "x") for i in range(50)]), "b0")
     for i in range(1, 4):
@@ -1023,9 +1023,9 @@ def test_commit_cache_bounded(spark, tmpdir_path, monkeypatch):
     """A long-running writer must not leak driver memory through the
     commit cache: entries past the cap are evicted and transparently
     re-read (and delta-reconstructed) from disk on demand."""
-    import ais_etl_spark.lake.table as table_mod
+    import ais_etl_spark.lake.log as log_mod
 
-    monkeypatch.setattr(table_mod, "_COMMIT_CACHE_CAP", 3)
+    monkeypatch.setattr(log_mod, "_COMMIT_CACHE_CAP", 3)
     tbl = LakeTable.create(spark, tmpdir_path, SCHEMA, n_buckets=4)
     for b in range(6):
         tbl.merge(ev(spark, [(b + 1, "I" if b == 0 else "U",

@@ -282,3 +282,23 @@ def test_event_id_chunks_are_ordered_disjoint_and_cover_the_feed(spark):
 def test_event_id_chunks_of_an_empty_feed_is_empty(spark):
     feed = spark.range(0).withColumnRenamed("id", "event_id")
     assert event_id_chunks(feed, 3) == []
+
+
+def test_write_feed_chunks_derives_its_input_once(spark, tmpdir_path):
+    """``write_feed_chunks`` runs its input's plan once per row, not
+    once per chunk: a Python UDF in the input bumps an accumulator on
+    every call."""
+    calls = spark.sparkContext.accumulator(0)
+
+    def bump(i):
+        calls.add(1)
+        return i
+
+    n = 400
+    feed = spark.range(n).select(F.udf(bump, "bigint")("id").alias("event_id"))
+    feed_dir = os.path.join(tmpdir_path, "feed")
+    write_feed_chunks(feed, feed_dir, 4)
+    assert calls.value == n
+    assert not feed.is_cached
+    written = spark.read.parquet(os.path.join(feed_dir, "chunk-*.parquet"))
+    assert sorted(r.event_id for r in written.collect()) == list(range(n))
