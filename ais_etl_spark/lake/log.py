@@ -15,17 +15,17 @@ SparkSession. ``LakeTable`` extends it with the Spark data plane.
   The reference's analog is the versioned result cache
   with atomic refresh (tar2tf's ``cached.go``); Iceberg's is the
   catalog snapshot swap. Each
-  step — encode, link, ``LATEST`` hint, lineage append — is a method
-  of its own.
+  step — encode, link, ``LATEST`` hint — is a method of its own; the
+  link is the whole commit, lineage included.
 - **Exactly-once** = the commit carries ``batch_id``; a merge whose
   batch_id is already committed is a no-op replay (idempotent MERGE,
   SURVEY §4 item 2). Structured Streaming's ``foreachBatch`` epoch id
   is the batch_id, so checkpoint-resume never double-applies.
-- **Lineage/metrics**: every merge commit records per-source-partition
-  offset ranges and insert/update/delete/stale counts, and appends the
-  same rows to a ``_lineage`` parquet table (the Spark analog of
-  audio_manager's processed/error counters in the NeMo reference's
-  ``fastapi_server.py``).
+- **Lineage/metrics**: a merge's manifest records per-source-partition
+  offset ranges and insert/update/delete/stale counts, its only lineage
+  record until ``expire_snapshots`` moves the rows to ``_lineage/`` (the
+  Spark analog of audio_manager's processed/error counters in the NeMo
+  reference's ``fastapi_server.py``).
 
 Concurrency model: single writer (one streaming query / one driver),
 many readers — Iceberg's default practical deployment. Readers always
@@ -80,24 +80,47 @@ _CARRIED = ("schema_version", "schemas", "key", "order_col", "n_buckets",
             "max_file_rows")
 _FENCES = {"hwm_us": None, "applied_fences": []}
 
-# one row per source partition per merge commit (see _append_lineage)
+# one row per source partition per merge commit (see lineage_rows)
+_OFFSET_COLS = ("source_part", "min_offset", "max_offset", "events")
+_COUNTER_COLS = ("inserts", "updates", "deletes", "stale_noops", "malformed", "upserts",
+                 "tombstones")
 _LINEAGE_SCHEMA = pa.schema(
     [("batch_id", pa.string()), ("snapshot_id", pa.int64()), ("source_part", pa.int32())]
-    + [(n, pa.int64()) for n in ("min_offset", "max_offset", "events", "inserts", "updates",
-                                 "deletes", "stale_noops", "malformed", "upserts", "tombstones")]
+    + [(n, pa.int64()) for n in _OFFSET_COLS[1:] + _COUNTER_COLS]
 )
 
 
+def lineage_rows(commit: dict) -> list[dict]:
+    """``commit``'s lineage rows: one per entry of a merge's
+    ``source_offsets`` (one ``source_part = -1`` row for a feed without
+    offsets), none for a commit without a ``batch_id``."""
+    if commit.get("batch_id") is None:
+        return []
+    ln = commit["lineage"]
+    # the CoW-only split is NULL on a merge-on-read commit, the
+    # merge-on-read counters are absent (NULL) on a CoW one
+    counts = {n: ln.get(n, 0 if n == "malformed" else None) for n in _COUNTER_COLS}
+    no_offsets = {"source_part": -1, "min_offset": -1, "max_offset": -1, "events": 0}
+    return [
+        {"batch_id": commit["batch_id"], "snapshot_id": commit["snapshot_id"],
+         **{n: int(o[n]) for n in _OFFSET_COLS}, **counts}
+        for o in ln.get("source_offsets") or [no_offsets]
+    ]
+
+
 def durable_write(obj, final: str, exclusive: bool = False) -> None:
-    """Write ``obj`` as JSON to a uniquely named tmp file in ``final``'s
-    directory, fsync it, then publish it at ``final`` in one atomic
-    step: ``os.replace``, or with ``exclusive`` an ``os.link`` that
-    raises ``FileExistsError`` when the name is taken (``os.rename``
-    would silently replace it on POSIX). No tmp file outlives the
-    call."""
-    tmp = os.path.join(os.path.dirname(final), f".tmp-{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as f:
-        json.dump(obj, f)
+    """Write ``obj`` — a ``pyarrow.Table`` as parquet, anything else as
+    JSON — to a uniquely named tmp file in ``final``'s directory, fsync
+    it, then publish it at ``final`` in one atomic step:
+    ``os.replace``, or with ``exclusive`` an ``os.link`` that raises
+    ``FileExistsError`` when the name is taken (``os.rename`` would
+    silently replace it on POSIX). No tmp file outlives the call."""
+    tmp = os.path.join(os.path.dirname(final), f".tmp-{uuid.uuid4().hex}")
+    with open(tmp, "wb") as f:
+        if isinstance(obj, pa.Table):
+            pq.write_table(obj, f)
+        else:
+            f.write(json.dumps(obj).encode())
         f.flush()
         os.fsync(f.fileno())
     if not exclusive:
@@ -129,10 +152,9 @@ class TableLog:
         self.path = path
         self._commit_cache: dict[int, dict] = {}
         # write-audit-publish: while set, _write_files writes into the
-        # staged batch's data dir and _next_commit parks the commit and
-        # its lineage offsets in _staged_capture instead of publishing
+        # staged batch's data dir and _next_commit writes the commit to
+        # the batch's staged marker instead of publishing it
         self._stage_to: str | None = None
-        self._staged_capture: dict | None = None
 
     def _create(self, schema: list[tuple[str, str]], key: str, order_col: str,
                 n_buckets: int, max_file_rows: int) -> None:
@@ -300,17 +322,15 @@ class TableLog:
 
     def _next_commit(
         self, c: dict, operation: str, files: list[dict], *,
-        batch_id: str | None = None, lineage: dict | None = None,
-        offsets: list[dict] | None = None, **changes,
+        batch_id: str | None = None, lineage: dict | None = None, **changes,
     ) -> dict:
         """Derive snapshot ``c + 1`` from its parent ``c`` and publish
         it — the one place a child commit is built. The child carries
         the parent's schema state, layout, batch fences (``batch_id``
         appended when given), high-water mark and applied DDL fences;
         ``changes`` replaces any of them. While ``stage_merge`` has
-        a write-audit-publish stage open, the commit and its lineage
-        offsets are parked for it instead of published. Returns the
-        commit."""
+        a write-audit-publish stage open, the commit is written to the
+        staged marker instead of published. Returns the commit."""
         commit = {
             "snapshot_id": c["snapshot_id"] + 1,
             "parent": c["snapshot_id"],
@@ -329,23 +349,14 @@ class TableLog:
             if k in c or "schemas" not in changes:
                 commit.setdefault(k, c.get(k, empty))
         if self._stage_to is not None:
-            # lineage rows too wait for publish: a discarded staged
-            # batch never ran, as far as the lineage table is concerned
-            self._staged_capture = {"commit": commit, "offsets": offsets or []}
+            durable_write({"commit": commit}, self._staged_path(self._stage_to))
         else:
-            self._publish(commit, offsets)
+            self._write_commit(commit)
         return commit
 
-    def _publish(self, commit: dict, offsets: list[dict] | None = None) -> None:
-        """Make ``commit`` durable: the manifest, then — for a merge —
-        its lineage rows."""
-        self._write_commit(commit)
-        if commit.get("batch_id") is not None:
-            self._append_lineage(commit["lineage"], offsets)
-
     def _write_commit(self, commit: dict) -> None:
-        """Atomic publish: write a tmp file, then hard-link it to the
-        snapshot's name. The link fails when the name is taken, so a
+        """The one publish step: write a tmp file, then hard-link it to
+        the snapshot's name. The link fails when the name is taken, so a
         second writer racing for the same snapshot id gets
         :class:`CommitConflict` and the first commit survives intact."""
         commit["committed_at"] = time.time()
@@ -655,10 +666,13 @@ class TableLog:
         since staging (the staged merge resolved against a snapshot
         that is no longer current — restage on the new head); the
         staged file is left in place so the failure is inspectable.
-        On success the lineage rows become durable and the staged
-        marker is removed. Returns the commit's lineage dict."""
-        staged = self._load_staged(batch_id)
-        commit, offsets = staged["commit"], staged.get("offsets", [])
+        On success the staged marker is removed. Returns the commit's
+        lineage dict; ``{}``, removing a stale marker, when the batch
+        is already committed."""
+        if batch_id in self.committed_batch_ids():
+            self.discard_staged(batch_id)
+            return {}
+        commit = self._load_staged(batch_id)["commit"]
         head = self.current_snapshot_id()
         if commit.get("parent") != head:
             raise RuntimeError(
@@ -666,7 +680,7 @@ class TableLog:
                 f"{commit.get('parent')} but the head is now {head}; "
                 f"restage against the current head"
             )
-        self._publish(commit, offsets)
+        self._write_commit(commit)
         os.remove(self._staged_path(batch_id))
         return commit.get("lineage", {})
 
@@ -675,18 +689,18 @@ class TableLog:
         directory. True if anything was removed. Publishing committed
         NONE of it, so this is pure cleanup — no snapshot is touched.
 
-        A batch id that has been COMMITTED (published, or merged
-        directly) is refused outright: a published staged batch's data
-        files live under ``data/staged-<id>/`` and backing a live
-        snapshot — deleting them would destroy committed data (and its
-        quarantine rows)."""
-        if batch_id in self.committed_batch_ids():
-            return False
+        For a batch id that has been COMMITTED (published, or merged
+        directly) only a stale marker is removed: a published staged
+        batch's data files live under ``data/staged-<id>/`` and back a
+        live snapshot — deleting them would destroy committed data (and
+        its quarantine rows)."""
         removed = False
         p = self._staged_path(batch_id)
         if os.path.exists(p):
             os.remove(p)
             removed = True
+        if batch_id in self.committed_batch_ids():
+            return removed
         # its data dir; the dead-letter rows written while staging
         # belong to the attempt too
         for sub in (self._data_dir(stage=batch_id),
@@ -698,10 +712,12 @@ class TableLog:
         return removed
 
     def staged_batches(self) -> list[str]:
-        """Batch ids with a staged (written-not-published) commit."""
+        """Batch ids with a staged (written-not-published) commit; a
+        marker a crashed publish left for a committed batch is not."""
         if not os.path.isdir(os.path.join(self.path, _COMMITS)):
             return []
-        return sorted(self._listing("staged-"))
+        committed = self.committed_batch_ids()
+        return sorted(b for b in self._listing("staged-") if b not in committed)
 
     @classmethod
     def _footer_stats(cls, path: str, key: str, order_col: str):
@@ -791,8 +807,8 @@ class TableLog:
         unaffected (the current manifest carries its files by
         reference). TAGGED snapshots (see :meth:`tag`) are exempt —
         they are retained as self-contained islands (materialized full
-        manifests) until untagged. Returns
-        {snapshots_removed, dirs_removed}."""
+        manifests) until untagged. Dropped merges' lineage rows move to
+        ``_lineage/`` first. Returns {snapshots_removed, dirs_removed}."""
         snaps = self._snapshot_ids()
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
@@ -826,10 +842,23 @@ class TableLog:
                 if sub not in referenced:
                     shutil.rmtree(os.path.join(data_dir, sub), ignore_errors=True)
                     dirs_removed += 1
+        self._archive_lineage(drop)
         for s in drop:
             os.remove(self._commit_path(s))
             self._commit_cache.pop(s, None)
         return {"snapshots_removed": len(drop), "dirs_removed": dirs_removed}
+
+    def _archive_lineage(self, snaps: list[int]) -> None:
+        """Write the lineage rows of each merge in ``snaps`` to
+        ``_lineage/snap<id>.parquet``. Readers prefer a retained manifest,
+        so a crash before its deletion duplicates nothing."""
+        d = os.path.join(self.path, _LINEAGE)
+        for s in snaps:
+            rows = lineage_rows(self.commit(s))
+            if rows:
+                os.makedirs(d, exist_ok=True)
+                durable_write(pa.Table.from_pylist(rows, schema=_LINEAGE_SCHEMA),
+                              os.path.join(d, f"snap{s:012d}.parquet"))
 
     def table_stats(self) -> dict:
         """Metadata-only table statistics from the manifest (no scan):
@@ -915,37 +944,3 @@ class TableLog:
                 ]
         return {"ok": not issues, "issues": issues,
                 "checked": {"files": len(c["files"]), "scanned": False}}
-
-    # ------------------------------------------------------------------
-    # lineage table
-    # ------------------------------------------------------------------
-
-    def _append_lineage(self, lineage: dict, offsets: list[dict]) -> None:
-        rows = [
-            {
-                "batch_id": lineage["batch_id"],
-                "snapshot_id": lineage["snapshot_id"],
-                "source_part": int(o["source_part"]),
-                "min_offset": int(o["min_offset"]),
-                "max_offset": int(o["max_offset"]),
-                "events": int(o["events"]),
-                "inserts": lineage["inserts"],
-                "updates": lineage["updates"],
-                "deletes": lineage["deletes"],
-                "stale_noops": lineage["stale_noops"],
-                "malformed": lineage.get("malformed", 0),
-                # merge-on-read counters (NULL on CoW commits, and
-                # vice versa: a MoR commit NULLs the CoW-only split)
-                "upserts": lineage.get("upserts"),
-                "tombstones": lineage.get("tombstones"),
-            }
-            for o in (offsets or [{"source_part": -1, "min_offset": -1,
-                                   "max_offset": -1, "events": 0}])
-        ]
-        # driver-side pyarrow write: lineage is a handful of rows per
-        # commit — a Spark job for it costs seconds of fixed overhead
-        # per batch at high core counts, pyarrow costs ~nothing
-        tbl = pa.Table.from_pylist(rows, schema=_LINEAGE_SCHEMA)
-        d = os.path.join(self.path, _LINEAGE)
-        os.makedirs(d, exist_ok=True)
-        pq.write_table(tbl, os.path.join(d, f"part-{uuid.uuid4().hex}.parquet"))

@@ -53,10 +53,12 @@ from __future__ import annotations
 import os
 from concurrent.futures import ThreadPoolExecutor
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ais_etl_spark.lake.log import (
-    _DELETED, _LINEAGE, _LINEAGE_SCHEMA, _QUARANTINE, _SEQ, TableLog, durable_write,
+    _DELETED, _LINEAGE, _LINEAGE_SCHEMA, _QUARANTINE, _SEQ, TableLog, lineage_rows,
 )
 from ais_etl_spark.operators.lww import lww_latest
 from ais_etl_spark.session import arrow_schema, local_frame
@@ -430,8 +432,6 @@ class LakeTable(TableLog):
         filtered, and the single winner is picked driver-side by max
         (order_col, _seq, file seq) — the same rule as
         ``_resolve_lww`` — then dropped if it is a tombstone."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
 
         cur_cols = self.schema_cols(c)
         key_id = next(x["id"] for x in cur_cols if x["name"] == c["key"])
@@ -492,26 +492,16 @@ class LakeTable(TableLog):
         staged paths). Returns the would-be lineage dict (same content
         ``merge`` would return; ``{}`` if the batch id is already
         COMMITTED — the exactly-once fence applies to staging too)."""
-        # exactly-once fence BEFORE any cleanup: a batch that was
-        # staged-and-PUBLISHED keeps its data files under
-        # data/staged-<id>/ (publish promotes the commit JSON, it does
-        # not move files), so the unconditional discard below would
-        # rmtree live committed data on a replay of a committed batch
-        # id (e.g. a streaming restart re-staging its last epoch)
-        if batch_id in self.committed_batch_ids():
-            return {}
-        self.discard_staged(batch_id)  # replace any earlier attempt
+        # replace any earlier attempt; for a COMMITTED batch id (e.g. a
+        # streaming restart re-staging its last epoch) discard_staged
+        # removes only a stale marker, never the published batch's
+        # data/staged-<id>/ files, and merge's fence then returns {}
+        self.discard_staged(batch_id)
         self._stage_to = batch_id
-        self._staged_capture = None
         try:
-            lineage = self.merge(events, batch_id, **merge_kwargs)
+            return self.merge(events, batch_id, **merge_kwargs)
         finally:
             self._stage_to = None
-        if self._staged_capture is None:
-            return lineage  # already-committed fence: nothing staged
-        durable_write(self._staged_capture, self._staged_path(batch_id))
-        self._staged_capture = None
-        return lineage
 
     def read_staged(self, batch_id: str, include_internal: bool = False) -> DataFrame:
         """The table AS IF the staged batch were published — the AUDIT
@@ -540,7 +530,8 @@ class LakeTable(TableLog):
         """Apply a batch of CDC events (op/url/warc_ts/event_id +
         payload columns ⊆ schema) with LWW + tombstones. Idempotent on
         ``batch_id``. Returns the lineage dict of the commit (empty
-        dict if the batch was already applied).
+        dict if the batch was already applied); the commit's manifest
+        stores it and is the one file a merge commit writes.
 
         ``post_dedup_transform`` (df -> df, row-wise deterministic) is
         applied AFTER the batch-local LWW — the expensive extraction
@@ -769,7 +760,7 @@ class LakeTable(TableLog):
         }
         self._next_commit(
             c, "merge-mor" if mode == "mor" else "merge", carry + new_files,
-            batch_id=batch_id, lineage=lineage, offsets=offsets, hwm_us=hwm_us,
+            batch_id=batch_id, lineage=lineage, hwm_us=hwm_us,
         )
         return lineage
 
@@ -1432,9 +1423,23 @@ class LakeTable(TableLog):
     # ------------------------------------------------------------------
 
     def lineage(self) -> DataFrame:
-        p = os.path.join(self.path, _LINEAGE)
-        if not os.path.isdir(p):
-            return self.spark.createDataFrame(_LINEAGE_SCHEMA.empty_table())
-        # lineage files written before/after the MoR column addition
-        # may differ in columns — merge, null-padded
-        return self.spark.read.option("mergeSchema", "true").parquet(p)
+        """One row per source partition per merge ever committed: from
+        the manifest while retained (driver-built, no Spark job), then
+        from ``_lineage/snap<id>.parquet``; an older table's per-merge
+        ``part-*`` files count only for snapshots with neither."""
+        retained = self._snapshot_ids()
+        out = self.spark.createDataFrame(pa.Table.from_pylist(
+            [r for s in retained for r in lineage_rows(self.commit(s))],
+            schema=_LINEAGE_SCHEMA,
+        ))
+        d = os.path.join(self.path, _LINEAGE)
+        names = os.listdir(d) if os.path.isdir(d) else []
+        archived = [int(n[4:-8]) for n in names if n.startswith("snap")]
+        for prefix, skip in (("snap", retained), ("part-", retained + archived)):
+            paths = [os.path.join(d, n) for n in names if n.startswith(prefix)]
+            if paths:
+                out = out.unionByName(
+                    self.spark.read.schema(out.schema).parquet(*paths)
+                    .filter(~F.col("snapshot_id").isin(skip))
+                )
+        return out

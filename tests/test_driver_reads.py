@@ -8,6 +8,7 @@ so collecting them runs on the driver. A frame built by
 Python-worker task per default partition on every action."""
 
 import datetime as dt
+import os
 import uuid
 
 import pyarrow as pa
@@ -59,6 +60,19 @@ def test_empty_quarantine_and_lineage_launch_no_job(spark, tmpdir_path):
     for frame in (t.quarantine, t.lineage):
         got, jobs = jobs_of(spark, lambda: frame().collect())
         assert got == [] and jobs == [], frame.__name__
+
+
+def test_lineage_without_expiry_launches_no_job(spark, tmpdir_path):
+    """Without an expiry every lineage row comes from a retained
+    manifest, so the frame is a driver-built LocalRelation and the merges
+    wrote no ``_lineage/`` file."""
+    t = LakeTable.create(spark, tmpdir_path, SCHEMA, n_buckets=4)
+    for i, (b, mode) in enumerate(((B1, "cow"), (B2, "mor"))):
+        t.merge(spark.createDataFrame(b, EV_DDL), f"b{i}", mode=mode)
+    got, jobs = jobs_of(spark, lambda: t.lineage().collect())
+    assert sorted((r.batch_id, r.inserts) for r in got) == [("b0", 3), ("b1", None)]
+    assert jobs == []
+    assert not os.path.exists(os.path.join(tmpdir_path, "_lineage"))
 
 
 def test_local_frame_types_match_ddl(spark):

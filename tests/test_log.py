@@ -20,7 +20,9 @@ import pytest
 from hypothesis import example, given, settings, strategies as st
 
 import ais_etl_spark.lake.log as log_mod
-from ais_etl_spark.lake.log import _LINEAGE_SCHEMA, CommitConflict, TableLog
+from ais_etl_spark.lake.log import (
+    _LINEAGE_SCHEMA, CommitConflict, TableLog, lineage_rows,
+)
 
 SCHEMA = [("url", "string"), ("warc_ts", "timestamp"), ("html", "string")]
 N_BUCKETS = 4
@@ -32,11 +34,12 @@ def _new(path) -> TableLog:
     return t
 
 
-def _touch(t: TableLog, c: dict, n: int, delta: bool = False) -> list[dict]:
-    """``n`` empty files in a fresh data dir of snapshot ``c + 1``,
-    as manifest entries."""
+def _touch(t: TableLog, c: dict, n: int, delta: bool = False,
+           stage: str | None = None) -> list[dict]:
+    """``n`` empty files in a fresh data dir of snapshot ``c + 1`` (the
+    staged batch's dir with ``stage``), as manifest entries."""
     snap = c["snapshot_id"] + 1
-    rel = t._data_dir(snap_id=snap)
+    rel = t._data_dir(snap_id=snap, stage=stage)
     os.makedirs(os.path.join(t.path, rel))
     out = []
     for i in range(n):
@@ -52,17 +55,47 @@ def _touch(t: TableLog, c: dict, n: int, delta: bool = False) -> list[dict]:
     return out
 
 
-def _merge_lineage(batch_id: str, snap: int) -> dict:
-    return {"batch_id": batch_id, "snapshot_id": snap, "inserts": 1,
-            "updates": 0, "deletes": 0, "stale_noops": 0}
+def _offsets(n_parts: int) -> list[dict]:
+    return [{"source_part": p, "min_offset": 10 * p, "max_offset": 10 * p + 9,
+             "events": 10} for p in range(n_parts)]
 
 
 def _merge(t: TableLog, c: dict, batch_id: str, files: list[dict],
            offsets: list[dict] | None = None) -> dict:
-    return t._next_commit(
-        c, "merge", files, batch_id=batch_id,
-        lineage=_merge_lineage(batch_id, c["snapshot_id"] + 1), offsets=offsets,
-    )
+    lineage = {"batch_id": batch_id, "snapshot_id": c["snapshot_id"] + 1,
+               "source_offsets": offsets or [], "malformed": 2, "inserts": 1,
+               "updates": 0, "deletes": 0, "stale_noops": 0}
+    return t._next_commit(c, "merge", files, batch_id=batch_id, lineage=lineage)
+
+
+def _expected_rows(batch_id: str, snap: int, n_parts: int) -> dict:
+    """The lineage rows ``_merge`` commits, by (snapshot_id, source_part)."""
+    parts = [(p, 10 * p, 10 * p + 9, 10) for p in range(n_parts)] or [(-1, -1, -1, 0)]
+    return {
+        (snap, p): {"batch_id": batch_id, "snapshot_id": snap, "source_part": p,
+                    "min_offset": lo, "max_offset": hi, "events": n, "inserts": 1,
+                    "updates": 0, "deletes": 0, "stale_noops": 0, "malformed": 2,
+                    "upserts": None, "tombstones": None}
+        for p, lo, hi, n in parts
+    }
+
+
+def _stored_lineage(root) -> dict:
+    """The lineage rows a fresh reader finds, by (snapshot_id,
+    source_part), asserting each is found exactly once: the rows of the
+    retained merge commits' manifests plus the archived rows of every
+    other snapshot (``LakeTable.lineage``'s read rule)."""
+    t = TableLog(str(root))
+    retained = t._snapshot_ids()
+    rows = [r for s in retained for r in lineage_rows(t.commit(s))]
+    d = os.path.join(root, log_mod._LINEAGE)
+    if os.path.isdir(d):
+        assert all(n.startswith("snap") for n in os.listdir(d)), os.listdir(d)
+        tbl = pq.read_table(d, schema=_LINEAGE_SCHEMA)
+        rows += [r for r in tbl.to_pylist() if r["snapshot_id"] not in retained]
+    out = {(r["snapshot_id"], r["source_part"]): r for r in rows}
+    assert len(out) == len(rows), "a lineage row is stored twice"
+    return out
 
 
 def _content(c: dict) -> dict:
@@ -135,7 +168,8 @@ def _run_history(root: str, steps) -> None:
     t = _new(root)
     written = {0: copy.deepcopy(t.commit(0))}  # snapshot id -> expected commit
     tags: dict[str, int] = {}
-    n_batches = n_lineage_rows = n_cols = 0
+    n_batches = n_cols = 0
+    lineage: dict = {}  # rows of every merge ever committed
     for step in steps:
         c = t.commit()
         kind = step[0]
@@ -146,10 +180,9 @@ def _run_history(root: str, steps) -> None:
                 files[0] = {**files[0], "n_rows": files[0]["n_rows"] + 1}
             if with_batch:
                 n_batches += 1
-                offsets = [{"source_part": p, "min_offset": 0, "max_offset": 9,
-                            "events": 10} for p in range(n_parts)]
-                new = _merge(t, c, f"b{n_batches}", files, offsets)
-                n_lineage_rows += max(n_parts, 1)
+                new = _merge(t, c, f"b{n_batches}", files, _offsets(n_parts))
+                lineage.update(_expected_rows(f"b{n_batches}", new["snapshot_id"],
+                                              n_parts))
             else:
                 new = t._next_commit(c, "compact", files, lineage={"n": n_add})
             sid = new["snapshot_id"]
@@ -202,14 +235,12 @@ def _run_history(root: str, steps) -> None:
         assert fresh.tags() == tags
         v = fresh.validate()
         assert v["ok"], v["issues"]
+        assert _stored_lineage(root) == lineage
 
     lineage_dir = os.path.join(root, log_mod._LINEAGE)
-    if n_lineage_rows:
-        tbl = pq.read_table(lineage_dir)
-        assert tbl.num_rows == n_lineage_rows
-        assert tbl.schema.remove_metadata() == _LINEAGE_SCHEMA
-    else:
-        assert not os.path.exists(lineage_dir)
+    for name in os.listdir(lineage_dir) if os.path.isdir(lineage_dir) else []:
+        schema = pq.read_schema(os.path.join(lineage_dir, name))
+        assert schema.remove_metadata() == _LINEAGE_SCHEMA
 
 
 def test_crash_before_manifest_link_leaves_nothing(tmp_path, monkeypatch):
@@ -240,9 +271,9 @@ def test_crash_before_manifest_link_leaves_nothing(tmp_path, monkeypatch):
 
 def test_crash_after_link_before_latest(tmp_path, monkeypatch):
     """A writer that dies between the manifest link and the ``LATEST``
-    hint has committed: a fresh reader probes past the stale hint to
-    the new head, and a retry of the same commit loses with
-    CommitConflict."""
+    hint has committed, lineage included: a fresh reader probes past
+    the stale hint to the new head and finds the batch's lineage rows,
+    and a retry of the same commit loses with CommitConflict."""
     t = _new(tmp_path)
     c = t.commit()
     files = _touch(t, c, 1)
@@ -261,6 +292,7 @@ def test_crash_after_link_before_latest(tmp_path, monkeypatch):
     assert fresh.current_snapshot_id() == 1
     assert fresh.commit()["files"] == files
     assert fresh.committed_batch_ids() == {"b1"}
+    assert _stored_lineage(tmp_path) == _expected_rows("b1", 1, 0)
     with pytest.raises(CommitConflict, match="already committed"):
         _merge(t, c, "b1", files)
 
@@ -299,6 +331,88 @@ def test_crash_inside_expire_after_reroot(tmp_path, monkeypatch):
     again = TableLog(str(tmp_path))
     assert _content(again.commit(5)) == written[5]
     assert again.validate()["ok"]
+
+
+def test_crash_inside_expire_after_lineage_archive(tmp_path, monkeypatch):
+    """``expire_snapshots`` that dies after moving the dropped merges'
+    lineage rows to ``_lineage/`` and before removing any manifest
+    leaves every merge's rows readable exactly once, and a second
+    ``expire_snapshots`` completes without changing them."""
+    t = _new(tmp_path)
+    lineage: dict = {}
+    for i in range(1, 6):  # b3 has no offsets; snapshot 6 is no merge
+        c = t.commit()
+        n_parts = 0 if i == 3 else 2
+        _merge(t, c, f"b{i}", c["files"] + _touch(t, c, 1), _offsets(n_parts))
+        lineage.update(_expected_rows(f"b{i}", i, n_parts))
+    t._next_commit(t.commit(), "compact", t.commit()["files"])
+    archive = TableLog._archive_lineage
+
+    def crash(self, snaps):
+        archive(self, snaps)
+        raise OSError("crash after the lineage archive")
+
+    monkeypatch.setattr(TableLog, "_archive_lineage", crash)
+    with pytest.raises(OSError, match="after the lineage archive"):
+        t.expire_snapshots(keep_last=2)
+    monkeypatch.undo()
+
+    fresh = TableLog(str(tmp_path))
+    assert fresh._snapshot_ids() == list(range(7))
+    assert sorted(os.listdir(os.path.join(tmp_path, log_mod._LINEAGE))) == [
+        f"snap{s:012d}.parquet" for s in (1, 2, 3, 4)
+    ]
+    assert _stored_lineage(tmp_path) == lineage
+    assert fresh.expire_snapshots(keep_last=2)["snapshots_removed"] == 5
+    assert fresh._snapshot_ids() == [5, 6]
+    assert _stored_lineage(tmp_path) == lineage
+
+
+@pytest.mark.parametrize("heal", ["discard", "publish", "expire"])
+def test_crash_in_publish_after_link_leaves_a_stale_marker(tmp_path, monkeypatch, heal):
+    """A ``publish_staged`` that dies after the manifest link has
+    committed the batch but left its staged marker. The marker is
+    stale: it is not listed, ``discard_staged`` removes it but never
+    the committed data dir, ``publish_staged`` meets the exactly-once
+    fence, and it does not keep the staged data dir from expiry once
+    compaction has replaced those files."""
+    t = _new(tmp_path)
+    c = t.commit()
+    files = _touch(t, c, 2, stage="b1")
+    t._stage_to = "b1"  # stage_merge's write step
+    _merge(t, c, "b1", files, _offsets(1))
+    t._stage_to = None
+    marker = t._staged_path("b1")
+    assert t.staged_batches() == ["b1"] and t.current_snapshot_id() == 0
+
+    def crash(self, snap):
+        raise OSError("crash before LATEST")
+
+    monkeypatch.setattr(TableLog, "_point_latest", crash)
+    with pytest.raises(OSError, match="crash before LATEST"):
+        t.publish_staged("b1")
+    monkeypatch.undo()
+
+    fresh = TableLog(str(tmp_path))
+    assert fresh.committed_batch_ids() == {"b1"}
+    assert _stored_lineage(tmp_path) == _expected_rows("b1", 1, 1)
+    assert os.path.exists(marker) and fresh.staged_batches() == []
+    staged_dir = os.path.join(tmp_path, t._data_dir(stage="b1"))
+    if heal == "discard":
+        assert fresh.discard_staged("b1") is True
+        assert fresh.discard_staged("b1") is False
+    elif heal == "publish":
+        assert fresh.publish_staged("b1") == {}
+        assert fresh.current_snapshot_id() == 1
+    else:
+        c = fresh.commit()
+        fresh._next_commit(c, "compact", _touch(fresh, c, 1))
+        fresh.expire_snapshots(keep_last=1)
+        assert not os.path.exists(staged_dir)
+        return
+    assert not os.path.exists(marker)
+    assert all(os.path.exists(os.path.join(tmp_path, f["path"])) for f in files)
+    assert fresh.validate()["ok"]
 
 
 def _read_raw(root, snap: int) -> dict:

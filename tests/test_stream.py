@@ -108,6 +108,11 @@ def test_ingest_with_inline_maintenance(spark, tmpdir_path):
         if f.endswith(".json")
     ]
     assert len(commits) <= 2
+    # lineage survives expiry: one row per (batch, source partition)
+    # of every applied batch
+    pairs = [(r.batch_id, r.source_part) for r in table.lineage().collect()]
+    assert len(pairs) == len(set(pairs))
+    assert {b for b, _ in pairs} == set(table.commit()["batches"])
     # a resumed run with no new files applies nothing new
     table2 = run_ingest(
         spark, feed_dir=feed_dir, table_path=tbl_dir, checkpoint_dir=ckpt,
