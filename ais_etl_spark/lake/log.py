@@ -116,11 +116,12 @@ def durable_write(obj, final: str, exclusive: bool = False) -> None:
     ``FileExistsError`` when the name is taken (``os.rename`` would
     silently replace it on POSIX). No tmp file outlives the call."""
     tmp = os.path.join(os.path.dirname(final), f".tmp-{uuid.uuid4().hex}")
-    with open(tmp, "wb") as f:
-        if isinstance(obj, pa.Table):
+    table = isinstance(obj, pa.Table)
+    with open(tmp, "wb" if table else "w") as f:
+        if table:
             pq.write_table(obj, f)
         else:
-            f.write(json.dumps(obj).encode())
+            json.dump(obj, f)  # streamed: a full manifest is never one string
         f.flush()
         os.fsync(f.fileno())
     if not exclusive:
@@ -234,8 +235,7 @@ class TableLog:
         if snap is None:
             raise FileNotFoundError(f"no commits under {self.path}")
         if snap not in self._commit_cache:
-            with open(self._commit_path(snap)) as f:
-                c = json.load(f)
+            c = self._stored(snap)
             if "files" not in c:
                 # DELTA manifest: reconstruct the full listing from the
                 # parent (recursion memoizes every ancestor, so a chain
@@ -843,22 +843,61 @@ class TableLog:
                     shutil.rmtree(os.path.join(data_dir, sub), ignore_errors=True)
                     dirs_removed += 1
         self._archive_lineage(drop)
-        for s in drop:
+        # newest first: a dropped delta manifest that a crash leaves
+        # behind still has every ancestor it is rebuilt from
+        for s in reversed(drop):
             os.remove(self._commit_path(s))
             self._commit_cache.pop(s, None)
         return {"snapshots_removed": len(drop), "dirs_removed": dirs_removed}
 
+    def _stored(self, snap: int) -> dict:
+        """``snap``'s commit file as stored: a delta's own fields, its
+        file listing not rebuilt."""
+        with open(self._commit_path(snap)) as f:
+            return json.load(f)
+
+    def _lineage_files(self, prefix: str = "") -> list[str]:
+        d = os.path.join(self.path, _LINEAGE)
+        names = sorted(os.listdir(d)) if os.path.isdir(d) else []
+        return [os.path.join(d, n) for n in names
+                if n.startswith(prefix) and n.endswith(".parquet")]
+
     def _archive_lineage(self, snaps: list[int]) -> None:
         """Write the lineage rows of each merge in ``snaps`` to
-        ``_lineage/snap<id>.parquet``. Readers prefer a retained manifest,
-        so a crash before its deletion duplicates nothing."""
+        ``_lineage/snap<id>.parquet``, then retire an older table's
+        per-merge ``part-*`` files: one whose snapshot no commit file
+        lists is renamed to that snapshot's ``snap`` file, the others
+        (their manifests hold the rows) are removed. After a crash at
+        any step :meth:`lineage_sources` still finds each row once."""
         d = os.path.join(self.path, _LINEAGE)
         for s in snaps:
-            rows = lineage_rows(self.commit(s))
+            rows = lineage_rows(self._stored(s))
             if rows:
                 os.makedirs(d, exist_ok=True)
                 durable_write(pa.Table.from_pylist(rows, schema=_LINEAGE_SCHEMA),
                               os.path.join(d, f"snap{s:012d}.parquet"))
+        listed = set(self._snapshot_ids())
+        for p in self._lineage_files("part-"):
+            s = pq.read_table(p, columns=["snapshot_id"])["snapshot_id"][0].as_py()
+            if s in listed:
+                os.remove(p)
+            else:
+                os.replace(p, os.path.join(d, f"snap{s:012d}.parquet"))
+
+    def lineage_sources(self) -> tuple[list[dict], list[str], set[int]]:
+        """The lineage table's read rule, as ``(rows, files, retained)``:
+        the rows of every retained merge, built from its manifest, plus
+        the rows in ``files`` (``_lineage/snap<id>.parquet``, and an
+        older table's ``part-*`` until its next expiry) whose snapshot
+        is not in ``retained``."""
+        rows, retained = [], set()
+        for s in self._snapshot_ids():
+            try:  # a snapshot expired meanwhile was archived first
+                rows += lineage_rows(self._stored(s))
+            except FileNotFoundError:
+                continue
+            retained.add(s)
+        return rows, self._lineage_files(), retained
 
     def table_stats(self) -> dict:
         """Metadata-only table statistics from the manifest (no scan):

@@ -58,7 +58,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ais_etl_spark.lake.log import (
-    _DELETED, _LINEAGE, _LINEAGE_SCHEMA, _QUARANTINE, _SEQ, TableLog, lineage_rows,
+    _DELETED, _LINEAGE_SCHEMA, _QUARANTINE, _SEQ, TableLog,
 )
 from ais_etl_spark.operators.lww import lww_latest
 from ais_etl_spark.session import arrow_schema, local_frame
@@ -1423,23 +1423,12 @@ class LakeTable(TableLog):
     # ------------------------------------------------------------------
 
     def lineage(self) -> DataFrame:
-        """One row per source partition per merge ever committed: from
-        the manifest while retained (driver-built, no Spark job), then
-        from ``_lineage/snap<id>.parquet``; an older table's per-merge
-        ``part-*`` files count only for snapshots with neither."""
-        retained = self._snapshot_ids()
-        out = self.spark.createDataFrame(pa.Table.from_pylist(
-            [r for s in retained for r in lineage_rows(self.commit(s))],
-            schema=_LINEAGE_SCHEMA,
-        ))
-        d = os.path.join(self.path, _LINEAGE)
-        names = os.listdir(d) if os.path.isdir(d) else []
-        archived = [int(n[4:-8]) for n in names if n.startswith("snap")]
-        for prefix, skip in (("snap", retained), ("part-", retained + archived)):
-            paths = [os.path.join(d, n) for n in names if n.startswith(prefix)]
-            if paths:
-                out = out.unionByName(
-                    self.spark.read.schema(out.schema).parquet(*paths)
-                    .filter(~F.col("snapshot_id").isin(skip))
-                )
-        return out
+        """One row per source partition per merge ever committed, by
+        :meth:`lineage_sources`'s rule: retained merges' rows are built
+        on the driver (no Spark job), the rest read from ``_lineage/``."""
+        rows, files, retained = self.lineage_sources()
+        out = self.spark.createDataFrame(pa.Table.from_pylist(rows, schema=_LINEAGE_SCHEMA))
+        if not files:
+            return out
+        return out.unionByName(self.spark.read.schema(out.schema).parquet(*files)
+                               .filter(~F.col("snapshot_id").isin(*sorted(retained))))

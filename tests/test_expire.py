@@ -57,9 +57,9 @@ def test_expire_keeps_idempotence_log(spark, tmpdir_path):
 def test_lineage_read_rule_across_expiry(spark, tmpdir_path, monkeypatch):
     """Each merge's lineage rows appear exactly once whether they sit in
     a retained manifest, in the file expiry moved them to, or in a
-    per-merge ``part-*`` file of an older table layout — also after an
-    expiry that crashed between moving the rows and removing the
-    manifests."""
+    per-merge ``part-*`` file of an older table layout (retired by the
+    next expiry) — also after an expiry that crashed between moving the
+    rows and removing the manifests."""
     t = LakeTable.create(spark, tmpdir_path, SCHEMA, n_buckets=4)
     base = datetime(2026, 1, 1)
     for i in range(4):
@@ -92,3 +92,5 @@ def test_lineage_read_rule_across_expiry(spark, tmpdir_path, monkeypatch):
     assert rows() == before
     assert t.expire_snapshots(keep_last=2)["snapshots_removed"] == 3
     assert rows() == before
+    # the part files are retired: dropped merges' rows sit in snap files
+    assert sorted(os.listdir(d)) == [f"snap{s:012d}.parquet" for s in (1, 2)]

@@ -15,6 +15,7 @@ import shutil
 import tempfile
 from unittest import mock
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from hypothesis import example, given, settings, strategies as st
@@ -82,17 +83,13 @@ def _expected_rows(batch_id: str, snap: int, n_parts: int) -> dict:
 
 def _stored_lineage(root) -> dict:
     """The lineage rows a fresh reader finds, by (snapshot_id,
-    source_part), asserting each is found exactly once: the rows of the
-    retained merge commits' manifests plus the archived rows of every
-    other snapshot (``LakeTable.lineage``'s read rule)."""
-    t = TableLog(str(root))
-    retained = t._snapshot_ids()
-    rows = [r for s in retained for r in lineage_rows(t.commit(s))]
-    d = os.path.join(root, log_mod._LINEAGE)
-    if os.path.isdir(d):
-        assert all(n.startswith("snap") for n in os.listdir(d)), os.listdir(d)
-        tbl = pq.read_table(d, schema=_LINEAGE_SCHEMA)
-        rows += [r for r in tbl.to_pylist() if r["snapshot_id"] not in retained]
+    source_part), asserting each is found exactly once, by
+    ``TableLog.lineage_sources``'s read rule (the one
+    ``LakeTable.lineage`` serves)."""
+    rows, files, retained = TableLog(str(root)).lineage_sources()
+    if files:
+        rows += [r for r in pq.read_table(files, schema=_LINEAGE_SCHEMA).to_pylist()
+                 if r["snapshot_id"] not in retained]
     out = {(r["snapshot_id"], r["source_part"]): r for r in rows}
     assert len(out) == len(rows), "a lineage row is stored twice"
     return out
@@ -365,6 +362,97 @@ def test_crash_inside_expire_after_lineage_archive(tmp_path, monkeypatch):
     assert _stored_lineage(tmp_path) == lineage
     assert fresh.expire_snapshots(keep_last=2)["snapshots_removed"] == 5
     assert fresh._snapshot_ids() == [5, 6]
+    assert _stored_lineage(tmp_path) == lineage
+
+
+def test_crash_inside_expire_while_removing_commits(tmp_path, monkeypatch):
+    """``expire_snapshots`` that dies after removing one dropped commit
+    file leaves the other dropped snapshots readable (they are removed
+    newest first, so each keeps the ancestors its delta manifest is
+    rebuilt from), every merge's rows readable exactly once, and a
+    second ``expire_snapshots`` completes without changing them, also
+    for a reader that listed the commits before they were removed."""
+    t = _new(tmp_path)
+    lineage: dict = {}
+    for i in range(1, 6):  # each adds a file: delta manifests from 2 on
+        c = t.commit()
+        _merge(t, c, f"b{i}", c["files"] + _touch(t, c, 1), _offsets(2))
+        lineage.update(_expected_rows(f"b{i}", i, 2))
+    written = {s: _content(copy.deepcopy(t.commit(s))) for s in range(6)}
+    commits = os.path.join(tmp_path, log_mod._COMMITS)
+    remove, removed = os.remove, []
+
+    def crash(path):
+        if os.path.dirname(path) == commits and removed:
+            raise OSError("crash inside the commit removal")
+        remove(path)
+        removed.append(path)
+
+    monkeypatch.setattr(os, "remove", crash)
+    with pytest.raises(OSError, match="inside the commit removal"):
+        t.expire_snapshots(keep_last=2)
+    monkeypatch.undo()
+
+    fresh = TableLog(str(tmp_path))
+    assert removed == [fresh._commit_path(3)]
+    assert fresh._snapshot_ids() == [0, 1, 2, 4, 5]
+    for s in (0, 1, 2, 5):
+        assert _content(fresh.commit(s)) == written[s], s
+    assert _stored_lineage(tmp_path) == lineage
+    assert fresh.expire_snapshots(keep_last=2)["snapshots_removed"] == 3
+    assert fresh._snapshot_ids() == [4, 5]
+    assert _stored_lineage(tmp_path) == lineage
+    # a reader that listed the commits before that expiry removed them
+    monkeypatch.setattr(TableLog, "_snapshot_ids", lambda self: [0, 1, 2, 4, 5])
+    assert _stored_lineage(tmp_path) == lineage
+
+
+def test_expire_retires_older_lineage_part_files(tmp_path, monkeypatch):
+    """A table written before the manifest became the lineage record
+    holds one ``_lineage/part-*`` file per merge, also for snapshots an
+    older expiry removed. Reads count a part file's rows only for a
+    snapshot no commit file lists; the next expiry renames those files
+    to ``snap<id>`` files and removes the rest, and a crash inside
+    that step changes no row either."""
+    t = _new(tmp_path)
+    lineage: dict = {}
+    for i in range(1, 6):
+        c = t.commit()
+        _merge(t, c, f"b{i}", c["files"] + _touch(t, c, 1), _offsets(i % 3))
+        lineage.update(_expected_rows(f"b{i}", i, i % 3))
+    t.expire_snapshots(keep_last=3)  # snapshots 3..5 stay
+    d = os.path.join(tmp_path, log_mod._LINEAGE)
+    # the older layout: each merge's rows in a part file, expired or not;
+    # the oldest file predates the merge-on-read counter columns
+    for s in range(1, 6):
+        legacy = os.path.join(d, f"part-{s}abc.parquet")
+        if s < 3:
+            os.replace(os.path.join(d, f"snap{s:012d}.parquet"), legacy)
+        else:
+            pq.write_table(pa.Table.from_pylist(lineage_rows(t.commit(s)),
+                                                schema=_LINEAGE_SCHEMA), legacy)
+    first = os.path.join(d, "part-1abc.parquet")
+    pq.write_table(pq.read_table(first).drop(["upserts", "tombstones"]), first)
+    assert _stored_lineage(tmp_path) == lineage
+
+    c = t.commit()
+    _merge(t, c, "b6", c["files"] + _touch(t, c, 1), _offsets(1))
+    lineage.update(_expected_rows("b6", 6, 1))
+    remove, removed = os.remove, []
+
+    def crash(path):
+        if "part-" in os.path.basename(path) and removed:
+            raise OSError("crash inside the part file retirement")
+        remove(path)
+        removed.append(path)
+
+    monkeypatch.setattr(os, "remove", crash)
+    with pytest.raises(OSError, match="part file retirement"):
+        t.expire_snapshots(keep_last=2)  # drops snapshots 3 and 4
+    monkeypatch.undo()
+    assert _stored_lineage(tmp_path) == lineage
+    t.expire_snapshots(keep_last=2)
+    assert sorted(os.listdir(d)) == [f"snap{s:012d}.parquet" for s in (1, 2, 3, 4)]
     assert _stored_lineage(tmp_path) == lineage
 
 
