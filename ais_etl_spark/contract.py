@@ -1868,9 +1868,9 @@ def q_dedup_embedding_cosine(spark, sf_dir):
     pairs (equi-join on the bucket key — no crossJoin in the plan) →
     exact cosine verify. The oracle transliterates the SAME bucketed
     algorithm (hyperplanes are engine-portable md5-derived literals);
-    the exact all-pairs form stays available as
-    embedding_cosine_pairs(candidates=None) and is parity-tested in
-    tests/test_dedup.py at tiny scale."""
+    the candidate chain and the exact all-pairs form are reference code
+    in tests/pair_chain.py, parity-tested in tests/test_dedup.py at
+    tiny scale."""
     # fused bucket+score path (r6): one groupBy shuffle + an exact
     # per-bucket matmul replaces candidate-pair distinct (~n²/2^nbits
     # rows) + two vector re-attach joins + a twice-evaluated pair-level

@@ -397,8 +397,8 @@ class TableLog:
         v = c["schema_version"] if version is None else version
         return c["schemas"][v]
 
-    def spark_schema_ddl(self) -> str:
-        return ", ".join(f"{c['name']} {c['type']}" for c in self.schema_cols())
+    def spark_schema_ddl(self, commit: dict | None = None) -> str:
+        return ", ".join(f"{c['name']} {c['type']}" for c in self.schema_cols(commit))
 
     def alter_add_column(
         self, name: str, col_type: str, fence_id: int | None = None
@@ -681,7 +681,7 @@ class TableLog:
                 f"restage against the current head"
             )
         self._write_commit(commit)
-        os.remove(self._staged_path(batch_id))
+        self._drop_marker(batch_id)  # an expiry may have swept it already
         return commit.get("lineage", {})
 
     def discard_staged(self, batch_id: str) -> bool:
@@ -694,11 +694,7 @@ class TableLog:
         batch's data files live under ``data/staged-<id>/`` and back a
         live snapshot — deleting them would destroy committed data (and
         its quarantine rows)."""
-        removed = False
-        p = self._staged_path(batch_id)
-        if os.path.exists(p):
-            os.remove(p)
-            removed = True
+        removed = self._drop_marker(batch_id)
         if batch_id in self.committed_batch_ids():
             return removed
         # its data dir; the dead-letter rows written while staging
@@ -710,6 +706,14 @@ class TableLog:
                 shutil.rmtree(d, ignore_errors=True)
                 removed = True
         return removed
+
+    def _drop_marker(self, batch_id: str) -> bool:
+        """Remove ``batch_id``'s staged marker; False if it was gone."""
+        try:
+            os.remove(self._staged_path(batch_id))
+        except FileNotFoundError:
+            return False
+        return True
 
     def staged_batches(self) -> list[str]:
         """Batch ids with a staged (written-not-published) commit; a
@@ -827,6 +831,11 @@ class TableLog:
                 parent = self.commit(s).get("parent")
                 if parent is not None and parent in dropped_set:
                     self._materialize_manifest(s)
+        # a marker a publish crash left for a committed batch is stale:
+        # only the marker goes; the batch's data dir stays while a
+        # retained snapshot lists its files
+        for b in set(self._listing("staged-")) & self.committed_batch_ids():
+            self._drop_marker(b)
         # staged-not-yet-published batches (WAP) reference data dirs no
         # snapshot lists yet — expiring them would break publish_staged
         files = [f for s in keep for f in self.commit(s)["files"]] + [

@@ -435,9 +435,10 @@ class LakeTable(TableLog):
 
         cur_cols = self.schema_cols(c)
         key_id = next(x["id"] for x in cur_cols if x["name"] == c["key"])
-        out_ddl = self.spark_schema_ddl()
+        out_ddl = self.spark_schema_ddl(c)
         schema = arrow_schema(
-            out_ddl + f", {_SEQ} bigint, {_DELETED} boolean, {_FILESEQ} bigint"
+            self.spark,
+            out_ddl + f", {_SEQ} bigint, {_DELETED} boolean, {_FILESEQ} bigint",
         )
         tables = []
         for f in hits:
@@ -461,13 +462,16 @@ class LakeTable(TableLog):
             ]
             # the cast widens old narrower types and types the nulls
             tables.append(pa.Table.from_arrays(cols, schema.names).cast(schema))
-        out = pa.concat_tables(tables) if tables else schema.empty_table()
-        if resolve and out.num_rows:
-            winner = out.sort_by(
+        out = pa.concat_tables(tables) if tables else None
+        if out is not None and resolve:
+            out = out.sort_by(
                 [(n, "descending") for n in (c["order_col"], _SEQ, _FILESEQ)]
             ).slice(0, 1)
-            out = winner.slice(0, 0) if winner[_DELETED][0].as_py() else winner
-        return local_frame(self.spark, out, out_ddl)
+            if out[_DELETED][0].as_py():
+                out = None  # the winner is a tombstone
+        # a miss (no hit file, nothing read, a tombstoned winner) is
+        # the session's cached empty frame: no table is built
+        return local_frame(self.spark, [] if out is None else out, out_ddl)
 
     # ------------------------------------------------------------------
     # write-audit-publish (Iceberg's WAP pattern)

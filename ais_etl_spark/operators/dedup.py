@@ -14,8 +14,8 @@ hashing is its `md5` transformer
                                    -index join (verify step after LSH).
 - :func:`simhash_signatures`    — 32-bit SimHash per doc.
 - :func:`simhash_pairs`         — near-dup pairs by Hamming distance.
-- :func:`embedding_cosine_pairs`— semantic near-dups over an embedding
-                                   column.
+- :func:`embedding_cosine_pairs_bucketed` — semantic near-dups over an
+                                   embedding column.
 
 **Portability discipline:** every hash that feeds a DuckDB correctness
 oracle is derived from ``md5`` (bit-identical across engines); Spark's
@@ -33,8 +33,8 @@ partitioning/salting only.
   boilerplate page that floods one bucket is exactly the skew AQE
   splits. NEVER materialize the O(n²) similarity matrix; LSH candidates
   + Jaccard verification touch only colliding pairs.
-- Embedding near-dup at scale must LSH/IVF-bucket first (see
-  operators/similarity.py); the all-pairs form here is the verify step.
+- Embedding near-dup LSH-buckets first (see operators/similarity.py)
+  and scores exactly within each bucket.
 """
 
 from __future__ import annotations
@@ -629,11 +629,11 @@ def embedding_cosine_pairs_bucketed(
     ran TWICE — guide §4.4/§8: never shuffle wide payloads per pair
     when the decision needs only in-bucket geometry).
 
-    Output is row-identical to
-    ``embedding_cosine_pairs(df, candidates=lsh_candidate_pairs(df))``
-    (parity-tested): the scoring is the same quantized-exact arithmetic
-    — 6-dp int64 components whose dots/norms stay < 2^53, so the
-    float64 BLAS matmul is EXACT integer arithmetic (every product
+    Output is row-identical to that candidate chain (reference code in
+    ``tests/pair_chain.py``, parity-tested): the scoring is the same
+    quantized-exact arithmetic — 6-dp int64 components whose
+    dots/norms stay < 2^53, so the float64 BLAS matmul is EXACT
+    integer arithmetic (every product
     ≤ dim·(1e6)² and every partial sum is an exactly-representable
     integer), then the identical IEEE division and 6-dp floor-round.
     Pairs are oriented doc_a < doc_b by sorting each bucket by id.
@@ -705,43 +705,3 @@ def embedding_cosine_pairs_bucketed(
         score, f"doc_a {id_sql_type}, doc_b {id_sql_type}, cosine double"
     )
 
-
-def embedding_cosine_pairs(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.9,
-    candidates: DataFrame | None = None,
-) -> DataFrame:
-    """Semantic near-dups: pairs with cosine ≥ threshold.
-
-    Scoring = the quantized-exact Arrow cosine
-    (similarity.quantized_cosine_udf): 6-dp int64 components, integer
-    dot/norms (order-independent), one IEEE division — bit-identical
-    to the SQL oracle's transliteration and ~100× the interpreted
-    fold-left lambda on wide pair streams.
-
-    ``candidates`` (a (doc_a, doc_b) DataFrame, e.g. from
-    ``similarity.lsh_candidate_pairs``) restricts the cosine check to
-    candidate pairs via two equi-joins back to the vectors — the
-    100 TB path (this function is then the *verify* stage). Without it
-    the check is an O(n²) crossJoin — test scale / tiny-partition
-    verify only.
-    """
-    from ais_etl_spark.operators.similarity import quantized_cosine_udf
-
-    v = df.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("v")
-    )
-    a = v.select(F.col(id_col).alias("doc_a"), F.col("v").alias("va"))
-    b = v.select(F.col(id_col).alias("doc_b"), F.col("v").alias("vb"))
-    if candidates is not None:
-        pairs = candidates.select("doc_a", "doc_b").join(a, "doc_a").join(b, "doc_b")
-    else:
-        pairs = a.crossJoin(b).filter(F.col("doc_a") < F.col("doc_b"))
-    cos6 = quantized_cosine_udf()
-    return (
-        pairs.withColumn("cosine", cos6(F.col("va"), F.col("vb")))
-        .filter(F.col("cosine") >= threshold)
-        .select("doc_a", "doc_b", "cosine")
-    )

@@ -56,7 +56,7 @@ def _fold_sum(arr) -> "F.Column":
 # floor-round before any ranking. 64-dim unit-scale vectors bound the
 # dot at ~64·(10⁶)² ≈ 2⁴⁶ ≪ 2⁶³ (no overflow) and ≪ 2⁵³ (the int→double
 # casts are exact). Used by every scoring path: cosine_topk, lsh_topk,
-# IVF assign/probe/rank, and dedup.embedding_cosine_pairs. The
+# IVF assign/probe/rank, and dedup.embedding_cosine_pairs_bucketed. The
 # fold-left ``_fold_sum`` above remains for the LSH bucket projections
 # (sign bits, margins verified; see lsh_bucket).
 
@@ -785,30 +785,6 @@ def lsh_bucket(
         )
         bucket = bucket + F.when(proj > 0, F.lit(1 << b)).otherwise(F.lit(0))
     return df.withColumn("bucket", bucket)
-
-
-def lsh_candidate_pairs(
-    df: DataFrame,
-    dim: int,
-    nbits: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Candidate near-dup pairs = vectors sharing an LSH bucket:
-    bucket the corpus once, self-join on the bucket key (a plain
-    shuffle equi-join — AQE splits a hot bucket), emit distinct
-    (doc_a, doc_b). This is the candidate generator the cosine
-    verify stage (operators/dedup.embedding_cosine_pairs) consumes —
-    candidates ≈ n²/2^nbits instead of n²."""
-    b = lsh_bucket(df, dim, nbits, vec_col).select(F.col(id_col), "bucket")
-    a = b.select(F.col(id_col).alias("doc_a"), "bucket")
-    c = b.select(F.col(id_col).alias("doc_b"), "bucket")
-    return (
-        a.join(c, "bucket")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
 
 
 def lsh_topk(

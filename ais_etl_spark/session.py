@@ -76,13 +76,45 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def arrow_schema(ddl: str):
-    """The ``pyarrow.Schema`` Spark's own Arrow conversion maps a DDL
-    string to (timestamps as UTC micros, every field nullable)."""
-    from pyspark.sql.pandas.types import to_arrow_schema
+class _Schema:
+    """One DDL string's parsed forms in one session: the ``StructType``
+    (parsed once), the Arrow schema derived from it, and the empty
+    frame (built on first use)."""
+
+    __slots__ = ("struct", "arrow", "empty")
+
+    def __init__(self, struct):
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        self.struct = struct
+        self.arrow = to_arrow_schema(struct)
+        self.empty = None
+
+
+def _schema(spark: SparkSession, ddl: str) -> _Schema:
+    """The session's cached :class:`_Schema` for ``ddl``. The cache is
+    per session because a DDL parse reads session conf
+    (``spark.sql.timestampType``) and a cached frame must never be
+    handed to another session. It is held on the session object
+    itself: a module-level map keyed by the session would be kept
+    alive by its own empty frames, which reference the session. An
+    ALTER changes the DDL string, so the entries are bounded by schema
+    versions times the few internal-column variants. Two threads racing
+    on a new string at worst both parse it; either entry is valid."""
     from pyspark.sql.types import DataType
 
-    return to_arrow_schema(DataType.fromDDL(ddl))
+    cache = spark.__dict__.setdefault("_ais_schemas", {})
+    entry = cache.get(ddl)
+    if entry is None:
+        entry = cache[ddl] = _Schema(DataType.fromDDL(ddl))
+    return entry
+
+
+def arrow_schema(spark: SparkSession, ddl: str):
+    """The ``pyarrow.Schema`` Spark's own Arrow conversion maps a DDL
+    string to (timestamps as UTC micros, every field nullable); parsed
+    once per session."""
+    return _schema(spark, ddl).arrow
 
 
 def local_frame(spark: SparkSession, data, ddl: str) -> DataFrame:
@@ -95,17 +127,25 @@ def local_frame(spark: SparkSession, data, ddl: str) -> DataFrame:
     it without a scan. ``createDataFrame`` over a Python list instead
     parallelizes a Python RDD over ``defaultParallelism`` partitions,
     and every action on it pays one Python-worker task per partition
-    (~0.2 s each) even when the list is empty."""
+    (~0.2 s each) even when the list is empty.
+
+    ``ddl`` is parsed in the JVM once per session (see :func:`_schema`);
+    later calls pass the cached ``StructType``. Empty data returns the
+    session's one cached empty frame for ``ddl`` and builds no table."""
     import pyarrow as pa
 
-    schema = arrow_schema(ddl)
-    if isinstance(data, pa.Table):
-        table = data.select(schema.names).cast(schema)
+    s = _schema(spark, ddl)
+    rows = data if isinstance(data, pa.Table) else list(data)
+    if not len(rows):
+        if s.empty is None:
+            s.empty = spark.createDataFrame(s.arrow.empty_table(), s.struct)
+        return s.empty
+    if isinstance(rows, pa.Table):
+        table = rows.select(s.arrow.names).cast(s.arrow)
     else:
-        rows = list(data)
         table = pa.Table.from_arrays(
             [pa.array([r[i] for r in rows], type=f.type)
-             for i, f in enumerate(schema)],
-            schema=schema,
+             for i, f in enumerate(s.arrow)],
+            schema=s.arrow,
         )
-    return spark.createDataFrame(table, ddl)
+    return spark.createDataFrame(table, s.struct)

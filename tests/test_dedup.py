@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ais_etl_spark.operators import dedup as D
+from pair_chain import embedding_cosine_pairs, lsh_candidate_pairs
 
 DOCS = [
     (0, "the quick brown fox jumps over the lazy dog near the river bank"),
@@ -150,22 +151,20 @@ def _det_vecs(spark, n=24, dim=8):
 def test_embedding_cosine_candidates_parity(spark):
     """candidates=all-pairs must reproduce the crossJoin form exactly;
     LSH candidates must yield exactly exact ∩ candidate-pairs."""
-    from ais_etl_spark.operators.similarity import lsh_candidate_pairs
-
     vecs = _det_vecs(spark)
     exact = {(r["doc_a"], r["doc_b"]): r["cosine"] for r in
-             D.embedding_cosine_pairs(vecs, threshold=0.2).collect()}
+             embedding_cosine_pairs(vecs, threshold=0.2).collect()}
     ids = [r["vec_id"] for r in vecs.select("vec_id").collect()]
     allpairs = spark.createDataFrame(
         [(a, b) for a in ids for b in ids if a < b], "doc_a long, doc_b long"
     )
     via_all = {(r["doc_a"], r["doc_b"]): r["cosine"] for r in
-               D.embedding_cosine_pairs(vecs, threshold=0.2, candidates=allpairs).collect()}
+               embedding_cosine_pairs(vecs, threshold=0.2, candidates=allpairs).collect()}
     assert via_all == exact
     cand = lsh_candidate_pairs(vecs, dim=8, nbits=2)
     cand_set = {(r["doc_a"], r["doc_b"]) for r in cand.collect()}
     via_lsh = {(r["doc_a"], r["doc_b"]): r["cosine"] for r in
-               D.embedding_cosine_pairs(vecs, threshold=0.2, candidates=cand).collect()}
+               embedding_cosine_pairs(vecs, threshold=0.2, candidates=cand).collect()}
     assert via_lsh == {p: c for p, c in exact.items() if p in cand_set}
 
 
@@ -175,12 +174,10 @@ def test_embedding_cosine_bucketed_parity(spark):
     buckets, same quantized-exact scoring, only the physical plan
     differs (one groupBy shuffle + in-bucket Gram matrix instead of
     candidate distinct + two vector re-attach joins + pair UDF)."""
-    from ais_etl_spark.operators.similarity import lsh_candidate_pairs
-
     vecs = _det_vecs(spark, n=40)
     cand = lsh_candidate_pairs(vecs, dim=8, nbits=2)
     chain = {(r["doc_a"], r["doc_b"]): r["cosine"] for r in
-             D.embedding_cosine_pairs(vecs, threshold=0.2, candidates=cand).collect()}
+             embedding_cosine_pairs(vecs, threshold=0.2, candidates=cand).collect()}
     fused = {(r["doc_a"], r["doc_b"]): r["cosine"] for r in
              D.embedding_cosine_pairs_bucketed(
                  vecs, dim=8, nbits=2, threshold=0.2).collect()}
@@ -199,7 +196,7 @@ def test_embedding_cosine_pairs(spark):
         "vec_id long, embedding array<float>",
     )
     got = {(r["doc_a"], r["doc_b"]) for r in
-           D.embedding_cosine_pairs(vecs, threshold=0.99).collect()}
+           embedding_cosine_pairs(vecs, threshold=0.99).collect()}
     assert got == {(0, 1)}
 
 

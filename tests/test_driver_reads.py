@@ -41,11 +41,16 @@ def jobs_of(spark, fn):
     return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_lookup_launches_no_job(spark, tmpdir_path, mode):
-    t = LakeTable.create(spark, tmpdir_path, SCHEMA, n_buckets=4)
+def _two_merges(spark, path, mode):
+    t = LakeTable.create(spark, path, SCHEMA, n_buckets=4)
     for i, b in enumerate((B1, B2)):
         t.merge(spark.createDataFrame(b, EV_DDL), f"b{i}", mode=mode)
+    return t
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_lookup_launches_no_job(spark, tmpdir_path, mode):
+    t = _two_merges(spark, tmpdir_path, mode)
     kinds = {f.get("kind") for f in t.commit()["files"]}
     assert ("delta" in kinds) == (mode == "mor")
     expect = {"u1": [("u1", T(2), "a2")], "absent": [], "u3": []}
@@ -88,6 +93,64 @@ def test_local_frame_types_match_ddl(spark):
     assert df.dtypes == [("k", "string"), ("n", "bigint")]
     assert [tuple(r) for r in df.collect()] == [("x", 7)]
     assert local_frame(spark, [], ddl).schema == spark.createDataFrame([], ddl).schema
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_lookup_frames_follow_alter(spark, tmpdir_path, mode):
+    """The schema cache is keyed by DDL string: after an ADD COLUMN and
+    after a RENAME, a hit and a miss carry the new schema."""
+    t = _two_merges(spark, tmpdir_path, mode)
+    assert t.lookup("absent").columns == ["url", "warc_ts", "text"]
+    t.alter_add_column("lang", "string")
+    hit, miss = t.lookup("u1"), t.lookup("absent")
+    assert hit.columns == miss.columns == ["url", "warc_ts", "text", "lang"]
+    assert [tuple(r) for r in hit.collect()] == [("u1", T(2), "a2", None)]
+    t.alter_rename_column("text", "body")
+    hit, miss = t.lookup("u1"), t.lookup("absent")
+    assert hit.columns == miss.columns == ["url", "warc_ts", "body", "lang"]
+    assert hit.collect()[0].body == "a2" and miss.collect() == []
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_warm_lookup_parses_no_ddl_and_reuses_the_empty_frame(
+    spark, tmpdir_path, monkeypatch, mode
+):
+    """After one call per schema, a hit, a miss and a tombstoned key
+    make no JVM DDL parse and launch no job, and every miss is the one
+    cached empty frame."""
+    from pyspark.sql import SparkSession
+    from pyspark.sql.types import DataType
+
+    t = _two_merges(spark, tmpdir_path, mode)
+    for key in ("u1", "absent", "u3"):
+        t.lookup(key).collect()
+    parses = []
+    real_from_ddl, real_parse = DataType.fromDDL.__func__, SparkSession._parse_ddl
+    monkeypatch.setattr(DataType, "fromDDL", classmethod(
+        lambda cls, ddl: parses.append(ddl) or real_from_ddl(cls, ddl)))
+    monkeypatch.setattr(SparkSession, "_parse_ddl",
+                        lambda self, ddl: parses.append(ddl) or real_parse(self, ddl))
+    frames = {}
+    for key in ("u1", "absent", "u3", "absent"):
+        frames.setdefault(key, []).append(t.lookup(key))
+        got, jobs = jobs_of(spark, frames[key][-1].collect)
+        assert jobs == [], (key, jobs)
+    assert parses == []
+    assert frames["absent"][0] is frames["absent"][1] is frames["u3"][0]
+    assert frames["u1"][0].collect()[0].text == "a2"
+
+
+def test_new_session_gets_its_own_frames(spark, tmpdir_path):
+    """A cached frame is never handed to another session."""
+    ddl = "k string, n bigint"
+    other = spark.newSession()
+    mine, theirs = local_frame(spark, [], ddl), local_frame(other, [], ddl)
+    assert mine is local_frame(spark, [], ddl)
+    assert theirs is not mine and theirs.sparkSession is other
+    t = _two_merges(spark, tmpdir_path, "cow")
+    miss = LakeTable(other, tmpdir_path).lookup("absent")
+    assert miss.sparkSession is other and miss is not t.lookup("absent")
+    assert miss.collect() == []
 
 
 def test_ensure_parallelism_spreads_one_file_scan(spark, tmp_path):
