@@ -72,6 +72,24 @@ _FILESEQ = "_fileseq"
 # so the merge's generated code is the same for every batch — a
 # per-batch literal is inlined into it and recompiled on every merge
 _INCOMING_SEQ = (1 << 63) - 1
+# read-time-only join key of a scanned row's file to its manifest seq
+_FILEKEY = "_filekey"
+
+
+def _file_keys(paths: list[str]) -> tuple[int, list[str]]:
+    """``(k, keys)``: the fewest trailing path segments ``k`` that tell
+    the table-relative ``paths`` apart, and each path's last ``k``
+    segments. Spark reports a scanned row's file as a URI with the
+    table root percent-encoded (a space reads ``%20``), so the join
+    key leaves the root out; the engine names the segments it keeps
+    (``_bucket=<n>/part-<task>-<write uuid>...``) with characters a
+    URI never encodes. Any other name misses the join and raises."""
+    split = [p.split("/") for p in paths]
+    for k in range(1, min(len(s) for s in split) + 1):
+        keys = ["/".join(s[-k:]) for s in split]
+        if len(set(keys)) == len(keys):
+            return k, keys
+    raise ValueError(f"data file paths are not distinct: {paths}")
 
 
 class LakeTable(TableLog):
@@ -172,20 +190,28 @@ class LakeTable(TableLog):
         mapped, internal columns included) — the file-granularity
         read primitive shared by read() and merge().
 
+        Each schema version is ONE parquet scan over all of its files:
+        a scan node per commit would pay its own plan, file listing
+        and splits per seq, and the read plan should follow the
+        physical layout (files per schema version), not the commit
+        history.
+
         ``with_fileseq`` adds the manifest ``seq`` of each file as a
-        literal ``_fileseq`` column (one scan group per distinct
-        (schema_version, seq) — seq count is bounded by commits since
-        the bucket's last compaction), for merge-on-read resolution."""
+        ``_fileseq`` column, for merge-on-read resolution (base files
+        have no seq and get 0). A version whose files share one seq
+        gets it as a literal; otherwise the scan's
+        ``_metadata.file_path`` is left-joined against a broadcast
+        driver-held frame of file key → seq (see :func:`_file_keys`),
+        and a row whose file finds no seq raises rather than rank as
+        seq 0."""
         cur_cols = self.schema_cols(c)
         internal = [(_SEQ, "bigint"), (_DELETED, "boolean")]
+        names = [col["name"] for col in cur_cols] + [n for n, _ in internal]
         parts: list[DataFrame] = []
-        by_grp: dict[tuple, list[str]] = {}
+        by_ver: dict[int, list[dict]] = {}
         for f in files:
-            grp = (f["schema_version"], int(f.get("seq", 0)) if with_fileseq else 0)
-            by_grp.setdefault(grp, []).append(
-                os.path.join(self.path, f["path"])
-            )
-        for (ver, seq), paths in by_grp.items():
+            by_ver.setdefault(f["schema_version"], []).append(f)
+        for ver, vfiles in by_ver.items():
             old_cols = {col["id"]: col for col in c["schemas"][ver]}
             # explicit reader schema: every file in this group was
             # written under schema version ``ver`` plus the internal
@@ -196,7 +222,9 @@ class LakeTable(TableLog):
             ddl = ", ".join(
                 f"`{col['name']}` {col['type']}" for col in c["schemas"][ver]
             ) + f", `{_SEQ}` bigint, `{_DELETED}` boolean"
-            df = self.spark.read.schema(ddl).parquet(*paths)
+            df = self.spark.read.schema(ddl).parquet(
+                *[os.path.join(self.path, f["path"]) for f in vfiles]
+            )
             sel = []
             for col in cur_cols:
                 if col["id"] in old_cols:
@@ -210,9 +238,31 @@ class LakeTable(TableLog):
                 else:
                     sel.append(F.lit(None).cast(col["type"]).alias(col["name"]))
             sel += [F.col(n).cast(t).alias(n) for n, t in internal]
-            if with_fileseq:
-                sel.append(F.lit(seq).cast("bigint").alias(_FILESEQ))
-            parts.append(df.select(*sel))
+            if not with_fileseq:
+                parts.append(df.select(*sel))
+                continue
+            seqs = [int(f.get("seq", 0)) for f in vfiles]
+            if len(set(seqs)) == 1:
+                fileseq = F.lit(seqs[0]).cast("bigint")
+                parts.append(df.select(*sel, fileseq.alias(_FILESEQ)))
+            else:
+                k, keys = _file_keys([f["path"] for f in vfiles])
+                by_key = local_frame(
+                    self.spark, list(zip(keys, seqs)),
+                    f"{_FILEKEY} string, {_FILESEQ} bigint",
+                )
+                path = df.metadataColumn("_metadata").getField("file_path")
+                fileseq = F.col(_FILESEQ)
+                parts.append(
+                    df.select(*sel, F.substring_index(path, "/", -k).alias(_FILEKEY))
+                    .join(F.broadcast(by_key), _FILEKEY, "left")
+                    .select(
+                        *names,
+                        F.when(fileseq.isNull(), F.raise_error(F.concat(
+                            F.lit("no manifest seq for data file "), F.col(_FILEKEY),
+                        ))).otherwise(fileseq).alias(_FILESEQ),
+                    )
+                )
 
         if not parts:
             ddl = self.spark_schema_ddl() + ", " + ", ".join(

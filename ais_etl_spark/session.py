@@ -54,6 +54,15 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.parquet.compression.codec", "zstd")
+        # the manifest names every file a read takes, so listing them
+        # is a status call per path; above this many paths Spark would
+        # list them in a Spark job of its own (default 32, below one
+        # merge-on-read table's file count)
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
+        # PySpark's per-call call-site capture (a stack walk and origin
+        # round trips on every Column/DataFrame call); errors keep their
+        # class and message, without the Python call-site fragment
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # INT96 (the legacy default) writes NO column statistics, which
         # blanks the manifest's order-column ranges; micros carries
         # proper min/max for metrics-based file skipping

@@ -129,6 +129,9 @@ CHECKS = {
         # still combines map-side) — never a window over the stream
         ("resolution has map-side partial aggregation", "partial_max"),
         ("no window in the resolution", "Window", False),
+        # the table's two delta seqs share one schema version: one scan
+        # over both files, _fileseq joined from the manifest, no union
+        ("one parquet scan per schema version", "Union", False),
     ],
     "mor_clean_read": [
         # the CoW fast path after folding: a read of a delta-free

@@ -7,7 +7,9 @@ so collecting them runs on the driver. A frame built by
 ``createDataFrame`` over a Python list would instead run one
 Python-worker task per default partition on every action."""
 
+import contextlib
 import datetime as dt
+import io
 import os
 import uuid
 
@@ -151,6 +153,61 @@ def test_new_session_gets_its_own_frames(spark, tmpdir_path):
     miss = LakeTable(other, tmpdir_path).lookup("absent")
     assert miss.sparkSession is other and miss is not t.lookup("absent")
     assert miss.collect() == []
+
+
+def test_session_turns_off_call_site_capture(spark, monkeypatch):
+    """Every Column/DataFrame call would otherwise walk the Python
+    stack and set the call site in the JVM."""
+    from pyspark.errors import utils
+
+    monkeypatch.setattr(utils, "_enable_debugging_cache", None)
+    assert not utils.is_debugging_enabled()
+
+
+def parquet_scans(df) -> int:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain()
+    return buf.getvalue().count("FileScan parquet")
+
+
+def test_mor_read_plans_one_parquet_scan_per_schema_version(spark, tmpdir_path):
+    """Three merge-on-read batches over 16 buckets leave more than 32
+    delta files of one schema version: the read plans ONE parquet scan,
+    and building it launches no job (Spark's default lists more than 32
+    explicit paths in a job of its own, which the control below shows).
+    After an ALTER and one more batch the read plans one scan per
+    schema version."""
+    threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    t = LakeTable.create(spark, tmpdir_path, SCHEMA, n_buckets=16)
+    for b in range(3):
+        rows = [(b * 1000 + i, "U", f"u{i}", T(b), f"v{b}") for i in range(128)]
+        t.merge(spark.createDataFrame(rows, EV_DDL), f"b{b}", mode="mor")
+    files = t.commit()["files"]
+    assert len(files) > 32 and {f["kind"] for f in files} == {"delta"}
+    assert len({f["seq"] for f in files}) == 3
+    df, jobs = jobs_of(spark, t.read)
+    assert jobs == []
+    assert parquet_scans(df) == 1
+    assert {(r.url, r.text) for r in df.collect()} == {
+        (f"u{i}", "v2") for i in range(128)
+    }
+    old = spark.conf.get(threshold)
+    spark.conf.set(threshold, "32")
+    try:
+        _, jobs = jobs_of(spark, t.read)
+    finally:
+        spark.conf.set(threshold, old)
+    assert jobs, "a listing job should run at Spark's default threshold"
+
+    t.alter_add_column("lang", "string")
+    rows = [(9000 + i, "U", f"u{i}", T(9), "v9", "en") for i in range(0, 128, 2)]
+    t.merge(spark.createDataFrame(rows, EV_DDL + ", lang string"), "b3", mode="mor")
+    df = t.read()
+    assert parquet_scans(df) == 2
+    got = {r.url: (r.text, r.lang) for r in df.collect()}
+    assert got == {f"u{i}": ("v9", "en") if i % 2 == 0 else ("v2", None)
+                   for i in range(128)}
 
 
 def test_ensure_parallelism_spreads_one_file_scan(spark, tmp_path):

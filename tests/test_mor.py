@@ -153,6 +153,40 @@ def test_cow_merge_keeps_the_read_time_winner_on_exact_ties(spark, tmpdir_path):
     }
 
 
+def test_exact_ties_across_delta_files_of_one_scan(spark, tmpdir_path, monkeypatch):
+    """Two delta files of one schema version hold u1 with exactly equal
+    (order, _seq), one event id redelivered with another payload. Both
+    are read by one parquet scan, and the _fileseq join must rank the
+    later-committed copy first in read(), in the Spark lookup fallback
+    and in compact_deltas, under a table root that Spark reports
+    percent-encoded. A file the join cannot key raises instead of
+    ranking as seq 0 (which would hand the tie to payload order)."""
+    import ais_etl_spark.lake.table as table_mod
+
+    root = os.path.join(tmpdir_path, "t dir %x")
+    t = LakeTable.create(spark, root, SCHEMA, n_buckets=1)
+    t.merge(ev(spark, [(5, "I", "u1", T(1), "zz-early"), (6, "I", "u2", T(1), "b")]),
+            "b0", mode="mor")
+    t.merge(ev(spark, [(5, "U", "u1", T(1), "aa-late")]), "b1", mode="mor")
+    assert sorted(f["seq"] for f in t.commit()["files"]) == [1, 2]
+    want = {"u1": "aa-late", "u2": "b"}
+    assert {r.url: r.text for r in t.read().collect()} == want
+    assert [r.text for r in t.lookup("u1").collect()] == ["aa-late"]
+    with monkeypatch.context() as m:
+        m.setattr(LakeTable, "LOOKUP_DRIVER_MAX_FILES", 0)  # the scan path
+        assert [r.text for r in t.lookup("u1").collect()] == ["aa-late"]
+    with monkeypatch.context() as m:
+        # a key naming the file by its unencoded path misses every row
+        m.setattr(table_mod, "_file_keys", lambda paths: (
+            1, ["file:" + os.path.join(root, p) for p in paths]))
+        with pytest.raises(Exception, match="no manifest seq for data file"):
+            t.read().collect()
+    assert t.compact_deltas()["buckets"] == [0]
+    assert t.table_stats()["delta_files"] == 0
+    assert {r.url: r.text for r in t.read().collect()} == want
+    assert t.validate(full=True)["ok"]
+
+
 def test_cow_merge_takes_a_dirty_bucket_whole(spark, tmpdir_path):
     """One bucket, 8 keys, 4 rows per file (k00-k03, k04-k07). A MoR
     update of k02 and k05 leaves one delta spanning both files; a CoW
