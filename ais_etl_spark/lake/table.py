@@ -595,7 +595,12 @@ class LakeTable(TableLog):
         partitions, whose count AQE picks: a small batch's sub-1 MB
         shuffle coalesces into ONE partition, so the UDF runs as one
         task; only a shuffle larger than the advisory partition size
-        fans out toward ``spark.sql.shuffle.partitions``. The transform
+        fans out toward ``spark.sql.shuffle.partitions``. A warm Python
+        task costs ~45 ms beyond a plain one (4-core host) when the
+        session starts its workers through
+        :mod:`ais_etl_spark.worker_daemon`, as ``get_spark`` does; with
+        PySpark's stock daemon it costs ~170 ms, almost all of it
+        re-reading ``pyspark.zip``'s directory. The transform
         must be row-preserving and keep the key column: it sees one
         winner per key, and the no-hit CoW path and merge-on-read write
         its output as it is, without a second per-key resolution.
@@ -1016,8 +1021,11 @@ class LakeTable(TableLog):
         """The one write step: write ``rows`` (current schema +
         ``_seq``/``_deleted``/``_bucket``; other columns are dropped
         after counting) as the data files of snapshot ``c + 1``, in a
-        directory of this attempt's own, one write partition per bucket
-        in ``buckets``. ``counters`` (name → aggregate over ``rows``)
+        directory of this attempt's own. The write runs
+        ``min(len(set(buckets)), defaultParallelism)`` tasks, so a small
+        batch's write is one wave of tasks; rows are hash-partitioned by
+        ``_bucket``, so each bucket lands in exactly one task and gets
+        its own files there. ``counters`` (name → aggregate over ``rows``)
         ride along as an Observation on the same Spark job — no second
         pass; rows failing the ``keep`` predicate are counted, not
         written. ``kind="delta"`` marks the files as merge-on-read
@@ -1035,7 +1043,9 @@ class LakeTable(TableLog):
             rows.select(*[x["name"] for x in self.schema_cols(c)],
                         _SEQ, _DELETED, "_bucket"),
             c, self._data_dir(snap_id=snap_id, stage=self._stage_to),
-            n_parts=max(len(set(buckets)), 1), kind=kind,
+            n_parts=max(min(len(set(buckets)),
+                            self.spark.sparkContext.defaultParallelism), 1),
+            kind=kind,
         )
         if not counters:
             return files, {}
@@ -1059,7 +1069,9 @@ class LakeTable(TableLog):
         self, df: DataFrame, c: dict, rel_dir: str, n_parts: int, kind: str,
     ) -> list[dict]:
         """Write rows (must carry ``_bucket``) as key-sorted parquet
-        files, one directory per bucket, split at ``max_file_rows``;
+        files in ``n_parts`` tasks, hash-partitioned by ``_bucket`` (a
+        task may hold several buckets, a bucket never spans two tasks),
+        one directory per bucket, split at ``max_file_rows``;
         return per-file manifest entries with key min/max + tombstone
         presence harvested from the parquet footers (driver-side,
         bounded by file count — the same commit-path stats collection

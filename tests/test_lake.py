@@ -8,6 +8,7 @@ follows the reference's pipeline-replay compare
 
 import datetime as dt
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -78,6 +79,40 @@ def test_copy_on_write_only_touched_buckets(spark, tmpdir_path):
     assert lin["buckets_rewritten"] == 1
     carried = [f for f in tbl.commit()["files"] if f["path"] in files_before]
     assert len(carried) == len(files_before) - 1  # all but the hit bucket reused
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_write_runs_at_most_one_task_per_core(spark, tmpdir_path, mode):
+    """A merge that touches all 16 buckets writes in at most
+    ``defaultParallelism`` tasks: the rows are hash-partitioned by
+    bucket, so a task may write several buckets and each touched
+    bucket still gets exactly one file."""
+    tbl = LakeTable.create(spark, tmpdir_path, SCHEMA, n_buckets=16)
+    tbl.merge(ev(spark, [(i, "I", f"u{i}", T(i), f"t{i}") for i in range(200)]), "b1")
+    before = {f["path"] for f in tbl.commit()["files"]}
+    assert len(before) == 16
+    sc = spark.sparkContext
+    group = f"write-fan-out-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        tbl.merge(
+            ev(spark, [(1000 + i, "U", f"u{i}", T(1000), f"n{i}") for i in range(200)]),
+            "b2", mode=mode,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    # the write is the merge's last job; its result stage is its last
+    write_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup(group)))
+    tasks = tracker.getStageInfo(max(write_job.stageIds)).numTasks
+    assert 0 < tasks <= sc.defaultParallelism < 16
+    new = [f for f in tbl.commit()["files"] if f["path"] not in before]
+    assert sorted(f["bucket"] for f in new) == list(range(16))
+    assert {f.get("kind") for f in new} == ({"delta"} if mode == "mor" else {None})
+    assert {r.url: r.text for r in tbl.read().collect()} == {
+        f"u{i}": f"n{i}" for i in range(200)
+    }
+    assert tbl.validate(full=True)["ok"]
 
 
 def test_file_granularity_rewrite_within_bucket(spark, tmpdir_path):
