@@ -15,13 +15,17 @@ adds the Spark data plane on top of it:
   bucket. At 100 TB with 1024 buckets a batch touching 1% of keys
   rewrites ~1% of the table's files, not the table.
 - **LWW upsert with tombstones, one tie rule.** The winner per url is
-  the max of ``(warc_ts, _seq, file seq)`` across every copy of the
-  key: the rows of the files it lives in plus the incoming events,
-  which rank above every committed file's seq (``_INCOMING_SEQ``), so
-  incoming wins an exact (order, seq) tie.
-  The CoW merge, the merge-on-read scan and the maintenance folds
-  all resolve through ``_resolve_lww_rows``, so a merge and a read
-  cannot disagree on a winner; a losing (late/stale) event is a
+  the max of ``(warc_ts, _seq, file seq, _deleted)`` across every copy
+  of the key: the batch's events plus the rows of the files the key
+  lives in. Events rank above every committed file's seq
+  (``_INCOMING_SEQ``), so incoming wins an exact (order, seq) tie;
+  two events of one batch with equal (order, seq) — one source event
+  delivered twice with conflicting content — break the tie like a
+  read does, a tombstone outranking a live row. The merge (its
+  batch-local dedup included: the events and the hit files' rows
+  resolve in one pass), the merge-on-read scan and the maintenance
+  folds all resolve through ``_resolve_lww_rows``, so a merge and a
+  read cannot disagree on a winner; a losing (late/stale) event is a
   no-op. Deletes persist as tombstone rows (``_deleted``) so an
   *older* insert arriving after a newer delete stays dead —
   incremental state matches full replay exactly (the
@@ -58,9 +62,9 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ais_etl_spark.lake.log import (
-    _DELETED, _LINEAGE_SCHEMA, _QUARANTINE, _SEQ, TableLog,
+    _COUNTER_COLS, _DELETED, _LINEAGE_SCHEMA, _OFFSET_COLS, _QUARANTINE, _SEQ,
+    TableLog,
 )
-from ais_etl_spark.operators.lww import lww_latest
 from ais_etl_spark.session import arrow_schema, local_frame
 
 # read-time-only column (never persisted): the manifest seq of the file a
@@ -74,6 +78,12 @@ _FILESEQ = "_fileseq"
 _INCOMING_SEQ = (1 << 63) - 1
 # read-time-only join key of a scanned row's file to its manifest seq
 _FILEKEY = "_filekey"
+
+
+def _live(df: DataFrame) -> DataFrame:
+    """The rows a reader sees: tombstones dropped, internal columns
+    removed."""
+    return df.filter(~F.col(_DELETED)).drop(_SEQ, _DELETED)
 
 
 def _file_keys(paths: list[str]) -> tuple[int, list[str]]:
@@ -179,9 +189,7 @@ class LakeTable(TableLog):
 
         files, _ = self._split_files(c, keep)
         out = self._resolved_entries_df(c, files)
-        if not include_internal:
-            out = out.filter(~F.col(_DELETED)).drop(_SEQ, _DELETED)
-        return out
+        return out if include_internal else _live(out)
 
     def _entries_df(
         self, c: dict, files: list[dict], with_fileseq: bool = False
@@ -280,31 +288,18 @@ class LakeTable(TableLog):
     # merge-on-read resolution
     # ------------------------------------------------------------------
 
-    def _resolve_lww(
-        self, c: dict, files: list[dict], key_value=None
-    ) -> DataFrame:
-        """Per-key LWW over a file set that may hold several versions
-        of a key (base + delta files) — see :meth:`_resolve_lww_rows`.
-        Output column set equals ``_entries_df``'s (internal columns
-        included). The shuffle is bounded by the DIRTY rows handed in,
-        not the table."""
-        df = self._entries_df(c, files, with_fileseq=True)
-        if key_value is not None:
-            # point lookup: the predicate sits BELOW the groupBy, so it
-            # pushes down to the parquet scan's row-group stats
-            df = df.filter(F.col(c["key"]) == key_value)
-        return self._resolve_lww_rows(c, df).drop(_FILESEQ)
-
     def _resolve_lww_rows(self, c: dict, df: DataFrame, **aggs) -> DataFrame:
-        """The one per-key LWW rule, shared by reads, the CoW merge and
-        the maintenance folds: winner = max struct over (order_col,
-        _seq, _fileseq), so the manifest seq of the file a row came
-        from breaks exact (order, seq) ties toward the later-committed
-        copy. ``df`` must carry the current schema columns +
+        """The one per-key LWW rule, shared by reads, both merge modes
+        and the maintenance folds: winner = max struct over (order_col,
+        _seq, _fileseq, _deleted), so the manifest seq of the file a
+        row came from breaks exact (order, seq) ties toward the
+        later-committed copy, and between two copies equal on all
+        three (two events of one batch) a tombstone outranks a live
+        row. ``df`` must carry the current schema columns +
         ``_seq``/``_deleted``/``_fileseq``; the output carries them
         too, ``_fileseq`` being the winner's. ``aggs`` (name → per-key
-        aggregate) are added as output columns — the CoW merge counts
-        from these."""
+        aggregate) are added as output columns — the merge counts from
+        these."""
         key = c["key"]
         order_col = c["order_col"]
         payload = [
@@ -373,7 +368,10 @@ class LakeTable(TableLog):
             resolved = self._resolve_lww_rows(c, touched)
             out = untouched.unionByName(resolved).drop(_FILESEQ)
         else:
-            out = self._resolve_lww(c, dirty_files)
+            # the shuffle is bounded by the DIRTY rows, not the table
+            out = self._resolve_lww_rows(
+                c, self._entries_df(c, dirty_files, with_fileseq=True)
+            ).drop(_FILESEQ)
         if not clean:
             return out
         return self._entries_df(c, clean).unionByName(out)
@@ -454,11 +452,11 @@ class LakeTable(TableLog):
         resolve = any(f.get("kind") == "delta" for f in hits)
         if len(hits) <= self.LOOKUP_DRIVER_MAX_FILES:
             return self._lookup_driver_side(c, hits, key_value, resolve)
-        if resolve:
-            out = self._resolve_lww(c, hits, key_value=key_value)
-        else:
-            out = self._entries_df(c, hits).filter(F.col(c["key"]) == key_value)
-        return out.filter(~F.col(_DELETED)).drop(_SEQ, _DELETED)
+        # the key predicate pushes through the per-key resolution down
+        # to the parquet scan's row-group stats
+        return _live(
+            self._resolved_entries_df(c, hits).filter(F.col(c["key"]) == key_value)
+        )
 
     # point reads touch 1-2 small bucket files after pruning; a Spark
     # scan job costs seconds of fixed overhead at any cluster size,
@@ -481,7 +479,7 @@ class LakeTable(TableLog):
         ``resolve`` (merge-on-read): tombstones are read rather than
         filtered, and the single winner is picked driver-side by max
         (order_col, _seq, file seq) — the same rule as
-        ``_resolve_lww`` — then dropped if it is a tombstone."""
+        ``_resolve_lww_rows`` — then dropped if it is a tombstone."""
 
         cur_cols = self.schema_cols(c)
         key_id = next(x["id"] for x in cur_cols if x["name"] == c["key"])
@@ -562,9 +560,7 @@ class LakeTable(TableLog):
         surface of the WAP flow. Same resolution semantics as read()."""
         c = self._load_staged(batch_id)["commit"]
         out = self._resolved_entries_df(c, c["files"])
-        if not include_internal:
-            out = out.filter(~F.col(_DELETED)).drop(_SEQ, _DELETED)
-        return out
+        return out if include_internal else _live(out)
 
     # ------------------------------------------------------------------
     # MERGE (the CDC apply)
@@ -588,22 +584,29 @@ class LakeTable(TableLog):
         stores it and is the one file a merge commit writes.
 
         ``post_dedup_transform`` (df -> df, row-wise deterministic) is
-        applied AFTER the batch-local LWW — the expensive extraction
-        UDFs (html→text/lang) run once per *winning* key instead of
-        once per event, which for an update-heavy feed cuts Python-UDF
-        work by the dup factor. They run on the LWW shuffle's output
-        partitions, whose count AQE picks: a small batch's sub-1 MB
-        shuffle coalesces into ONE partition, so the UDF runs as one
-        task; only a shuffle larger than the advisory partition size
-        fans out toward ``spark.sql.shuffle.partitions``. A warm Python
-        task costs ~45 ms beyond a plain one (4-core host) when the
-        session starts its workers through
-        :mod:`ais_etl_spark.worker_daemon`, as ``get_spark`` does; with
-        PySpark's stock daemon it costs ~170 ms, almost all of it
-        re-reading ``pyspark.zip``'s directory. The transform
-        must be row-preserving and keep the key column: it sees one
-        winner per key, and the no-hit CoW path and merge-on-read write
-        its output as it is, without a second per-key resolution.
+        applied AFTER the per-key LWW, to the keys whose winner is a
+        batch event — the expensive extraction UDFs (html→text/lang)
+        run once per *new winning* key instead of once per event: a
+        duplicate, a stale event that loses to a committed row and an
+        untouched row of a rewritten file never reach them, which for
+        an update-heavy feed cuts Python-UDF work by the dup factor.
+        They run on the LWW shuffle's output partitions, whose count
+        AQE picks: a small batch's sub-1 MB shuffle coalesces into ONE
+        partition, so the UDF runs as one task; only a shuffle larger
+        than the advisory partition size fans out toward
+        ``spark.sql.shuffle.partitions``. A warm Python task costs ~45
+        ms beyond a plain one (4-core host) when the session starts its
+        workers through :mod:`ais_etl_spark.worker_daemon`, as
+        ``get_spark`` does; with PySpark's stock daemon it costs ~170
+        ms, almost all of it re-reading ``pyspark.zip``'s directory.
+        The transform sees the table's row shape — every current
+        schema column, absent ones as typed nulls, cast to the schema
+        types — plus ``_seq``/``_deleted``/``_fileseq``/``_has_new``/
+        ``_has_cur``; there is no ``op`` column (a delete is
+        ``_deleted``). It must be row-preserving and keep every column
+        it does not produce: its output is cast back to the schema
+        types and written as it is, without a second per-key
+        resolution.
 
         ``bounded_lateness_us``: OBSERVABLE bounded-lateness policy
         (the streaming analog of Spark's watermark drop, but with the
@@ -625,7 +628,7 @@ class LakeTable(TableLog):
         or rewriting any base file — write cost scales with the batch,
         not with base-file sizes (an update-heavy feed against large
         base files stops paying base-file rewrite amplification) — and
-        readers LWW-resolve base+delta per key (``_resolve_lww``) until
+        readers LWW-resolve base+delta per key (``_resolve_lww_rows``) until
         ``compact()`` / ``compact_deltas()`` folds the deltas back into
         base files. The two modes commute freely batch-to-batch and
         produce identical logical table state (parity-tested). MoR
@@ -635,17 +638,22 @@ class LakeTable(TableLog):
         lineage table for MoR commits).
 
         Physical plan: a stats pre-pass over the raw events (buckets,
-        offsets, hit files) → batch-local LWW (map-side combine absorbs
-        hot-key skew) → transform winners → bucket, then ONE write job
+        offsets, hit files) → ONE per-key LWW (``_resolve_lww_rows``,
+        the read-time rule; its map-side partial max absorbs hot-key
+        skew) over the batch's events and, for cow, the rows of the hit
+        files — every file of a hit bucket that holds a delta — with
+        the events ranked above every committed file, so they win exact
+        (order, seq) ties → transform the new winners → union them with
+        the surviving current winners (Spark reuses the resolve's
+        exchange for both branches) → bucket, then ONE write job
         through ``_write_files``, which evaluates the lineage counters
-        as an Observation on that job. cow: the winners are
-        LWW-resolved against the rows of the hit files with the
-        read-time rule (``_resolve_lww_rows``; incoming rows rank
-        above every committed file, so they win exact (order, seq)
-        ties) and the hit files — every file of a hit bucket that holds
-        a delta — are rewritten; with no hit file the
-        winners are written as they are. mor: the winners are written
-        as per-bucket delta files — zero base IO.
+        as an Observation on that job. A batch that hits no file (and
+        every mor batch) is the same pipeline with nothing unioned. cow
+        rewrites the hit files; mor writes the winners as per-bucket
+        delta files — zero base IO. Two events of one batch with equal
+        (order, event_id) — one source event delivered twice with
+        conflicting content — tie-break like a read: a tombstone
+        outranks a live row.
         """
         if mode not in ("cow", "mor"):
             raise ValueError(f"mode must be 'cow' or 'mor', got {mode!r}")
@@ -655,9 +663,6 @@ class LakeTable(TableLog):
         key = c["key"]
         order_col = c["order_col"]
         cur_cols = self.schema_cols(c)
-        payload_names = [
-            col["name"] for col in cur_cols if col["name"] not in (key, order_col)
-        ]
         for col in (key, order_col, "op", "event_id"):
             if col not in events.columns:
                 raise ValueError(f"events missing required column {col!r}")
@@ -717,76 +722,60 @@ class LakeTable(TableLog):
             )
             valid = valid.filter(~late)
 
-        # 1. batch-local LWW (one row per key; combiner absorbs skew),
-        #    BEFORE the expensive payload transform. NOT materialized —
-        #    it fuses into the single write job below.
-        payload_in = [p for p in payload_names if p in events.columns]
-        ev = valid.select(
-            key, order_col, F.col("event_id").alias(_SEQ), "op", *payload_in
-        )
-        winners = lww_latest(
-            ev, key=key, order_cols=(order_col, _SEQ),
-            payload_cols=["op", *payload_in],
-        )
-
-        # 2. payload transform on winners only (one UDF pass over the
-        #    LWW shuffle's AQE-coalesced output partitions)
-        ev = post_dedup_transform(winners) if post_dedup_transform else winners
-        ptypes = {x["name"]: x["type"] for x in cur_cols}
-        for p in payload_names:
-            if p not in ev.columns:
-                ev = ev.withColumn(p, F.lit(None).cast(ptypes[p]))
-        incoming = ev.select(
-            key,
-            order_col,
-            F.col(_SEQ),
+        # 1. the valid events in the table's row shape, cast to the
+        #    CURRENT schema types (absent columns as typed nulls) and
+        #    ranked above every committed file
+        types = {x["name"]: x["type"] for x in cur_cols}
+        rows = valid.select(
+            *[(F.col(n) if n in events.columns else F.lit(None)).cast(t).alias(n)
+              for n, t in types.items()],
+            F.col("event_id").cast("bigint").alias(_SEQ),
             (F.col("op") == "D").alias(_DELETED),
-            # cast to the CURRENT schema types: after a widen fence the
-            # transform may still emit the narrower type (e.g. int
-            # length into a bigint column) — files must carry the
-            # schema-version type they are manifested under
-            *[F.col(p).cast(ptypes[p]).alias(p) for p in payload_names],
             F.lit(_INCOMING_SEQ).alias(_FILESEQ),
-            self._bucket_expr(F.col(key)).alias("_bucket"),
         )
 
-        # 3. the rows to write and the counters their write job
-        #    observes. CoW reads and rewrites the HIT FILES only
-        #    (file-granularity: a bucket file whose key range cannot
-        #    contain an incoming key is carried by reference), widened
-        #    to the whole of any hit bucket that holds a delta; merge-
-        #    on-read asked the pre-pass for no hit files at all
+        # 2. ONE per-key LWW over the batch and, for CoW, the rows of
+        #    the HIT FILES (file-granularity: a bucket file whose key
+        #    range cannot contain an incoming key is carried by
+        #    reference), widened to the whole of any hit bucket that
+        #    holds a delta; merge-on-read asked the pre-pass for no hit
+        #    files, and a batch that hits none resolves its own rows
         rewrite, carry = self._split_files(c, lambda f: f["path"] in hit_paths)
+        if rewrite:
+            rows = self._entries_df(c, rewrite, with_fileseq=True).unionByName(rows)
+        # before the resolve per copy, after it per key winner
+        is_new = F.col(_FILESEQ) == _INCOMING_SEQ
+        rows = self._resolve_lww_rows(
+            c, rows,
+            _has_new=F.max(is_new.cast("int")),
+            _has_cur=F.max((~is_new).cast("int")),
+        )
+
+        # 3. the transform on the NEW winners only; its output is cast
+        #    back to the schema types (after a widen fence it may still
+        #    emit the narrower type, e.g. an int length into a bigint
+        #    column — files carry the type they are manifested under)
+        if post_dedup_transform is not None:
+            new = post_dedup_transform(rows.filter(is_new)).select(
+                *[F.col(n).cast(t).alias(n) for n, t in types.items()],
+                _SEQ, _DELETED, _FILESEQ, "_has_new", "_has_cur",
+            )
+            # a batch that hits no file has no current winner to keep
+            rows = new.unionByName(rows.filter(~is_new)) if rewrite else new
+        rows = rows.withColumn("_bucket", self._bucket_expr(F.col(key)))
+
+        # 4. the counters the write job observes
         if mode == "mor":
             # the winners (tombstones included) become DELTA files; the
             # insert/update/stale split would need the base read this
             # mode exists to avoid
-            rows, kind = incoming, "delta"
+            kind = "delta"
             counters = {
                 "upserts": F.sum((~F.col(_DELETED)).cast("long")),
                 "tombstones": F.sum(F.col(_DELETED).cast("long")),
             }
         else:
             kind = "base"
-            # before the resolve per copy, after it per key winner
-            is_new = F.col(_FILESEQ) == _INCOMING_SEQ
-            if not rewrite:
-                # FAST PATH — no current file can hold an incoming key
-                # (fresh table, or a batch disjoint from every file
-                # range): the per-key LWW over {current ∪ incoming} is
-                # the identity on incoming (winners are already one
-                # row per key), so its union + struct-max aggregate
-                # (a SortAggregate plus its exchange) is pure overhead.
-                rows = incoming.withColumns(
-                    {"_has_new": F.lit(1), "_has_cur": F.lit(0)}
-                )
-            else:
-                current = self._entries_df(c, rewrite, with_fileseq=True)
-                rows = self._resolve_lww_rows(
-                    c, current.unionByName(incoming.drop("_bucket")),
-                    _has_new=F.max(is_new.cast("int")),
-                    _has_cur=F.max((~is_new).cast("int")),
-                ).withColumn("_bucket", self._bucket_expr(F.col(key)))
             live = is_new & ~F.col(_DELETED)
             counters = {
                 "inserts": F.sum((live & (F.col("_has_cur") == 0)).cast("long")),
@@ -796,7 +785,7 @@ class LakeTable(TableLog):
                 "rows_after": F.count("*"),
             }
 
-        # 4. ONE write job; the counters ride along as its Observation
+        # 5. ONE write job; the counters ride along as its Observation
         new_files, counts = self._write_files(c, rows, touched, counters, kind)
         lineage = {
             "batch_id": batch_id,
@@ -1493,7 +1482,12 @@ class LakeTable(TableLog):
         :meth:`lineage_sources`'s rule: retained merges' rows are built
         on the driver (no Spark job), the rest read from ``_lineage/``."""
         rows, files, retained = self.lineage_sources()
-        out = self.spark.createDataFrame(pa.Table.from_pylist(rows, schema=_LINEAGE_SCHEMA))
+        ddl = "batch_id string, snapshot_id bigint, source_part int, " + ", ".join(
+            f"{n} bigint" for n in _OFFSET_COLS[1:] + _COUNTER_COLS
+        )
+        out = local_frame(
+            self.spark, pa.Table.from_pylist(rows, schema=_LINEAGE_SCHEMA), ddl
+        )
         if not files:
             return out
         return out.unionByName(self.spark.read.schema(out.schema).parquet(*files)

@@ -1,4 +1,16 @@
-"""Last-writer-wins dedup/ordering per key — the engine's core operator.
+"""Last-writer-wins dedup/ordering per key over a raw event feed — the
+batch spec the contract gates, the soak and the tests compare the lake
+table against.
+
+``LakeTable.merge`` does not call it: a merge resolves the batch's
+events together with the rows of the files it rewrites in one pass of
+``LakeTable._resolve_lww_rows``, the rule reads and maintenance use.
+That rule ranks the same ``(warc_ts, event_id)`` first, so both agree
+on every winner except two events of one batch with equal
+``(warc_ts, event_id)`` — one source event delivered twice with
+conflicting content — where the merge lets a tombstone win, as a read
+does, and :func:`lww_latest` compares the payload fields in the
+order given.
 
 Reference semantics being re-expressed: tar2tf's version-keyed cache
 recomputes when the object version changes — per-key last-version-wins

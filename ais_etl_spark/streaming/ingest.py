@@ -123,7 +123,12 @@ def apply_cdc_batch(
     :meth:`LakeTable.merge`).
     ``transform`` (df → df, row-wise deterministic) is the per-winner
     enrichment stage; default :func:`enrich_events` (html→text/lang),
-    pass ``curate_events`` for the full curation profile.
+    pass ``curate_events`` for the full curation profile. It runs on
+    the keys whose winner is a batch event, in the table's row shape
+    (every schema column) plus the internal ``_seq``/``_deleted``/
+    ``_fileseq``/``_has_new``/``_has_cur`` — no ``op`` column — and
+    must keep every column it does not produce (see
+    :meth:`LakeTable.merge`).
 
     ``schema_events`` (kind/col_name/new_name/col_type/fence_event_id)
     fence the batch exactly like DDL statements ordered within a binlog:

@@ -124,7 +124,7 @@ CHECKS = {
         # merge-on-read resolution: per-key LWW over the DIRTY buckets
         # is an aggregate WITH map-side partial aggregation (each task
         # collapses its local versions per key before the shuffle — the
-        # same skew-absorbing shape as the flagship lww_latest; the
+        # same skew-absorbing shape as the merge's one LWW pass; the
         # struct-max compiles to SortAggregate, whose partial phase
         # still combines map-side) — never a window over the stream
         ("resolution has map-side partial aggregation", "partial_max"),
@@ -132,6 +132,13 @@ CHECKS = {
         # the table's two delta seqs share one schema version: one scan
         # over both files, _fileseq joined from the manifest, no union
         ("one parquet scan per schema version", "Union", False),
+    ],
+    "lookup_scan_fallback": [
+        # a point lookup above LOOKUP_DRIVER_MAX_FILES goes through the
+        # read's resolution; the key predicate still reaches the scan
+        ("key predicate pushed to the parquet scan", "EqualTo(url"),
+        ("resolution has map-side partial aggregation", "partial_max"),
+        ("no window in the resolution", "Window", False),
     ],
     "mor_clean_read": [
         # the CoW fast path after folding: a read of a delta-free
@@ -203,6 +210,12 @@ def _build_mor_dirty_read(spark, sf_dir):
     return _mor_table(spark).read()
 
 
+def _build_lookup_scan_fallback(spark, sf_dir):
+    t = _mor_table(spark)
+    t.LOOKUP_DRIVER_MAX_FILES = 0  # this table only: force the Spark scan
+    return t.lookup("u1")
+
+
 def _build_mor_clean_read(spark, sf_dir):
     t = _mor_table(spark)
     t.compact_deltas()
@@ -235,6 +248,7 @@ CUSTOM_BUILDERS = {
     "ivf_assign_pass": _build_ivf_assign_pass,
     "ivf_index_probe": _build_ivf_index_probe,
     "mor_dirty_read": _build_mor_dirty_read,
+    "lookup_scan_fallback": _build_lookup_scan_fallback,
     "mor_clean_read": _build_mor_clean_read,
     "mor_small_delta_read": _build_mor_small_delta_read,
 }

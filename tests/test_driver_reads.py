@@ -69,6 +69,15 @@ def test_empty_quarantine_and_lineage_launch_no_job(spark, tmpdir_path):
         assert got == [] and jobs == [], frame.__name__
 
 
+def test_empty_lineage_is_the_sessions_cached_empty_frame(spark, tmpdir_path):
+    """``lineage()`` builds its frame through ``local_frame``: with no
+    merge yet it is the session's one empty frame for its schema."""
+    t = LakeTable.create(spark, tmpdir_path, SCHEMA, n_buckets=4)
+    assert t.lineage() is t.lineage()
+    assert t.lineage().schema.simpleString().startswith(
+        "struct<batch_id:string,snapshot_id:bigint,source_part:int,")
+
+
 def test_lineage_without_expiry_launches_no_job(spark, tmpdir_path):
     """Without an expiry every lineage row comes from a retained
     manifest, so the frame is a driver-built LocalRelation and the merges

@@ -61,6 +61,16 @@ def test_same_timestamp_tiebreak_on_event_id(spark, tbl):
     assert [r.text for r in tbl.read().collect()] == ["second"]
 
 
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_redelivered_event_id_ties_break_like_a_read(spark, tbl, mode):
+    """One source event delivered twice with conflicting content (same
+    order value, same event_id): the tombstone wins, as it does between
+    two copies a read resolves."""
+    tbl.merge(ev(spark, [(1, "I", "u1", T(1), "a"), (1, "D", "u1", T(1), None),
+                         (2, "I", "u2", T(1), "b")]), "b1", mode=mode)
+    assert [r.url for r in tbl.read().collect()] == ["u2"]
+
+
 def test_batch_replay_is_idempotent(spark, tbl):
     batch = ev(spark, [(1, "I", "u1", T(1), "a"), (2, "I", "u2", T(2), "b")])
     lin1 = tbl.merge(batch, "b1")
@@ -113,6 +123,66 @@ def test_write_runs_at_most_one_task_per_core(spark, tmpdir_path, mode):
         f"u{i}": f"n{i}" for i in range(200)
     }
     assert tbl.validate(full=True)["ok"]
+
+
+def _counting_transform(spark):
+    """A post-dedup transform that adds the number of rows it sees to
+    an accumulator (a pandas UDF, like the engine's extraction UDF)."""
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.pandas_udf("string")
+    def count(s):
+        seen.add(len(s))
+        return s
+
+    return seen, lambda df: df.withColumn("text", count("text"))
+
+
+def test_transform_runs_on_new_winners_only(spark, tbl):
+    """The transform sees the keys whose winner is a batch event: a new
+    key and a winning update, not the stale event of an existing key."""
+    tbl.merge(ev(spark, [(1, "I", "u1", T(10), "a"), (2, "I", "u2", T(10), "b")]), "b1")
+    seen, transform = _counting_transform(spark)
+    lin = tbl.merge(
+        ev(spark, [(3, "I", "u3", T(20), "c"), (4, "U", "u1", T(20), "a2"),
+                   (5, "U", "u2", T(5), "stale")]),
+        "b2", post_dedup_transform=transform,
+    )
+    assert seen.value == 2
+    assert (lin["inserts"], lin["updates"], lin["stale_noops"]) == (1, 1, 1)
+    assert {r.url: r.text for r in tbl.read().collect()} == {
+        "u1": "a2", "u2": "b", "u3": "c"
+    }
+
+
+@pytest.mark.parametrize("case", ["cow-hit", "mor", "cow-no-hit"])
+def test_merge_jobs_and_stages(spark, tmpdir_path, case):
+    """At most 5 Spark jobs and 9 stages per merge with a pandas-UDF
+    transform on a 16-bucket table: the stats pre-pass, the one LWW
+    shuffle, the write's bucket shuffle and the write. The new winners
+    and the surviving current rows read the one LWW shuffle."""
+    tbl = LakeTable.create(spark, tmpdir_path, SCHEMA, n_buckets=16)
+    tbl.merge(ev(spark, [(i, "I", f"u{i}", T(i), f"t{i}") for i in range(200)]), "b1")
+    # "z…" keys sort after every "u…" key: no file's key range holds one
+    prefix = "z" if case == "cow-no-hit" else "u"
+    batch = ev(spark, [(1000 + i, "U", f"{prefix}{i}", T(1000), f"n{i}")
+                       for i in range(200)])
+    _, transform = _counting_transform(spark)
+    sc = spark.sparkContext
+    group = f"merge-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        lin = tbl.merge(batch, "b2", post_dedup_transform=transform,
+                        mode="mor" if case == "mor" else "cow")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+    stages = {s for j in jobs for s in j.stageIds}
+    assert 0 < len(jobs) <= 5
+    assert 0 < len(stages) <= 9
+    assert lin["files_rewritten"] == (16 if case == "cow-hit" else 0)
+    assert tbl.read().count() == (400 if case == "cow-no-hit" else 200)
 
 
 def test_file_granularity_rewrite_within_bucket(spark, tmpdir_path):
