@@ -23,10 +23,11 @@ adds the Spark data plane on top of it:
   delivered twice with conflicting content — break the tie like a
   read does, a tombstone outranking a live row. The merge (its
   batch-local dedup included: the events and the hit files' rows
-  resolve in one pass), the merge-on-read scan and the maintenance
-  folds all resolve through ``_resolve_lww_rows``, so a merge and a
-  read cannot disagree on a winner; a losing (late/stale) event is a
-  no-op. Deletes persist as tombstone rows (``_deleted``) so an
+  resolve in one pass) resolves through ``_resolve_lww_rows``; reads,
+  lookups and the maintenance folds resolve each dirty bucket with
+  ``resolve.resolve_bucket``, which ranks the same four fields, so a
+  merge and a read cannot disagree on a winner; a losing (late/stale)
+  event is a no-op. Deletes persist as tombstone rows (``_deleted``) so an
   *older* insert arriving after a newer delete stays dead —
   incremental state matches full replay exactly (the
   replay-equality bar in BASELINE.json). :meth:`gc_tombstones` is the
@@ -54,52 +55,36 @@ adds the Spark data plane on top of it:
 
 from __future__ import annotations
 
+import functools
 import os
 from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow as pa
-import pyarrow.parquet as pq
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ais_etl_spark.lake.log import (
     _COUNTER_COLS, _DELETED, _LINEAGE_SCHEMA, _OFFSET_COLS, _QUARANTINE, _SEQ,
     TableLog,
 )
-from ais_etl_spark.session import arrow_schema, local_frame
+from ais_etl_spark.lake.resolve import (
+    _FILESEQ, LAYOUT, resolve_bucket, resolve_partition,
+)
+from ais_etl_spark.session import arrow_schema, local_frame, spark_schema
 
-# read-time-only column (never persisted): the manifest seq of the file a
-# row came from — the LWW tiebreak between a delta file and a later copy
-# of the same logical row (merge-on-read resolution)
-_FILESEQ = "_fileseq"
 # the _fileseq a merge gives its incoming rows: above every committed
 # file's seq (a snapshot id). One constant, not the new snapshot's id,
 # so the merge's generated code is the same for every batch — a
 # per-batch literal is inlined into it and recompiled on every merge
 _INCOMING_SEQ = (1 << 63) - 1
-# read-time-only join key of a scanned row's file to its manifest seq
-_FILEKEY = "_filekey"
+# the driver-held frame a dirty read resolves: one row per dirty bucket
+_BUCKET_FILES = "files array<struct<path:string,schema_version:int,seq:bigint>>"
 
 
 def _live(df: DataFrame) -> DataFrame:
     """The rows a reader sees: tombstones dropped, internal columns
     removed."""
     return df.filter(~F.col(_DELETED)).drop(_SEQ, _DELETED)
-
-
-def _file_keys(paths: list[str]) -> tuple[int, list[str]]:
-    """``(k, keys)``: the fewest trailing path segments ``k`` that tell
-    the table-relative ``paths`` apart, and each path's last ``k``
-    segments. Spark reports a scanned row's file as a URI with the
-    table root percent-encoded (a space reads ``%20``), so the join
-    key leaves the root out; the engine names the segments it keeps
-    (``_bucket=<n>/part-<task>-<write uuid>...``) with characters a
-    URI never encodes. Any other name misses the join and raises."""
-    split = [p.split("/") for p in paths]
-    for k in range(1, min(len(s) for s in split) + 1):
-        keys = ["/".join(s[-k:]) for s in split]
-        if len(set(keys)) == len(keys):
-            return k, keys
-    raise ValueError(f"data file paths are not distinct: {paths}")
 
 
 class LakeTable(TableLog):
@@ -191,30 +176,22 @@ class LakeTable(TableLog):
         out = self._resolved_entries_df(c, files)
         return out if include_internal else _live(out)
 
-    def _entries_df(
-        self, c: dict, files: list[dict], with_fileseq: bool = False
-    ) -> DataFrame:
+    def _row_ddl(self, c: dict) -> str:
+        """DDL of snapshot ``c``'s rows with the internal columns."""
+        return self.spark_schema_ddl(c) + f", {_SEQ} bigint, {_DELETED} boolean"
+
+    def _entries_df(self, c: dict, files: list[dict]) -> DataFrame:
         """Scan a specific set of manifest entries (schema-version
-        mapped, internal columns included) — the file-granularity
-        read primitive shared by read() and merge().
+        mapped, internal columns included, NOT resolved) — the
+        file-granularity read primitive of clean buckets and of
+        ``validate``.
 
         Each schema version is ONE parquet scan over all of its files:
         a scan node per commit would pay its own plan, file listing
         and splits per seq, and the read plan should follow the
         physical layout (files per schema version), not the commit
-        history.
-
-        ``with_fileseq`` adds the manifest ``seq`` of each file as a
-        ``_fileseq`` column, for merge-on-read resolution (base files
-        have no seq and get 0). A version whose files share one seq
-        gets it as a literal; otherwise the scan's
-        ``_metadata.file_path`` is left-joined against a broadcast
-        driver-held frame of file key → seq (see :func:`_file_keys`),
-        and a row whose file finds no seq raises rather than rank as
-        seq 0."""
+        history."""
         cur_cols = self.schema_cols(c)
-        internal = [(_SEQ, "bigint"), (_DELETED, "boolean")]
-        names = [col["name"] for col in cur_cols] + [n for n, _ in internal]
         parts: list[DataFrame] = []
         by_ver: dict[int, list[dict]] = {}
         for f in files:
@@ -245,40 +222,10 @@ class LakeTable(TableLog):
                     sel.append(expr.alias(col["name"]))
                 else:
                     sel.append(F.lit(None).cast(col["type"]).alias(col["name"]))
-            sel += [F.col(n).cast(t).alias(n) for n, t in internal]
-            if not with_fileseq:
-                parts.append(df.select(*sel))
-                continue
-            seqs = [int(f.get("seq", 0)) for f in vfiles]
-            if len(set(seqs)) == 1:
-                fileseq = F.lit(seqs[0]).cast("bigint")
-                parts.append(df.select(*sel, fileseq.alias(_FILESEQ)))
-            else:
-                k, keys = _file_keys([f["path"] for f in vfiles])
-                by_key = local_frame(
-                    self.spark, list(zip(keys, seqs)),
-                    f"{_FILEKEY} string, {_FILESEQ} bigint",
-                )
-                path = df.metadataColumn("_metadata").getField("file_path")
-                fileseq = F.col(_FILESEQ)
-                parts.append(
-                    df.select(*sel, F.substring_index(path, "/", -k).alias(_FILEKEY))
-                    .join(F.broadcast(by_key), _FILEKEY, "left")
-                    .select(
-                        *names,
-                        F.when(fileseq.isNull(), F.raise_error(F.concat(
-                            F.lit("no manifest seq for data file "), F.col(_FILEKEY),
-                        ))).otherwise(fileseq).alias(_FILESEQ),
-                    )
-                )
-
+            parts.append(df.select(*sel, F.col(_SEQ).cast("bigint").alias(_SEQ),
+                                   F.col(_DELETED).cast("boolean").alias(_DELETED)))
         if not parts:
-            ddl = self.spark_schema_ddl() + ", " + ", ".join(
-                f"{n} {t}" for n, t in internal
-            )
-            if with_fileseq:
-                ddl += f", {_FILESEQ} bigint"
-            return local_frame(self.spark, [], ddl)
+            return local_frame(self.spark, [], self._row_ddl(c))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -289,13 +236,12 @@ class LakeTable(TableLog):
     # ------------------------------------------------------------------
 
     def _resolve_lww_rows(self, c: dict, df: DataFrame, **aggs) -> DataFrame:
-        """The one per-key LWW rule, shared by reads, both merge modes
-        and the maintenance folds: winner = max struct over (order_col,
-        _seq, _fileseq, _deleted), so the manifest seq of the file a
-        row came from breaks exact (order, seq) ties toward the
-        later-committed copy, and between two copies equal on all
-        three (two events of one batch) a tombstone outranks a live
-        row. ``df`` must carry the current schema columns +
+        """The merge's per-key LWW pass over a batch's events and the
+        current rows of the files it rewrites: winner = max struct over
+        (order_col, _seq, _fileseq, _deleted), the rule reads apply per
+        bucket (:func:`resolve_bucket`); between two copies equal on the
+        first three (two events of one batch) a tombstone wins. ``df``
+        must carry the current schema columns +
         ``_seq``/``_deleted``/``_fileseq``; the output carries them
         too, ``_fileseq`` being the winner's. ``aggs`` (name → per-key
         aggregate) are added as output columns — the merge counts from
@@ -324,57 +270,34 @@ class LakeTable(TableLog):
             *aggs.keys(),
         )
 
-    # below this delta-rows/base-rows ratio the dirty-bucket read uses
-    # the key-join path (anti/semi on the delta key set, AQE-broadcast
-    # when small) instead of a full-bucket groupBy: at 100 TB a 10 MB
-    # delta on a TB-scale bucket must not force an all-rows shuffle
-    MOR_JOIN_RESOLVE_RATIO = 0.05
-
-    def _resolved_entries_df(self, c: dict, files: list[dict]) -> DataFrame:
-        """``_entries_df`` + merge-on-read resolution: buckets with no
-        delta file stream through untouched (zero extra shuffle — the
-        CoW fast path and every pre-MoR table plan are unchanged);
-        buckets holding deltas are LWW-resolved per key.
-
-        Resolution strategy is chosen DRIVER-side from manifest row
-        counts: when the delta rows are a small fraction of the dirty
-        buckets' base rows (< ``MOR_JOIN_RESOLVE_RATIO``), base rows
-        whose key has no delta version bypass resolution via a
-        LEFT ANTI join on the distinct delta keys (AQE broadcasts the
-        small key set → zero base shuffle), and only the touched keys
-        (semi-join ∪ deltas) pay the per-key struct-max. Above the
-        ratio — update-heavy backlogs — the single full groupBy is
-        cheaper than shuffling base rows into a join."""
+    def _resolved_entries_df(self, c: dict, files: list[dict], key_value=None
+                             ) -> DataFrame:
+        """``files`` with one winner per key, tombstones and
+        ``_seq``/``_deleted`` included. A bucket with no delta is a plain
+        parquet scan (the CoW plan); the dirty buckets are ONE narrow
+        stage, a ``mapInArrow`` of :func:`resolve_partition` over a
+        driver-held frame of one row per dirty bucket (at most
+        ``defaultParallelism`` tasks, no exchange). ``key_value`` reaches
+        the resolver's file reads as a filter (the lookup fallback)."""
         dirty = self._delta_buckets(files)
+        clean = [f for f in files if f["bucket"] not in dirty]
         if not dirty:
             return self._entries_df(c, files)
-        clean = [f for f in files if f["bucket"] not in dirty]
-        dirty_files = [f for f in files if f["bucket"] in dirty]
-        delta_files = [f for f in dirty_files if f.get("kind") == "delta"]
-        base_files = [f for f in dirty_files if f.get("kind") != "delta"]
-        d_rows = sum(f.get("n_rows") or 0 for f in delta_files)
-        b_rows = sum(f.get("n_rows") or 0 for f in base_files)
-        stats_ok = all(f.get("n_rows") is not None for f in dirty_files)
-        if (
-            stats_ok and base_files
-            and d_rows <= b_rows * self.MOR_JOIN_RESOLVE_RATIO
-        ):
-            key = c["key"]
-            delta_df = self._entries_df(c, delta_files, with_fileseq=True)
-            base_df = self._entries_df(c, base_files, with_fileseq=True)
-            dkeys = delta_df.select(key).distinct()
-            untouched = base_df.join(dkeys, key, "left_anti")
-            touched = base_df.join(dkeys, key, "left_semi").unionByName(delta_df)
-            resolved = self._resolve_lww_rows(c, touched)
-            out = untouched.unionByName(resolved).drop(_FILESEQ)
-        else:
-            # the shuffle is bounded by the DIRTY rows, not the table
-            out = self._resolve_lww_rows(
-                c, self._entries_df(c, dirty_files, with_fileseq=True)
-            ).drop(_FILESEQ)
-        if not clean:
-            return out
-        return self._entries_df(c, clean).unionByName(out)
+        by_bucket: dict[int, list[dict]] = {}
+        for f in files:
+            if f["bucket"] in dirty:
+                by_bucket.setdefault(f["bucket"], []).append(
+                    {k: f.get(k) for k in ("path", "schema_version", "seq")})
+        ddl = self._row_ddl(c)
+        out = local_frame(
+            self.spark, [(by_bucket[b],) for b in sorted(by_bucket)], _BUCKET_FILES
+        ).mapInArrow(
+            functools.update_wrapper(functools.partial(
+                resolve_partition, self.path, {k: c[k] for k in LAYOUT},
+                arrow_schema(self.spark, ddl), key_value), resolve_partition),
+            spark_schema(self.spark, ddl),
+        )
+        return self._entries_df(c, clean).unionByName(out) if clean else out
 
     def history(self) -> DataFrame:
         """Snapshot-history metadata table (Iceberg's ``snapshots``/
@@ -444,18 +367,15 @@ class LakeTable(TableLog):
                 or f["min_key"] <= key_value <= f["max_key"]
             )
         ]
-        # a delta file among the hits means the key may exist in
-        # several versions (merge-on-read) — the winner must be
-        # resolved, and only THEN may a tombstone suppress the row
-        # (filtering tombstones per file would resurrect a stale base
-        # row a newer delta tombstone killed)
-        resolve = any(f.get("kind") == "delta" for f in hits)
+        # the winner is resolved before a tombstone suppresses it: a
+        # per-file tombstone filter would resurrect a stale base row
         if len(hits) <= self.LOOKUP_DRIVER_MAX_FILES:
-            return self._lookup_driver_side(c, hits, key_value, resolve)
-        # the key predicate pushes through the per-key resolution down
-        # to the parquet scan's row-group stats
+            return self._lookup_driver_side(c, hits, key_value)
+        # the key reaches the clean files' parquet scan as a pushed
+        # predicate and the dirty buckets' resolver as a read filter
         return _live(
-            self._resolved_entries_df(c, hits).filter(F.col(c["key"]) == key_value)
+            self._resolved_entries_df(c, hits, key_value)
+            .filter(F.col(c["key"]) == key_value)
         )
 
     # point reads touch 1-2 small bucket files after pruning; a Spark
@@ -464,62 +384,19 @@ class LakeTable(TableLog):
     # milliseconds. Above this file count, fall back to the scan.
     LOOKUP_DRIVER_MAX_FILES = 16
 
-    def _lookup_driver_side(
-        self, c: dict, hits: list[dict], key_value, resolve: bool = False
-    ):
-        """Serve the point read without a Spark job: pyarrow-read the
+    def _lookup_driver_side(self, c: dict, hits: list[dict], key_value):
+        """Serve the point read without a Spark job: resolve the
         (manifest-pruned, ≤LOOKUP_DRIVER_MAX_FILES) covering files on
-        the driver with the key predicate pushed to row-group stats,
-        apply the same schema-version column-id mapping and type
-        widening as _entries_df, and return the rows as a
-        :func:`local_frame` — its ``collect()`` runs on the driver, no
-        job. Same output as the scan path (hash-checked by the
-        cdc_point_lookup gate); only the physical strategy differs.
-
-        ``resolve`` (merge-on-read): tombstones are read rather than
-        filtered, and the single winner is picked driver-side by max
-        (order_col, _seq, file seq) — the same rule as
-        ``_resolve_lww_rows`` — then dropped if it is a tombstone."""
-
-        cur_cols = self.schema_cols(c)
-        key_id = next(x["id"] for x in cur_cols if x["name"] == c["key"])
-        out_ddl = self.spark_schema_ddl(c)
-        schema = arrow_schema(
-            self.spark,
-            out_ddl + f", {_SEQ} bigint, {_DELETED} boolean, {_FILESEQ} bigint",
-        )
-        tables = []
-        for f in hits:
-            old_cols = {x["id"]: x for x in c["schemas"][f["schema_version"]]}
-            if key_id not in old_cols:
-                continue  # file predates the key column: cannot match
-            flt = [(old_cols[key_id]["name"], "==", key_value)]
-            if not resolve:
-                flt.append((_DELETED, "==", False))
-            t = pq.read_table(os.path.join(self.path, f["path"]), filters=flt)
-            if t.num_rows == 0:
-                continue
-            cols = [
-                t.column(old_cols[col["id"]]["name"]) if col["id"] in old_cols
-                else pa.nulls(t.num_rows)
-                for col in cur_cols
-            ] + [
-                t.column(_SEQ),
-                t.column(_DELETED),
-                pa.array([int(f.get("seq", 0))] * t.num_rows, pa.int64()),
-            ]
-            # the cast widens old narrower types and types the nulls
-            tables.append(pa.Table.from_arrays(cols, schema.names).cast(schema))
-        out = pa.concat_tables(tables) if tables else None
-        if out is not None and resolve:
-            out = out.sort_by(
-                [(n, "descending") for n in (c["order_col"], _SEQ, _FILESEQ)]
-            ).slice(0, 1)
-            if out[_DELETED][0].as_py():
-                out = None  # the winner is a tombstone
+        the driver with :func:`resolve_bucket`, the key as a read
+        filter, drop a tombstoned winner and return a :func:`local_frame`
+        (no job on ``collect()``). Same resolver as the scan path."""
+        schema = arrow_schema(self.spark, self._row_ddl(c))
+        out = pa.Table.from_batches(list(resolve_bucket(
+            self.path, c, hits, schema, key_value)), schema)
+        out = out.filter(pc.invert(out.column(_DELETED)))
         # a miss (no hit file, nothing read, a tombstoned winner) is
         # the session's cached empty frame: no table is built
-        return local_frame(self.spark, [] if out is None else out, out_ddl)
+        return local_frame(self.spark, out, self.spark_schema_ddl(c))
 
     # ------------------------------------------------------------------
     # write-audit-publish (Iceberg's WAP pattern)
@@ -628,7 +505,7 @@ class LakeTable(TableLog):
         or rewriting any base file — write cost scales with the batch,
         not with base-file sizes (an update-heavy feed against large
         base files stops paying base-file rewrite amplification) — and
-        readers LWW-resolve base+delta per key (``_resolve_lww_rows``) until
+        readers LWW-resolve base+delta per key, bucket by bucket, until
         ``compact()`` / ``compact_deltas()`` folds the deltas back into
         base files. The two modes commute freely batch-to-batch and
         produce identical logical table state (parity-tested). MoR
@@ -640,9 +517,10 @@ class LakeTable(TableLog):
         Physical plan: a stats pre-pass over the raw events (buckets,
         offsets, hit files) → ONE per-key LWW (``_resolve_lww_rows``,
         the read-time rule; its map-side partial max absorbs hot-key
-        skew) over the batch's events and, for cow, the rows of the hit
-        files — every file of a hit bucket that holds a delta — with
-        the events ranked above every committed file, so they win exact
+        skew) over the batch's events and, for cow, the current rows of
+        the hit files — every file of a hit bucket that holds a delta,
+        resolved per key as a read does — with the events ranked above
+        every committed file, so they win exact
         (order, seq) ties → transform the new winners → union them with
         the surviving current winners (Spark reuses the resolve's
         exchange for both branches) → bucket, then ONE write job
@@ -742,7 +620,10 @@ class LakeTable(TableLog):
         #    files, and a batch that hits none resolves its own rows
         rewrite, carry = self._split_files(c, lambda f: f["path"] in hit_paths)
         if rewrite:
-            rows = self._entries_df(c, rewrite, with_fileseq=True).unionByName(rows)
+            # the current rows resolved per key rank as file seq 0:
+            # below every event, and max is associative
+            rows = self._resolved_entries_df(c, rewrite).withColumn(
+                _FILESEQ, F.lit(0).cast("bigint")).unionByName(rows)
         # before the resolve per copy, after it per key winner
         is_new = F.col(_FILESEQ) == _INCOMING_SEQ
         rows = self._resolve_lww_rows(
@@ -1162,8 +1043,10 @@ class LakeTable(TableLog):
         """:meth:`TableLog.validate`, and with ``full=True`` ONE data scan
         over all files: per-file row counts, key ranges, and bucket
         assignment must match the manifest (compared driver-side via
-        ``input_file_name``), and no live key may appear in two files
-        (the CoW invariant)."""
+        ``input_file_name``), and no key, live or tombstone, may appear
+        twice in a snapshot's base files — the invariant a copy-on-write
+        read (a plain union) and a merge-on-read resolver (which emits a
+        base row no delta shares as it reads it) both rely on."""
         res = super().validate(full)
         c = self.commit()
         if not (full and c["files"]):
@@ -1173,13 +1056,18 @@ class LakeTable(TableLog):
         expected = {f["path"]: f for f in c["files"]}
         # ONE scan: project to the audit columns (tiny vs the
         # corpus) and cache that projection — both the per-file
-        # stats agg and the duplicate-live-key agg read it, so the
+        # stats agg and the duplicate-base-key agg read it, so the
         # data files are opened once even though the two checks
         # group by different keys
-        audit = self._entries_df(c, c["files"]).select(
-            F.input_file_name().alias("_file"), F.col(key),
-            self._bucket_expr(F.col(key)).alias("_b"), F.col(_DELETED),
-        ).persist()
+        by_kind: dict[bool, list[dict]] = {}
+        for f in c["files"]:
+            by_kind.setdefault(f.get("kind") == "delta", []).append(f)
+        audit = functools.reduce(DataFrame.unionByName, [
+            self._entries_df(c, fs).select(
+                F.input_file_name().alias("_file"), F.col(key),
+                self._bucket_expr(F.col(key)).alias("_b"), F.lit(delta).alias("_delta"),
+            ) for delta, fs in by_kind.items()
+        ]).persist()
         rows = (
             audit.groupBy("_file").agg(
                 F.count("*").alias("n"),
@@ -1216,17 +1104,13 @@ class LakeTable(TableLog):
                 issues.append(f"keys outside manifest range on {p}")
             if r["bmin"] != f["bucket"] or r["bmax"] != f["bucket"]:
                 issues.append(f"bucket assignment violated on {p}")
-        # the one-live-key-per-snapshot invariant holds only for
-        # CoW buckets; merge-on-read buckets legitimately hold
-        # several versions per key until compaction folds them
-        dirty = self._delta_buckets(c["files"])
-        dup_src = audit.filter(~F.col(_DELETED))
-        if dirty:
-            dup_src = dup_src.filter(~F.col("_b").isin([int(b) for b in dirty]))
-        dup_live = dup_src.groupBy(key).count().filter(F.col("count") > 1).count()
+        # delta files legitimately hold further versions of a key
+        # until compaction folds them
+        dup = (audit.filter(~F.col("_delta")).groupBy(key).count()
+               .filter(F.col("count") > 1).count())
         audit.unpersist()
-        if dup_live:
-            issues.append(f"{dup_live} live keys present in multiple files")
+        if dup:
+            issues.append(f"{dup} keys present in more than one base row")
         res["checked"]["scanned"] = True
         res["ok"] = not issues
         return res

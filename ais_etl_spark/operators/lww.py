@@ -4,7 +4,8 @@ table against.
 
 ``LakeTable.merge`` does not call it: a merge resolves the batch's
 events together with the rows of the files it rewrites in one pass of
-``LakeTable._resolve_lww_rows``, the rule reads and maintenance use.
+``LakeTable._resolve_lww_rows``, the rule reads and maintenance apply
+bucket by bucket (``lake.resolve.resolve_bucket``).
 That rule ranks the same ``(warc_ts, event_id)`` first, so both agree
 on every winner except two events of one batch with equal
 ``(warc_ts, event_id)`` — one source event delivered twice with

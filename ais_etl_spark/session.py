@@ -150,6 +150,11 @@ def arrow_schema(spark: SparkSession, ddl: str):
     return _schema(spark, ddl).arrow
 
 
+def spark_schema(spark: SparkSession, ddl: str):
+    """The ``StructType`` of a DDL string; parsed once per session."""
+    return _schema(spark, ddl).struct
+
+
 def local_frame(spark: SparkSession, data, ddl: str) -> DataFrame:
     """DataFrame over driver-held data — a sequence of row tuples in
     DDL column order, or a ``pyarrow.Table`` holding (at least) the DDL

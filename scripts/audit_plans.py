@@ -14,13 +14,14 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 import sys
 
 sys.path.insert(0, ".")
 
 CHECKS = {
-    # query -> list of (description, substring expected in the plan)
-    # or (description, substring, False) to assert the substring is ABSENT
+    # query -> list of (description, substring or compiled regex expected
+    # in the plan) or (description, needle, False) to assert it is ABSENT
     "rel_pricing_summary": [
         ("filter pushed to parquet scan", "PushedFilters: [IsNotNull(l_shipdate)"),
         ("column-pruned read schema", "ReadSchema"),
@@ -121,23 +122,29 @@ CHECKS = {
         ("no cartesian", "CartesianProduct", False),
     ],
     "mor_dirty_read": [
-        # merge-on-read resolution: per-key LWW over the DIRTY buckets
-        # is an aggregate WITH map-side partial aggregation (each task
-        # collapses its local versions per key before the shuffle — the
-        # same skew-absorbing shape as the merge's one LWW pass; the
-        # struct-max compiles to SortAggregate, whose partial phase
-        # still combines map-side) — never a window over the stream
-        ("resolution has map-side partial aggregation", "partial_max"),
+        # merge-on-read resolution follows the layout: every version of
+        # a key lives in one bucket, so each dirty bucket resolves in
+        # one Arrow pass over its files (resolve.resolve_bucket) — one
+        # narrow stage over a driver-held frame of dirty buckets, no
+        # shuffle of rows by key, no per-key aggregate, no window
+        ("resolver is one Arrow pass", "resolve_partition(files"),
+        ("resolver runs over the driver-held bucket frame",
+         re.compile(r"MapInArrow \(\d+\)\n\s+\+- LocalTableScan")),
+        ("no exchange below the resolver", "Exchange", False),
+        ("no per-key partial aggregate", "partial_max", False),
+        ("no sort aggregate", "SortAggregate", False),
         ("no window in the resolution", "Window", False),
-        # the table's two delta seqs share one schema version: one scan
-        # over both files, _fileseq joined from the manifest, no union
-        ("one parquet scan per schema version", "Union", False),
     ],
     "lookup_scan_fallback": [
         # a point lookup above LOOKUP_DRIVER_MAX_FILES goes through the
-        # read's resolution; the key predicate still reaches the scan
-        ("key predicate pushed to the parquet scan", "EqualTo(url"),
-        ("resolution has map-side partial aggregation", "partial_max"),
+        # read's resolver; the key reaches the resolver's file reads as
+        # a pyarrow filter (tests/test_resolve.py and
+        # tests/test_driver_reads.py check it; it is not a plan node)
+        ("resolver is one Arrow pass", "resolve_partition(files"),
+        ("resolver runs over the driver-held bucket frame",
+         re.compile(r"MapInArrow \(\d+\)\n\s+\+- LocalTableScan")),
+        ("no exchange below the resolver", "Exchange", False),
+        ("no per-key partial aggregate", "partial_max", False),
         ("no window in the resolution", "Window", False),
     ],
     "mor_clean_read": [
@@ -148,12 +155,18 @@ CHECKS = {
         ("no resolution aggregate", "HashAggregate", False),
     ],
     "mor_small_delta_read": [
-        # tiny delta on a big base (the 100 TB steady state): untouched
-        # base rows BYPASS resolution via a left-anti join on the delta
-        # key set (AQE broadcasts it at runtime) — the struct-max agg
-        # only ever sees touched keys, never the bucket's base rows
-        ("untouched base rows bypass via anti-join", "LeftAnti"),
-        ("touched keys selected via semi-join", "LeftSemi"),
+        # tiny delta on a big base (the 100 TB steady state): the clean
+        # bucket stays a plain parquet scan, the dirty one streams its
+        # base rows past the delta winners in the resolver — no join,
+        # no shuffle and no per-key aggregate over the base rows
+        ("clean bucket is a plain parquet scan", "Scan parquet"),
+        ("dirty bucket is one Arrow pass", "resolve_partition(files"),
+        ("resolver runs over the driver-held bucket frame",
+         re.compile(r"MapInArrow \(\d+\)\n\s+\+- LocalTableScan")),
+        ("no exchange", "Exchange", False),
+        ("no join", "Join", False),
+        ("no per-key partial aggregate", "partial_max", False),
+        ("no sort aggregate", "SortAggregate", False),
         ("no window anywhere", "Window", False),
     ],
 }
@@ -272,7 +285,11 @@ def main() -> None:
         for check in checks:
             desc, needle = check[0], check[1]
             want_present = check[2] if len(check) > 2 else True
-            ok = (needle in plan) == want_present
+            if isinstance(needle, re.Pattern):
+                found, needle = bool(needle.search(plan)), needle.pattern
+            else:
+                found = needle in plan
+            ok = found == want_present
             mark = "✅" if ok else "❌"
             neg = "" if want_present else " ABSENT"
             lines.append(f"- {mark} {desc} (`{needle}`{neg})")

@@ -173,34 +173,70 @@ def test_session_turns_off_call_site_capture(spark, monkeypatch):
     assert not utils.is_debugging_enabled()
 
 
-def parquet_scans(df) -> int:
+def plan_of(df) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain()
-    return buf.getvalue().count("FileScan parquet")
+    return buf.getvalue()
 
 
-def test_mor_read_plans_one_parquet_scan_per_schema_version(spark, tmpdir_path):
-    """Three merge-on-read batches over 16 buckets leave more than 32
-    delta files of one schema version: the read plans ONE parquet scan,
-    and building it launches no job (Spark's default lists more than 32
-    explicit paths in a job of its own, which the control below shows).
-    After an ALTER and one more batch the read plans one scan per
-    schema version."""
-    threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    t = LakeTable.create(spark, tmpdir_path, SCHEMA, n_buckets=16)
-    for b in range(3):
-        rows = [(b * 1000 + i, "U", f"u{i}", T(b), f"v{b}") for i in range(128)]
+def _mor_batches(spark, path, n_batches=3):
+    """16 buckets, ``n_batches`` merge-on-read batches of 128 keys, each
+    over a CoW base of the same keys: every bucket is dirty."""
+    t = LakeTable.create(spark, path, SCHEMA, n_buckets=16)
+    t.merge(spark.createDataFrame(
+        [(i, "I", f"u{i}", T(0), "v") for i in range(128)], EV_DDL), "base")
+    for b in range(n_batches):
+        rows = [(1000 * (b + 1) + i, "U", f"u{i}", T(b + 1), f"v{b}")
+                for i in range(128)]
         t.merge(spark.createDataFrame(rows, EV_DDL), f"b{b}", mode="mor")
+    return t
+
+
+def test_mor_read_resolves_dirty_buckets_in_one_arrow_pass(spark, tmpdir_path):
+    """Three merge-on-read batches over 16 buckets leave more than 32
+    delta files: the read plans ONE resolver, a ``MapInArrow`` over the
+    driver-held frame of dirty buckets, with no parquet scan (a dirty
+    bucket's files are read by the resolver) and no exchange, and
+    building it launches no job. After an ALTER and one more batch the
+    read still plans one resolver, which maps both schema versions."""
+    t = _mor_batches(spark, tmpdir_path)
     files = t.commit()["files"]
-    assert len(files) > 32 and {f["kind"] for f in files} == {"delta"}
-    assert len({f["seq"] for f in files}) == 3
+    assert len(files) > 32 and len({f.get("seq") for f in files}) == 4
     df, jobs = jobs_of(spark, t.read)
     assert jobs == []
-    assert parquet_scans(df) == 1
+    plan = plan_of(df)
+    assert plan.count("MapInArrow resolve_partition") == 1
+    assert "LocalTableScan" in plan
+    assert "FileScan parquet" not in plan and "Exchange" not in plan
     assert {(r.url, r.text) for r in df.collect()} == {
         (f"u{i}", "v2") for i in range(128)
     }
+
+    t.alter_add_column("lang", "string")
+    rows = [(9000 + i, "U", f"u{i}", T(9), "v9", "en") for i in range(0, 128, 2)]
+    t.merge(spark.createDataFrame(rows, EV_DDL + ", lang string"), "b3", mode="mor")
+    df = t.read()
+    assert plan_of(df).count("MapInArrow resolve_partition") == 1
+    got = {r.url: (r.text, r.lang) for r in df.collect()}
+    assert got == {f"u{i}": ("v9", "en") if i % 2 == 0 else ("v2", None)
+                   for i in range(128)}
+
+
+def test_clean_read_of_many_files_plans_one_scan_without_a_job(spark, tmpdir_path):
+    """A delta-free read of more than 32 files of one schema version
+    plans one parquet scan, and building it launches no job (Spark's
+    default lists more than 32 explicit paths in a job of its own,
+    which the control below shows)."""
+    threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    t = LakeTable.create(spark, tmpdir_path, SCHEMA, n_buckets=16, max_file_rows=2)
+    t.merge(spark.createDataFrame(
+        [(i, "I", f"u{i}", T(0), "v") for i in range(128)], EV_DDL), "b0")
+    assert len(t.commit()["files"]) > 32
+    df, jobs = jobs_of(spark, t.read)
+    assert jobs == []
+    assert plan_of(df).count("FileScan parquet") == 1
+    assert df.count() == 128
     old = spark.conf.get(threshold)
     spark.conf.set(threshold, "32")
     try:
@@ -209,14 +245,35 @@ def test_mor_read_plans_one_parquet_scan_per_schema_version(spark, tmpdir_path):
         spark.conf.set(threshold, old)
     assert jobs, "a listing job should run at Spark's default threshold"
 
-    t.alter_add_column("lang", "string")
-    rows = [(9000 + i, "U", f"u{i}", T(9), "v9", "en") for i in range(0, 128, 2)]
-    t.merge(spark.createDataFrame(rows, EV_DDL + ", lang string"), "b3", mode="mor")
-    df = t.read()
-    assert parquet_scans(df) == 2
-    got = {r.url: (r.text, r.lang) for r in df.collect()}
-    assert got == {f"u{i}": ("v9", "en") if i % 2 == 0 else ("v2", None)
-                   for i in range(128)}
+
+def test_dirty_read_aggregate_launches_two_jobs(spark, tmpdir_path):
+    """A per-lang aggregate over a dirty merge-on-read read runs the
+    resolver and the partial aggregate in one map stage: two jobs (its
+    shuffle-map stage and the result), the same as the aggregate over
+    the delta-free table the fold leaves."""
+    t = _mor_batches(spark, tmpdir_path)
+
+    def agg():
+        return sorted(tuple(r) for r in t.read().groupBy("text").count().collect())
+
+    agg()
+    got, jobs = jobs_of(spark, agg)
+    assert got == [("v2", 128)] and len(jobs) == 2
+    t.compact_deltas()
+    agg()
+    got, jobs = jobs_of(spark, agg)
+    assert got == [("v2", 128)] and len(jobs) == 2
+
+
+def test_lookup_fallback_passes_the_key_to_the_resolver(spark, tmpdir_path):
+    """The Spark lookup fallback hands the key to the resolver's file
+    reads: its frame holds that key's rows before any Spark filter."""
+    t = _mor_batches(spark, tmpdir_path, n_batches=1)
+    c = t.commit()
+    got = t._resolved_entries_df(c, c["files"], "u5").collect()
+    assert [(r.url, r.text) for r in got] == [("u5", "v0")]
+    t.LOOKUP_DRIVER_MAX_FILES = 0  # this table only: the Spark fallback
+    assert [(r.url, r.text) for r in t.lookup("u5").collect()] == [("u5", "v0")]
 
 
 def test_ensure_parallelism_spreads_one_file_scan(spark, tmp_path):

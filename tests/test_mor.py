@@ -17,6 +17,7 @@ scale path for update-heavy feeds against large base files.
 import datetime as dt
 import os
 
+import pyarrow as pa
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
@@ -124,6 +125,34 @@ def test_validate_full_on_dirty_table(spark, tmpdir_path):
     assert v["ok"], v["issues"]
 
 
+def test_validate_finds_a_base_key_stored_twice(spark, tmpdir_path):
+    """Reads assume a snapshot's base files hold each key, live or
+    tombstone, at most once: a CoW read is a plain union, and the
+    merge-on-read resolver emits a base row no delta shares as it reads
+    it. A hand-written second base copy of u2, a tombstone in a bucket
+    that also holds a delta, must fail ``validate(full=True)``."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    t = LakeTable.create(spark, tmpdir_path, SCHEMA, n_buckets=1)
+    t.merge(ev(spark, B1), "b0")
+    t.merge(ev(spark, [(4, "U", "u1", T(2), "a2")]), "b1", mode="mor")
+    assert t.validate(full=True)["ok"]
+    c = t.commit()
+    base = next(f for f in c["files"] if f.get("kind") != "delta")
+    rows = pq.read_table(os.path.join(tmpdir_path, base["path"]))
+    rows = rows.filter(pc.equal(rows["url"], "u2")).set_column(
+        rows.schema.get_field_index("_deleted"), "_deleted", pa.array([True]))
+    path = "data/hand/_bucket=0/part-dup.parquet"
+    os.makedirs(os.path.join(tmpdir_path, os.path.dirname(path)))
+    pq.write_table(rows, os.path.join(tmpdir_path, path))
+    t._next_commit(c, "hand", c["files"] + [
+        {**base, "path": path, "min_key": "u2", "max_key": "u2", "n_rows": 1,
+         "has_del": True}])
+    res = t.validate(full=True)
+    assert res["issues"] == ["1 keys present in more than one base row"]
+
+
 def test_mixed_modes_commute(spark, tmpdir_path):
     cow = LakeTable.create(spark, os.path.join(tmpdir_path, "a"), SCHEMA, n_buckets=4)
     _apply(cow, spark, (B1, B2, B3), "cow")
@@ -155,14 +184,11 @@ def test_cow_merge_keeps_the_read_time_winner_on_exact_ties(spark, tmpdir_path):
 
 def test_exact_ties_across_delta_files_of_one_scan(spark, tmpdir_path, monkeypatch):
     """Two delta files of one schema version hold u1 with exactly equal
-    (order, _seq), one event id redelivered with another payload. Both
-    are read by one parquet scan, and the _fileseq join must rank the
-    later-committed copy first in read(), in the Spark lookup fallback
-    and in compact_deltas, under a table root that Spark reports
-    percent-encoded. A file the join cannot key raises instead of
-    ranking as seq 0 (which would hand the tie to payload order)."""
-    import ais_etl_spark.lake.table as table_mod
-
+    (order, _seq), one event id redelivered with another payload. The
+    manifest seq must rank the later-committed copy first in read(), in
+    both lookup paths and in compact_deltas, under a table root Spark
+    would report percent-encoded. The rank comes from the manifest, not
+    from payload order: swapping the two files' seqs flips the winner."""
     root = os.path.join(tmpdir_path, "t dir %x")
     t = LakeTable.create(spark, root, SCHEMA, n_buckets=1)
     t.merge(ev(spark, [(5, "I", "u1", T(1), "zz-early"), (6, "I", "u2", T(1), "b")]),
@@ -175,12 +201,10 @@ def test_exact_ties_across_delta_files_of_one_scan(spark, tmpdir_path, monkeypat
     with monkeypatch.context() as m:
         m.setattr(LakeTable, "LOOKUP_DRIVER_MAX_FILES", 0)  # the scan path
         assert [r.text for r in t.lookup("u1").collect()] == ["aa-late"]
-    with monkeypatch.context() as m:
-        # a key naming the file by its unencoded path misses every row
-        m.setattr(table_mod, "_file_keys", lambda paths: (
-            1, ["file:" + os.path.join(root, p) for p in paths]))
-        with pytest.raises(Exception, match="no manifest seq for data file"):
-            t.read().collect()
+    c = t.commit()
+    swapped = [{**f, "seq": 3 - f["seq"]} for f in c["files"]]
+    got = t._resolved_entries_df({**c, "files": swapped}, swapped).collect()
+    assert {r.url: r.text for r in got} == {"u1": "zz-early", "u2": "b"}
     assert t.compact_deltas()["buckets"] == [0]
     assert t.table_stats()["delta_files"] == 0
     assert {r.url: r.text for r in t.read().collect()} == want
@@ -402,28 +426,23 @@ def test_property_cow_mor_parity(spark, tmpdir_path, events, n_batches, fold,
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_join_and_groupby_resolution_agree(spark, tmpdir_path):
-    """The stats-driven join path (tiny delta on a big base: anti/semi
-    on the delta key set, untouched rows bypass resolution) and the
-    full groupBy path must produce identical rows. The fixture's
-    delta/base ratio is above the production threshold, so the path is
-    forced by widening MOR_JOIN_RESOLVE_RATIO."""
-    t = LakeTable.create(spark, tmpdir_path, SCHEMA, n_buckets=2)
+def test_small_delta_on_large_base_agrees_with_cow(spark, tmpdir_path):
+    """A tiny delta on a big base: the resolver emits each base row whose
+    key no delta holds as it reads it and ranks only the keys a delta
+    shares, and the rows must equal a copy-on-write twin's, whose merge
+    resolves every key of the batch against the base."""
     base = [(i, "I", f"u{i}", T(i), f"v{i}") for i in range(40)]
-    t.merge(ev(spark, base), "b0")  # CoW base files
     delta = [(100, "U", "u3", T(100), "v3b"), (101, "D", "u7", T(100), None),
              (102, "I", "u99", T(100), "new"), (103, "U", "u5", T(0), "stale")]
-    t.merge(ev(spark, delta), "b1", mode="mor")
-
-    old = LakeTable.MOR_JOIN_RESOLVE_RATIO
-    try:
-        LakeTable.MOR_JOIN_RESOLVE_RATIO = 0.0  # force groupBy path
-        via_group = rows_of(t)
-        LakeTable.MOR_JOIN_RESOLVE_RATIO = 1.0  # force join path
-        via_join = rows_of(t)
-    finally:
-        LakeTable.MOR_JOIN_RESOLVE_RATIO = old
-    assert via_group == via_join
-    got = {r[0]: r[2] for r in via_join}
+    tabs = []
+    for sub, mode in (("cow", "cow"), ("mor", "mor")):
+        t = LakeTable.create(spark, os.path.join(tmpdir_path, sub), SCHEMA, n_buckets=2)
+        t.merge(ev(spark, base), "b0")  # CoW base files
+        t.merge(ev(spark, delta), "b1", mode=mode)
+        tabs.append(t)
+    cow, mor = tabs
+    assert mor.table_stats()["delta_files"] > 0
+    assert rows_of(mor, include_internal=True) == rows_of(cow, include_internal=True)
+    got = {r[0]: r[2] for r in rows_of(mor)}
     assert got["u3"] == "v3b" and "u7" not in got
     assert got["u99"] == "new" and got["u5"] == "v5"  # stale delta lost
